@@ -16,8 +16,24 @@ import scala.jdk.CollectionConverters._
   *   <root>/snapshots/v<snap>.manifest.jsonl
   * }}}
   * Each manifest line is one bucket's lineage:
-  * `{"bucket":k,"rows":n,"xxh":h,"path":"..."}` where `xxh` is the
-  * order-independent content fingerprint `bit_xor(xxhash64(row))`.
+  * `{"bucket":k,"rows":n,"xxh":h,"path":"...","extra":["..."]}` where
+  * `xxh` is the order-independent content fingerprint
+  * `bit_xor(xxhash64(row))`. A bucket's files are `path` plus the
+  * optional `extra` directories (absent in manifests written before
+  * [[append]] existed, which therefore read unchanged).
+  *
+  * == Fast append and compaction ==
+  * [[append]] is Iceberg's `AppendFiles` commit: it writes ONLY the
+  * incoming rows into the new run directory. A touched bucket keeps
+  * its files and gains the new directory in `extra`. Its lineage
+  * combines exactly — `rows` adds, `xxh` XORs (a bit_xor over a
+  * multiset union is the XOR of the parts) and stats bounds widen —
+  * so no stored file is moved or rewritten. Its replay guard (incoming
+  * rows already stored are dropped) reads only the touched buckets
+  * the manifest stats cannot rule out. Untouched buckets carry by
+  * reference. Every reader, [[verify]] and [[expireSnapshots]] honour
+  * all of an entry's paths; [[rewriteSnapshot]] folds a bucket's files
+  * back into one directory.
   *
   * == Resumability ==
   * `write` computes the incoming per-bucket lineage with ONE distributed
@@ -58,7 +74,13 @@ object SnapshotStore {
     */
   final case class BucketLineage(bucket: Int, rows: Long, xxh: Long,
       path: String, stats: Map[String, (String, String, String)] =
-        Map.empty, schemaV: Option[Int] = None)
+        Map.empty, schemaV: Option[Int] = None,
+      extra: Seq[String] = Seq.empty) {
+    /** Every directory holding this bucket's rows: `path`, then the
+      * directories later [[append]]s added.
+      */
+    def paths: Seq[String] = path +: extra
+  }
   final case class WriteResult(snapshot: Int, written: Seq[Int],
       carried: Seq[Int], remaining: Seq[Int])
 
@@ -85,20 +107,23 @@ object SnapshotStore {
     expr(s"bit_xor(xxhash64(struct(" +
       dataCols.map(c => s"`$c`").mkString(",") + ")))")
 
-  /** Per-bucket (rows, content-hash, column bounding boxes) of an
-    * already-bucketed frame — ONE distributed map-side-combined agg
-    * regardless of how many stats columns are tracked (min/max ride
-    * the same groupBy as the lineage), bit_xor is order-independent
-    * and overflow-free (ANSI-safe, unlike a sum of hashes).
+  /** Per-bucket (rows, content-hash, column bounding boxes, stats
+    * columns holding a null) of an already-bucketed frame — ONE
+    * distributed map-side-combined agg regardless of how many stats
+    * columns are tracked (min/max ride the same groupBy as the
+    * lineage), bit_xor is order-independent and overflow-free
+    * (ANSI-safe, unlike a sum of hashes).
     */
   private def lineageOf(bucketed: DataFrame,
       statsCols: Seq[String] = Seq.empty)
-      : Map[Int, (Long, Long, Map[String, (String, String, String)])] = {
+      : Map[Int, (Long, Long, Map[String, (String, String, String)],
+        Set[String])] = {
     val missing = statsCols.filterNot(bucketed.columns.contains)
     require(missing.isEmpty,
       s"SnapshotStore stats columns not in frame: $missing")
     val statAggs = statsCols.flatMap(c => Seq(
-      min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
+      min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"),
+      count(col(c)).as(s"__nn_$c")))
     val aggs = Seq(count(lit(1)).as("rows"),
       rowHashExpr(bucketed.columns.toSeq.filterNot(_ == B))
         .as("xxh")) ++ statAggs
@@ -125,7 +150,9 @@ object SnapshotStore {
             case _ => None // null/NaN bound -> untracked (no pruning)
           }
         }.toMap
-        r.getInt(0) -> ((r.getLong(1), r.getLong(2), stats))
+        val nulls = statsCols.filter(c =>
+          r.getAs[Long](s"__nn_$c") < r.getLong(1)).toSet
+        r.getInt(0) -> ((r.getLong(1), r.getLong(2), stats, nulls))
       }
       .toMap
   }
@@ -257,7 +284,9 @@ object SnapshotStore {
   private val Line =
     ("""\{"bucket":(-?\d+),"rows":(\d+),"xxh":(-?\d+)""" +
       """(?:,"sv":(\d+))?,"path":"([^"]*)"""" +
+      """(?:,"extra":\[((?:"[^"]*",?)*)\])?""" +
       """(?:,"stats":\{([^}]*)\})?\}""").r
+  private val Quoted = """"([^"]*)"""".r
   private val StatEntry =
     """"([A-Za-z0-9+/=]*)":\["([nst])","([A-Za-z0-9+/=]*)","([A-Za-z0-9+/=]*)"\]""".r
 
@@ -275,15 +304,17 @@ object SnapshotStore {
       else Paths.get(root, "snapshots",
         s"v$snapshot.manifest$Incomplete.jsonl")
     Files.readAllLines(p).asScala.toSeq.collect {
-      case Line(b, r, x, sv, path, statsBody) =>
+      case Line(b, r, x, sv, path, extraBody, statsBody) =>
         val stats =
           if (statsBody == null) Map.empty[String, (String, String, String)]
           else StatEntry.findAllMatchIn(statsBody).map { m =>
             unb64(m.group(1)) ->
               ((m.group(2), unb64(m.group(3)), unb64(m.group(4))))
           }.toMap
+        val extra = Option(extraBody).toSeq
+          .flatMap(Quoted.findAllMatchIn(_).map(_.group(1)))
         BucketLineage(b.toInt, r.toLong, x.toLong, path, stats,
-          Option(sv).map(_.toInt))
+          Option(sv).map(_.toInt), extra)
     }
   }
 
@@ -298,8 +329,12 @@ object SnapshotStore {
           s""""${b64(c)}":["$t","${b64(lo)}","${b64(hi)}"]"""
         }.mkString(""","stats":{""", ",", "}")
       val svPart = e.schemaV.map(v => s""","sv":$v""").getOrElse("")
+      val extraPart =
+        if (e.extra.isEmpty) ""
+        else e.extra.map(p => s""""$p"""")
+          .mkString(""","extra":[""", ",", "]")
       s"""{"bucket":${e.bucket},"rows":${e.rows},"xxh":${e.xxh}""" +
-        s"""$svPart,"path":"${e.path}"$statsPart}"""
+        s"""$svPart,"path":"${e.path}"$extraPart$statsPart}"""
     }.mkString("", "\n", "\n")
     val suffix = if (incomplete) Incomplete else ""
     Files.writeString(dir.resolve(s"v$snapshot.manifest$suffix.jsonl"), body)
@@ -515,6 +550,145 @@ object SnapshotStore {
     } finally bucketed.unpersist(false)
   }
 
+  /** Fast-append commit (Iceberg's `AppendFiles`): add `df`'s rows to
+    * the latest snapshot and publish the union as a new one. Only the
+    * incoming rows are written, into the new run directory; a touched
+    * bucket keeps its files and gains the new directory as an `extra`
+    * path, with `rows` summed, `xxh` XORed and stats bounds widened
+    * over the columns the table already tracks (a column either side
+    * leaves untracked stays untracked). An empty store is bootstrapped
+    * with [[write]].
+    *
+    * `df` must carry the table's columns with the table's types (in
+    * any order). A replayed append converges: incoming rows already
+    * stored (equal on every column, null-safe) are dropped, while
+    * duplicates WITHIN `df` are kept. The lookup never reads a bucket
+    * the incoming rows miss, nor one the manifest stats rule out — on
+    * some tracked column the bucket's incoming rows hold no null and
+    * their [min, max] misses the stored one (with ids that only grow,
+    * a stats-tracked id column rules out every bucket). The buckets
+    * left are scanned once and semi-joined against the incoming rows,
+    * which the planner broadcasts when they fit under
+    * `spark.sql.autoBroadcastJoinThreshold`, so the stored side is
+    * filtered map-side, never exchanged. The commit thus costs
+    * O(incoming rows) plus a scan of the buckets the stats cannot
+    * rule out.
+    *
+    * Appending nothing publishes nothing and returns the latest
+    * snapshot. Refuses to run over an incomplete snapshot, and into a
+    * bucket still pinned to an older column set by additive evolution
+    * (its stored hash covers other columns — fold it with
+    * [[rewriteSnapshot]] first).
+    */
+  def append(df: DataFrame, root: String, bucketExpr: Column)
+      : WriteResult = {
+    require(!df.columns.contains(B) && !df.columns.contains("run"),
+      s"column names '$B' and 'run' are reserved by SnapshotStore")
+    val prevSnap = latestSnapshot(root) match {
+      case Some(v) => v
+      case None if latestAnySnapshot(root).isEmpty =>
+        return write(df, root, bucketExpr)
+      case None => throw new IllegalStateException(
+        s"append: $root holds only an incomplete snapshot — resume " +
+          "that write first")
+    }
+    require(latestAnySnapshot(root).contains(prevSnap),
+      s"append: $root has an incomplete snapshot newer than " +
+        s"v$prevSnap — resume that write first")
+    val schema = tableSchema(root, prevSnap)
+    val absent = schema.fieldNames.filterNot(df.columns.contains)
+    require(absent.isEmpty,
+      s"append: incoming rows lack table columns ${absent.mkString(",")}")
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val bucketed = conformTo(df, schema).withColumn(B, bucketExpr)
+      .persist(level)
+    val held = scala.collection.mutable.ArrayBuffer(bucketed)
+    try {
+      val prev = manifest(root, prevSnap).map(e => e.bucket -> e).toMap
+      val statsCols = prev.values.flatMap(_.stats.keys).toSeq.distinct
+      val all = lineageOf(bucketed, statsCols)
+      val suspect = all.toSeq.collect {
+        case (b, (_, _, st, nulls))
+            if prev.get(b).exists(e => !disjoint(e.stats, st, nulls)) => b
+      }
+      val guarded = if (suspect.isEmpty) None else {
+        val stored = readEntries(df.sparkSession, root, prevSnap,
+          suspect.flatMap(prev(_).paths))
+        val already = stored.join(bucketed, schema.fieldNames
+          .map(c => stored(c) <=> bucketed(c)).reduce(_ && _), "left_semi")
+          .persist(level)
+        held += already
+        if (already.count() == 0) None
+        else Some(bucketed.join(already, schema.fieldNames
+          .map(c => bucketed(c) <=> already(c)).reduce(_ && _),
+          "left_anti").persist(level))
+      }
+      held ++= guarded
+      val rows = guarded.getOrElse(bucketed)
+      val incoming = guarded.fold(all)(lineageOf(_, statsCols))
+      if (incoming.isEmpty)
+        return WriteResult(prevSnap, Seq.empty, prev.keys.toSeq.sorted,
+          Seq.empty)
+      // an entry pinned to a schema version with the same columns
+      // (e.g. one that differed only in nullability) hashes alike
+      val cols = schema.fieldNames.toSeq
+      val pinned = incoming.keys.filter(b => prev.get(b)
+        .flatMap(_.schemaV)
+        .exists(sv => tableSchema(root, sv).fieldNames.toSeq != cols))
+        .toSeq.sorted
+      require(pinned.isEmpty,
+        s"append: buckets ${pinned.mkString(",")} still serve files of " +
+          "an older schema version — rewriteSnapshot first")
+      val snap = prevSnap + 1
+      val runDir = s"$root/runs/run=$snap"
+      dropStaleRunDir(root, snap)
+      rows.write.partitionBy(B).mode("append").parquet(runDir)
+      val touched = incoming.toSeq.map { case (b, (n, x, st, _)) =>
+        val dir = s"$runDir/$B=$b"
+        prev.get(b) match {
+          case Some(e) => e.copy(rows = e.rows + n, xxh = e.xxh ^ x,
+            stats = widen(e.stats, st), extra = e.extra :+ dir)
+          case None => BucketLineage(b, n, x, dir, st)
+        }
+      }
+      val carried = prev.keys.toSeq.sorted.filterNot(incoming.contains)
+      Files.writeString(schemaPath(root, snap), ddlOf(root, prevSnap))
+      writeManifest(root, snap, carried.map(prev) ++ touched,
+        incomplete = false)
+      WriteResult(snap, incoming.keys.toSeq.sorted, carried, Seq.empty)
+    } finally held.foreach(_.unpersist(false))
+  }
+
+  /** True when no stored row of a bucket with stats `stored` can equal
+    * an incoming row of that bucket, whose stats are `in` and whose
+    * columns `nulls` hold a null: on some column both sides track, the
+    * incoming rows hold no null and the two bounding ranges do not
+    * meet. Bounds are safe enclosures (truncated string bounds
+    * included), so disjoint ranges mean disjoint values.
+    */
+  private def disjoint(stored: Map[String, (String, String, String)],
+      in: Map[String, (String, String, String)], nulls: Set[String])
+      : Boolean =
+    in.exists { case (c, (t, lo, hi)) =>
+      !nulls(c) && stored.get(c).exists { case (t2, sLo, sHi) =>
+        t2 == t && (statLt(t, hi, sLo) || statLt(t, sHi, lo))
+      }
+    }
+
+  /** The bounding box of two stats maps: per column, the lower of the
+    * lower bounds and the higher of the upper bounds. A column missing
+    * on either side, or tagged differently, is dropped (untracked).
+    */
+  private def widen(a: Map[String, (String, String, String)],
+      b: Map[String, (String, String, String)])
+      : Map[String, (String, String, String)] =
+    a.flatMap { case (c, (t, lo, hi)) =>
+      b.get(c).collect { case (`t`, lo2, hi2) =>
+        c -> ((t, if (statLt(t, lo2, lo)) lo2 else lo,
+          if (statLt(t, hi, hi2)) hi2 else hi))
+      }
+    }
+
   /** Bucket-subset read: exactly the listed buckets at a snapshot —
     * the targeted-read half of incremental maintenance (read the few
     * buckets a change touched, never the table).
@@ -525,7 +699,7 @@ object SnapshotStore {
       throw new IllegalStateException(s"no snapshots at $root"))
     val set = buckets.toSet
     val paths = manifest(root, v)
-      .filter(e => set.contains(e.bucket)).map(_.path)
+      .filter(e => set.contains(e.bucket)).flatMap(_.paths)
     readEntries(spark, root, v, paths)
   }
 
@@ -548,7 +722,8 @@ object SnapshotStore {
     * parquet row-group min/max stats become tight hyper-rectangles and
     * multi-dimensional filters prune at the row-group level. Empty
     * `layoutCols` is plain compaction (small files of a bucket merge
-    * into one sorted write per partition).
+    * into one sorted write per partition). Either way every directory
+    * a bucket gained through [[append]] folds back into one.
     */
   def rewriteSnapshot(spark: SparkSession, root: String,
       layoutCols: Seq[String] = Seq.empty, bits: Int = 10)
@@ -585,7 +760,8 @@ object SnapshotStore {
         org.apache.spark.sql.types.StructField(B,
           org.apache.spark.sql.types.IntegerType)))
     val df0 = spark.read.option("basePath", s"$root/runs")
-      .schema(readSchema).parquet(entries.map(_.path): _*).drop("run")
+      .schema(readSchema).parquet(entries.flatMap(_.paths): _*)
+      .drop("run")
     val sortKeys: Seq[Column] =
       if (layoutCols.isEmpty) Seq(col(B))
       else Seq(col(B), Layout.zValue(layoutCols.map(col),
@@ -623,7 +799,7 @@ object SnapshotStore {
       Files.writeString(schemaPath(root, snap), curSchema.toDDL)
       writeManifest(root, snap,
         entries.map(e => e.copy(path = s"$runDir/$B=${e.bucket}",
-          schemaV = None)),
+          schemaV = None, extra = Seq.empty)),
         incomplete = false)
       WriteResult(snap, entries.map(_.bucket).sorted, Seq.empty,
         Seq.empty)
@@ -637,7 +813,7 @@ object SnapshotStore {
       snapshot: Option[Int] = None): DataFrame = {
     val v = snapshot.orElse(latestSnapshot(root)).getOrElse(
       throw new IllegalStateException(s"no snapshots at $root"))
-    readEntries(spark, root, v, manifest(root, v).map(_.path))
+    readEntries(spark, root, v, manifest(root, v).flatMap(_.paths))
   }
 
   /** Normalize a caller-supplied range bound with the same rules as
@@ -703,7 +879,7 @@ object SnapshotStore {
     val v = snapshot.orElse(latestSnapshot(root)).getOrElse(
       throw new IllegalStateException(s"no snapshots at $root"))
     val kept = prunedManifest(root, colName, lower, upper, Some(v))
-    val base = readEntries(spark, root, v, kept.map(_.path))
+    val base = readEntries(spark, root, v, kept.flatMap(_.paths))
     val c = col(colName)
     val residual = (lower.map(b => c >= lit(b)) ++
       upper.map(b => c <= lit(b))).reduce(_ && _)
@@ -739,7 +915,7 @@ object SnapshotStore {
       to: Int): DataFrame = {
     val changed = changedBuckets(root, from, to).toSet
     val paths = manifest(root, to)
-      .filter(e => changed.contains(e.bucket)).map(_.path)
+      .filter(e => changed.contains(e.bucket)).flatMap(_.paths)
     readEntries(spark, root, to, paths)
   }
 
@@ -912,7 +1088,8 @@ object SnapshotStore {
     * in-flight checkpointed write), then garbage-collect every bucket
     * directory no surviving manifest references.
     *
-    * Retention is computed from REFERENCED PATHS, not run ids: a run
+    * Retention is computed from REFERENCED PATHS (every path of an
+    * entry, appended directories included), not run ids: a run
     * directory can be partially live (some of its buckets carried by
     * reference into newer manifests), so the deletion unit is the
     * bucket dir. Data files stay immutable until the last manifest
@@ -938,7 +1115,7 @@ object SnapshotStore {
     // classify EVERY live bucket dir as an orphan and delete the data
     // the kept manifests reference
     val live: Set[String] = kept.flatMap(v => manifest(root, v)
-      .map(e => Paths.get(e.path).normalize().toString)).toSet
+      .flatMap(_.paths).map(Paths.get(_).normalize().toString)).toSet
     // every bucket dir on disk that no kept manifest references
     val runsDir = Paths.get(root, "runs")
     val orphans: Seq[Path] =
@@ -998,7 +1175,7 @@ object SnapshotStore {
     val v = snapshot.orElse(latestSnapshot(root)).get
     val entries = manifest(root, v)
     val (present, gone) = entries.partition(e =>
-      Files.isDirectory(Paths.get(e.path)))
+      e.paths.forall(p => Files.isDirectory(Paths.get(p))))
     gone.map(e => e.bucket -> "missing in storage") ++
     present.groupBy(_.schemaV.getOrElse(v)).toSeq.sortBy(_._1)
       .flatMap { case (sv, group) =>
@@ -1006,7 +1183,7 @@ object SnapshotStore {
         val full = StructType(schema.fields ++
           Seq(StructField("run", IntegerType), StructField(B, IntegerType)))
         val df = spark.read.option("basePath", s"$root/runs")
-          .schema(full).parquet(group.map(_.path): _*).drop("run")
+          .schema(full).parquet(group.flatMap(_.paths): _*).drop("run")
         val actual = df.groupBy(col(B))
           .agg(count(lit(1)).as("rows"),
             rowHashExpr(schema.fieldNames.toSeq).as("xxh"))

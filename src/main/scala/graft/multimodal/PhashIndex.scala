@@ -80,12 +80,15 @@ object PhashIndex {
       .select(col("id"), col("phash"), col("b.band"), col("b.bits"))
   }
 
-  /** Build the index from an initial corpus (one banding pass). */
+  /** Build the index from an initial corpus (one banding pass). The
+    * manifest tracks per-bucket id bounds, which let [[appendBatch]]'s
+    * replay guard skip every bucket a batch of newer ids lands in.
+    */
   def build(imgs: DataFrame, idCol: String, phashCol: String,
       root: String, p: Params = Params()): SnapshotStore.WriteResult = {
     writeParams(root, p)
     SnapshotStore.write(bandRowsOf(imgs, idCol, phashCol, p),
-      bandsRoot(root), bucketExpr)
+      bandsRoot(root), bucketExpr, statsCols = Seq("id"))
   }
 
   /** Stored band rows at the latest (or a pinned) snapshot. */
@@ -93,18 +96,15 @@ object PhashIndex {
       snapshot: Option[Int] = None): DataFrame =
     SnapshotStore.read(spark, bandsRoot(root), snapshot)
 
-  /** Absorb a batch as a new snapshot (lineage diff carries untouched
-    * buckets by reference). `distinct` makes a replayed append
-    * (failure recovery) converge instead of duplicating rows.
+  /** Absorb a batch: its band rows are appended as a new snapshot
+    * (only the touched buckets gain a file; the rest carry by
+    * reference). A replayed append (failure recovery) converges: band
+    * rows already stored are dropped first.
     */
   def appendBatch(batch: DataFrame, idCol: String, phashCol: String,
-      root: String): SnapshotStore.WriteResult = {
-    val p = params(root)
-    val merged = bands(batch.sparkSession, root)
-      .unionByName(bandRowsOf(batch, idCol, phashCol, p))
-      .distinct()
-    SnapshotStore.write(merged, bandsRoot(root), bucketExpr)
-  }
+      root: String): SnapshotStore.WriteResult =
+    SnapshotStore.append(bandRowsOf(batch, idCol, phashCol, params(root)),
+      bandsRoot(root), bucketExpr)
 
   /** Exact near-dup pairs TOUCHING THE BATCH: batch-vs-corpus (via the
     * stored index — the corpus is never re-banded, never read) plus

@@ -197,8 +197,8 @@ object StreamingOps {
     * A write-ahead intent marker (same pattern as [[snapshotSink]])
     * makes a fully-committed batch's replay a no-op; a MID-batch
     * crash redoes the batch and converges to the same index state
-    * (the band/text merges are dedup-safe), with `emit` delivered
-    * at-least-once — point it at an idempotent downstream, the
+    * (the band/text appends skip rows already stored), with `emit`
+    * delivered at-least-once — point it at an idempotent downstream, the
     * standard foreachBatch contract. Ids must be MONOTONE across
     * ingestion (every batch id greater than everything absorbed
     * before) — enforced against a tracked high-water mark, because
@@ -266,7 +266,8 @@ object StreamingOps {
         }
         return
       }
-      // else: crashed mid-batch — redo (merges below are dedup-safe)
+      // else: crashed mid-batch — redo (the appends below skip rows
+      // already stored)
     } else {
       java.nio.file.Files.createDirectories(commits)
       writeAtomic(marker, latestBands.getOrElse(0).toString)
@@ -335,10 +336,15 @@ object StreamingOps {
     // buckets (no runs/ data for a later read to infer schema from)
     // while absorbing nothing — skip both writes instead
     if (!survivors.isEmpty) {
-      graft.io.SnapshotStore.write(
-        storedTexts.map(_.unionByName(survText).dropDuplicates(idCol))
-          .getOrElse(survText),
-        textsRoot, pmod(xxhash64(col(idCol)), lit(16)).cast("int"))
+      // a fast append of the survivors' texts; a redo skips the texts
+      // an interrupted attempt already stored. The store tracks id
+      // bounds from its first write, so with monotone ids the append
+      // reads no stored text.
+      val textBuckets = pmod(xxhash64(col(idCol)), lit(16)).cast("int")
+      if (storedTexts.isEmpty)
+        graft.io.SnapshotStore.write(survText, textsRoot, textBuckets,
+          statsCols = Seq(idCol))
+      else graft.io.SnapshotStore.append(survText, textsRoot, textBuckets)
       graft.dedup.MinhashIndex.appendBatch(survText,
         idCol, textCol, indexRoot)
     }
@@ -1515,8 +1521,8 @@ object StreamingOps {
     * oracle (the shared batch/stream pattern of q185/q188, q147/q189,
     * q197/q201, q193/q206).
     *
-    * Replay safety without a marker: `appendBatch` is a
-    * distinct-merge (a redone append converges to the same snapshot),
+    * Replay safety without a marker: `appendBatch` drops band rows
+    * already stored (a redone append converges to the same content),
     * and a re-queried batch re-emits the same pairs — `emit` is
     * at-least-once, the standard foreachBatch contract; point it at an
     * idempotent downstream. Ids must be globally unique across corpus

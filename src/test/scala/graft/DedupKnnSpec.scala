@@ -4,6 +4,7 @@ import graft.ann.Knn
 import graft.dedup.Dedup
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class DedupKnnSpec extends SparkSpec {
 
@@ -341,38 +342,51 @@ class DedupKnnSpec extends SparkSpec {
       "loaded IVF-PQ index must answer exactly like the in-memory one")
   }
 
-  test("MinhashIndex: incremental batch dedup == one-shot over union") {
-    import graft.dedup.MinhashIndex
-    val corpus = df("doc_id BIGINT, text STRING", (1L to 40L).map(i =>
+  private def mhCorpus = df("doc_id BIGINT, text STRING",
+    (1L to 40L).map(i =>
       Row(i, s"document number $i about topic ${i % 7} with shared " +
         s"words and unique token token$i suffix tail words here")))
-    // batch: near-dups of corpus docs (drop first word), an internal
-    // dup pair, and fresh docs
-    val batch = df("doc_id BIGINT, text STRING",
-      (1L to 5L).map(i => Row(100L + i,
-        s"number $i about topic ${i % 7} with shared " +
-          s"words and unique token token$i suffix tail words here")) ++
-        Seq(Row(200L, "completely fresh content alpha beta gamma " +
-          "delta epsilon zeta eta theta"),
-          Row(201L, "completely fresh content alpha beta gamma " +
-            "delta epsilon zeta eta theta iota"),
-          Row(202L, "nothing like anything else entirely novel " +
-            "words qq ww ee rr tt yy uu")))
-    val root = java.nio.file.Files
-      .createTempDirectory("mhidx").toString
-    MinhashIndex.build(corpus, "doc_id", "text", root)
 
-    val inc = MinhashIndex.batchNearDups(batch, corpus, "doc_id",
+  // near-dups of corpus docs (drop first word), an internal dup pair,
+  // and fresh docs
+  private def mhBatch = df("doc_id BIGINT, text STRING",
+    (1L to 5L).map(i => Row(100L + i,
+      s"number $i about topic ${i % 7} with shared " +
+        s"words and unique token token$i suffix tail words here")) ++
+      Seq(Row(200L, "completely fresh content alpha beta gamma " +
+        "delta epsilon zeta eta theta"),
+        Row(201L, "completely fresh content alpha beta gamma " +
+          "delta epsilon zeta eta theta iota"),
+        Row(202L, "nothing like anything else entirely novel " +
+          "words qq ww ee rr tt yy uu")))
+
+  /** The indexed pairs touching `mhBatch` against a fresh index of
+    * `mhCorpus`, and the one-shot near-dups over corpus+batch
+    * restricted to pairs touching the batch (the ground truth).
+    */
+  private def mhIncAndOneShot(root: String)
+      : (Set[(Long, Long)], Set[(Long, Long)]) = {
+    import graft.dedup.MinhashIndex
+    MinhashIndex.build(mhCorpus, "doc_id", "text", root)
+    val inc = MinhashIndex.batchNearDups(mhBatch, mhCorpus, "doc_id",
       "text", root, threshold = 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // ground truth: one-shot near-dups over corpus+batch, restricted
-    // to pairs touching the batch
     val oneShot = Dedup.minhashNearDups(
-      corpus.unionByName(batch), "doc_id", "text", threshold = 0.5)
+      mhCorpus.unionByName(mhBatch), "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => a > 100L || b > 100L }.toSet
+    (inc, oneShot)
+  }
+
+  test("MinhashIndex: incremental batch dedup == one-shot over union") {
+    import graft.dedup.MinhashIndex
+    val corpus = mhCorpus
+    val batch = mhBatch
+    val root = java.nio.file.Files
+      .createTempDirectory("mhidx").toString
+    val (inc, oneShot) = mhIncAndOneShot(root)
     assert(inc == oneShot, s"inc=$inc oneShot=$oneShot")
     assert(inc.exists { case (a, b) => a <= 40L && b > 100L },
       "must find batch-vs-corpus dups via the stored index")
@@ -390,6 +404,68 @@ class DedupKnnSpec extends SparkSpec {
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet
     assert(inc3.map(_._2).contains(202L) || inc3.map(_._1).contains(202L),
       s"appended doc must be findable: $inc3")
+  }
+
+  test("MinhashIndex: incremental == one-shot when nothing may " +
+      "broadcast (the shuffle-join fallback of a large batch)") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val (inc, oneShot) = try {
+      spark.conf.set(key, "-1")
+      mhIncAndOneShot(java.nio.file.Files
+        .createTempDirectory("mhidx_nobc").toString)
+    } finally spark.conf.set(key, prev)
+    assert(inc == oneShot, s"inc=$inc oneShot=$oneShot")
+    assert(inc.nonEmpty)
+  }
+
+  test("MinhashIndex: with a checkpoint dir the candidate pairs are " +
+      "written there and nothing is left there once the probe returns") {
+    val ck = java.nio.file.Files.createTempDirectory("mhidx_ck")
+    spark.sparkContext.setCheckpointDir(ck.toString)
+    val (inc, oneShot) = try mhIncAndOneShot(java.nio.file.Files
+      .createTempDirectory("mhidx_durable").toString)
+    finally spark.sparkContext.setCheckpointDir(null)
+    assert(inc == oneShot, s"inc=$inc oneShot=$oneShot")
+    // neither the candidate copy nor the returned pairs stay behind
+    val s = java.nio.file.Files.walk(ck)
+    val files = try s.iterator().asScala.toList
+      .filterNot(java.nio.file.Files.isDirectory(_)) finally s.close()
+    assert(files.isEmpty, s"files left in the checkpoint dir: $files")
+  }
+
+  test("MinhashIndex: appendBatch writes only the batch's band rows " +
+      "and a replayed append converges") {
+    import graft.dedup.MinhashIndex
+    val root = java.nio.file.Files.createTempDirectory("mhidx_app").toString
+    MinhashIndex.build(mhCorpus, "doc_id", "text", root)
+    val p = MinhashIndex.params(root)
+    val before = MinhashIndex.bands(spark, root).count()
+    val built = graft.io.SnapshotStore.manifest(s"$root/bands", 1)
+      .map(e => e.bucket -> e.paths).toMap
+    val r = MinhashIndex.appendBatch(mhBatch, "doc_id", "text", root)
+    assert(MinhashIndex.bands(spark, root).count() ===
+      before + 8L * p.bands)
+    // stored files are never rewritten: a touched bucket keeps its
+    // files and gains one directory, the others carry by reference
+    graft.io.SnapshotStore.manifest(s"$root/bands", r.snapshot)
+      .foreach { e =>
+        val kept = built.getOrElse(e.bucket, Seq.empty)
+        if (r.written.contains(e.bucket)) {
+          assert(e.paths.init === kept)
+          assert(e.paths.last.contains(s"run=${r.snapshot}/"))
+        } else assert(e.paths === kept)
+      }
+    val replay = MinhashIndex.appendBatch(mhBatch, "doc_id", "text", root)
+    assert(replay.snapshot === r.snapshot && replay.written.isEmpty)
+    // a batch half replayed, half new adds only the new half
+    val more = df("doc_id BIGINT, text STRING", Seq(
+      Row(300L, "another fresh document with its own words here")))
+    MinhashIndex.appendBatch(mhBatch.unionByName(more), "doc_id", "text",
+      root)
+    assert(MinhashIndex.bands(spark, root).count() ===
+      before + 9L * p.bands)
+    assert(graft.io.SnapshotStore.verify(spark, s"$root/bands").isEmpty)
   }
 
   test("PQ: codes match a driver-side reference argmin; ADC recall") {

@@ -613,9 +613,10 @@ class PlanDisciplineSpec extends SparkSpec {
     graft.multimodal.PhashIndex.build(imgs, "id", "phash", root)
     val batch = imgs.limit(50)
       .selectExpr("id + 1000000 AS id", "phash")
-    // at production scale neither side broadcasts; disable the
-    // test-scale auto-broadcast so the exchange-reuse shape is the one
-    // a real batch plans
+    // the stored side never broadcasts at production scale, and a
+    // large batch does not either; disable the test-scale
+    // auto-broadcast so the exchange-reuse shape is the one such a
+    // batch plans
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val plan = try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -635,6 +636,98 @@ class PlanDisciplineSpec extends SparkSpec {
       !plan.contains("BroadcastNestedLoop"), plan.take(1200))
     assert(!plan.contains("bytes"),
       s"index query must never read the image table:\n${plan.take(1200)}")
+  }
+
+  /** Every chain from `plan` down to a parquet scan of a path
+    * containing `pathPart`, scan first — walking through adaptive
+    * stages, reused exchanges and the physical plans of cached
+    * relations.
+    */
+  private def scanChains(plan: org.apache.spark.sql.execution.SparkPlan,
+      pathPart: String)
+      : Seq[List[org.apache.spark.sql.execution.SparkPlan]] = {
+    import org.apache.spark.sql.execution._
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: adaptive.QueryStageExec => Seq(q.plan)
+      case r: exchange.ReusedExchangeExec => Seq(r.child)
+      case i: columnar.InMemoryTableScanExec => Seq(i.relation.cachedPlan)
+      case o => o.children
+    }
+    def go(p: SparkPlan, above: List[SparkPlan]): Seq[List[SparkPlan]] = {
+      val here = p :: above
+      val self = p match {
+        case f: FileSourceScanExec if f.relation.location.rootPaths
+            .exists(_.toString.contains(pathPart)) => Seq(here)
+        case _ => Seq.empty
+      }
+      self ++ kids(p).flatMap(go(_, here))
+    }
+    go(plan, Nil)
+  }
+
+  /** The nearest exchange or join above the scan at the head of
+    * `chain`.
+    */
+  private def firstBarrier(
+      chain: List[org.apache.spark.sql.execution.SparkPlan]) =
+    chain.tail.find {
+      case _: org.apache.spark.sql.execution.exchange.Exchange => true
+      case _: org.apache.spark.sql.execution.joins.BaseJoinExec => true
+      case _ => false
+    }
+
+  test("minhash index probe: a small batch broadcasts into ONE " +
+      "map-side scan of the stored bands and of the corpus text; with " +
+      "broadcast off it still plans equi-joins only") {
+    import graft.dedup.MinhashIndex
+    val dir = Files.createTempDirectory("plan_mhidx").toString
+    val corpusPath = s"$dir/corpus_text"
+    spark.range(1, 201).selectExpr("id AS doc_id",
+        "concat('document ', id, ' about topic ', id % 7, " +
+          "' with shared words and token', id, ' tail') AS text")
+      .write.parquet(corpusPath)
+    val corpus = spark.read.parquet(corpusPath)
+    MinhashIndex.build(corpus, "doc_id", "text", s"$dir/index")
+    // near-copies of the first 20 corpus docs, built apart from the
+    // corpus file (every scan of that file is then a corpus-side
+    // scan) and backed by an RDD, whose size the planner cannot
+    // estimate — like a batch that arrives through joins or a stream.
+    // Only the probe's own materialisation lets it broadcast.
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(
+      (1 to 20).map(i => org.apache.spark.sql.Row(i + 1000L,
+        s"$i about topic ${i % 7} with shared words and token$i tail"))),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, text STRING"))
+    def planOf() = {
+      val (q, release) = MinhashIndex.batchNearDupsRaw(batch, corpus,
+        "doc_id", "text", s"$dir/index", 0.5)
+      try { q.collect(); q.queryExecution.executedPlan }
+      finally release()
+    }
+    val plan = planOf()
+    for (part <- Seq("bands/runs", "corpus_text")) {
+      val chains = scanChains(plan, part)
+      assert(chains.nonEmpty, s"no scan of $part in:\n$plan")
+      chains.foreach { c =>
+        val b = firstBarrier(c)
+        assert(b.exists(_.isInstanceOf[
+          org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
+          s"$part must stream into a broadcast join, not an exchange; " +
+            s"first barrier ${b.map(_.nodeName)}:\n$plan")
+      }
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val noBc = try { spark.conf.set(key, "-1"); planOf() }
+      finally spark.conf.set(key, prev)
+    val all = scanChains(noBc, "bands/runs").flatten ++
+      scanChains(noBc, "corpus_text").flatten
+    assert(all.nonEmpty)
+    assert(!all.exists(n => n.nodeName.contains("CartesianProduct") ||
+      n.nodeName.contains("BroadcastNestedLoopJoin")), noBc.toString)
+    assert(!noBc.toString.contains("CartesianProduct") &&
+      !noBc.toString.contains("BroadcastNestedLoop"), noBc.toString)
   }
 
   test("pairPsnrVerify: candidate ids broadcast into the corpus scan " +

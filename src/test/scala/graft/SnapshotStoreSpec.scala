@@ -2,7 +2,8 @@ package graft
 
 import graft.io.SnapshotStore
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Checkpoint / lineage / snapshot semantics (north_rule: resumable
   * from checkpoint with per-partition lineage + metrics).
@@ -677,5 +678,266 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(SnapshotStore.read(spark, root).columns.toSeq ===
       Seq("doc_id", "body"))
     assert(SnapshotStore.verify(spark, root).isEmpty)
+  }
+
+  private def docRange(lo: Int, hi: Int) = {
+    import spark.implicits._
+    (lo until hi).map(i => (i.toLong, s"doc text $i ${"x" * (i % 13)}"))
+      .toDF("doc_id", "text")
+  }
+
+  private def rowsOf(d: org.apache.spark.sql.DataFrame) =
+    d.select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
+  test("append: k fast appends verify clean, read the union of the " +
+      "inputs, and combine lineage exactly as a one-shot write") {
+    val root = freshRoot()
+    val bucket = SnapshotStore.byKey("doc_id", 8)
+    SnapshotStore.write(docRange(0, 400), root, bucket,
+      statsCols = Seq("doc_id"))
+    val batches = Seq(docRange(400, 460), docRange(460, 530),
+      docRange(530, 545))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val r = SnapshotStore.append(b, root, bucket)
+      assert(r.snapshot === i + 2)
+      assert(r.remaining.isEmpty)
+      assert((r.written ++ r.carried).sorted === (0 until 8))
+      assert(SnapshotStore.verify(spark, root).isEmpty,
+        s"verify after append ${i + 1}")
+    }
+    // only the incoming rows were written: every bucket gained exactly
+    // one directory per append that touched it
+    val m = SnapshotStore.manifest(root, 4)
+    assert(m.map(_.paths.size).max === 4)
+    assert(m.flatMap(_.paths).distinct.size === m.map(_.paths.size).sum)
+    assert(rowsOf(SnapshotStore.read(spark, root)) ===
+      rowsOf(docRange(0, 545)))
+    // rows sum, xxh XORs, the tracked column's stats bounds widen:
+    // the same per-bucket lineage a single write of the union records
+    val oneShot = freshRoot()
+    SnapshotStore.write(docRange(0, 545), oneShot, bucket,
+      statsCols = Seq("doc_id"))
+    val want = SnapshotStore.manifest(oneShot, 1)
+      .map(e => e.bucket -> ((e.rows, e.xxh, e.stats))).toMap
+    assert(m.map(e => e.bucket -> ((e.rows, e.xxh, e.stats))).toMap ===
+      want)
+    // older snapshots still read exactly their own files
+    assert(SnapshotStore.read(spark, root, Some(2)).count() === 460)
+    assert(SnapshotStore.verify(spark, root, Some(2)).isEmpty)
+  }
+
+  test("append: a replayed batch converges, an empty one publishes " +
+      "nothing, mismatched columns fail loudly") {
+    import spark.implicits._
+    val root = freshRoot()
+    val bucket = SnapshotStore.byKey("doc_id", 8)
+    SnapshotStore.write(docRange(0, 200), root, bucket)
+    val b = docRange(200, 260)
+    assert(SnapshotStore.append(b, root, bucket).snapshot === 2)
+    // a full replay finds every row stored: no new snapshot
+    val again = SnapshotStore.append(b, root, bucket)
+    assert(again.snapshot === 2 && again.written.isEmpty &&
+      again.carried.size === 8)
+    // a partial replay adds exactly the rows not yet stored
+    val r = SnapshotStore.append(docRange(240, 300), root, bucket)
+    assert(r.snapshot === 3)
+    assert(rowsOf(SnapshotStore.read(spark, root)) ===
+      rowsOf(docRange(0, 300)))
+    assert(SnapshotStore.verify(spark, root).isEmpty)
+    // a row sharing a stored key but not its content is still added
+    SnapshotStore.append(Seq((5L, "other text")).toDF("doc_id", "text"),
+      root, bucket)
+    assert(SnapshotStore.read(spark, root)
+      .filter(col("doc_id") === 5L).count() === 2)
+    assert(SnapshotStore.append(docRange(0, 0), root, bucket)
+      .snapshot === 4)
+    // columns in another order are fine; missing, extra or retyped
+    // columns are not
+    SnapshotStore.append(docRange(300, 310).select("text", "doc_id"),
+      root, bucket)
+    assert(SnapshotStore.read(spark, root).count() === 311)
+    Seq(docRange(310, 311).select("doc_id"),
+      docRange(310, 311).withColumn("lang", lit("en")),
+      Seq((310L, 1)).toDF("doc_id", "text")).foreach { bad =>
+      intercept[IllegalArgumentException] {
+        SnapshotStore.append(bad, root, bucket)
+      }
+    }
+    // an empty store is bootstrapped
+    val fresh = freshRoot()
+    assert(SnapshotStore.append(docRange(0, 10), fresh, bucket)
+      .snapshot === 1)
+    assert(SnapshotStore.read(spark, fresh).count() === 10)
+  }
+
+  test("append: tracked bounds spare the stored read for a batch of " +
+      "newer ids; a null in the tracked column keeps its bucket read") {
+    import spark.implicits._
+    val root = freshRoot()
+    val bucket = SnapshotStore.byKey("doc_id", 8)
+    SnapshotStore.write(docRange(0, 200), root, bucket,
+      statsCols = Seq("doc_id"))
+    // a replay inside the stored bounds is read and converges
+    assert(SnapshotStore.append(docRange(150, 250), root, bucket)
+      .snapshot === 2)
+    assert(rowsOf(SnapshotStore.read(spark, root)) ===
+      rowsOf(docRange(0, 250)))
+    // ids above every stored id: the append must not open a stored
+    // file, so it succeeds with every stored directory moved away
+    val aside = Paths.get(freshRoot())
+    val moved = SnapshotStore.manifest(root, 2).flatMap(_.paths)
+      .zipWithIndex.map { case (p, i) =>
+        Files.move(Paths.get(p), aside.resolve(i.toString))
+        (aside.resolve(i.toString), Paths.get(p))
+      }
+    val r = SnapshotStore.append(docRange(250, 300), root, bucket)
+    moved.foreach { case (from, to) => Files.move(from, to) }
+    assert(r.snapshot === 3 && r.written.nonEmpty)
+    assert(rowsOf(SnapshotStore.read(spark, root)) ===
+      rowsOf(docRange(0, 300)))
+    assert(SnapshotStore.verify(spark, root).isEmpty)
+    // a stored null id shares its bucket with a newer id: the newer
+    // id's bound alone would rule the bucket out, but the incoming
+    // null can equal the stored one, so the bucket is read
+    val withNull = Seq((Option.empty[Long], "null doc"))
+      .toDF("doc_id", "text")
+    val nulls = freshRoot()
+    SnapshotStore.write(docRange(0, 200).unionByName(withNull), nulls,
+      bucket, statsCols = Seq("doc_id"))
+    val nullBucket = withNull.select(bucket).head().getInt(0)
+    assert(SnapshotStore.manifest(nulls, 1)
+      .exists(e => e.bucket == nullBucket && e.stats.contains("doc_id")))
+    val newer = (1000L to 2000L).toDF("doc_id")
+      .filter(bucket === lit(nullBucket)).head().getLong(0)
+    SnapshotStore.append(withNull.unionByName(
+      Seq((Option(newer), "newer doc")).toDF("doc_id", "text")),
+      nulls, bucket)
+    val back = SnapshotStore.read(spark, nulls)
+    assert(back.filter(col("doc_id").isNull).count() === 1)
+    assert(back.count() === 202)
+    assert(SnapshotStore.verify(spark, nulls).isEmpty)
+  }
+
+  test("append: expiry keeps every delta a kept manifest references; " +
+      "rewriteSnapshot folds deltas with identical lineage, after " +
+      "which expiry deletes them") {
+    val root = freshRoot()
+    val bucket = SnapshotStore.byKey("doc_id", 8)
+    SnapshotStore.write(docRange(0, 300), root, bucket) // v1
+    SnapshotStore.append(docRange(300, 350), root, bucket) // v2
+    SnapshotStore.append(docRange(350, 420), root, bucket) // v3
+    val res = SnapshotStore.expireSnapshots(root, keepLast = 1)
+    assert(res.expiredSnapshots === Seq(1, 2))
+    // v3 still serves v1's and v2's files: nothing is garbage
+    assert(res.deletedBucketDirs.isEmpty)
+    assert(SnapshotStore.verify(spark, root).isEmpty)
+    assert(SnapshotStore.read(spark, root).count() === 420)
+    val before = SnapshotStore.manifest(root, 3)
+    SnapshotStore.rewriteSnapshot(spark, root) // v4
+    val after = SnapshotStore.manifest(root, 4)
+    assert(after.forall(_.extra.isEmpty))
+    assert(after.map(e => (e.bucket, e.rows, e.xxh)) ===
+      before.map(e => (e.bucket, e.rows, e.xxh)))
+    val res2 = SnapshotStore.expireSnapshots(root, keepLast = 1)
+    assert(res2.expiredSnapshots === Seq(3))
+    val norm = (p: String) => java.nio.file.Paths.get(p).normalize()
+      .toString
+    assert(res2.deletedBucketDirs.map(norm).toSet ===
+      before.flatMap(_.paths).map(norm).toSet)
+    assert(SnapshotStore.verify(spark, root).isEmpty)
+    assert(rowsOf(SnapshotStore.read(spark, root)) ===
+      rowsOf(docRange(0, 420)))
+  }
+
+  test("write / overwriteBuckets / mergeChanges / readChanges after " +
+      "appends honour every path and carry untouched buckets") {
+    import spark.implicits._
+    val root = freshRoot()
+    val bucket = SnapshotStore.byKey("doc_id", 8)
+    val v1 = SnapshotStore.write(docRange(0, 300), root, bucket).snapshot
+    val v2 = SnapshotStore.append(docRange(300, 400), root, bucket).snapshot
+    // readChanges sees the appended buckets whole (old + new files)
+    val changed = SnapshotStore.changedBuckets(root, Some(v1), v2).toSet
+    val bucketOf = (id: Long) => spark.range(1)
+      .select(pmod(xxhash64(lit(id)), lit(8)).cast("int")).head.getInt(0)
+    val all = docRange(0, 400).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rowsOf(SnapshotStore.readChanges(spark, root, Some(v1), v2)) ===
+      all.filter(r => changed.contains(bucketOf(r._1))).sorted)
+    val m2 = SnapshotStore.manifest(root, v2).map(e => e.bucket -> e).toMap
+    // write of identical content carries everything, deltas included
+    val w = SnapshotStore.write(docRange(0, 400), root, bucket)
+    assert(w.written.isEmpty && w.carried.size === 8)
+    assert(SnapshotStore.manifest(root, w.snapshot).map(_.paths) ===
+      m2.values.toSeq.sortBy(_.bucket).map(_.paths))
+    // overwrite one bucket: it folds into one fresh file, the other
+    // seven keep their appended directories
+    val b0 = bucketOf(7L)
+    val o = SnapshotStore.overwriteBuckets(
+      SnapshotStore.readBuckets(spark, root, Seq(b0))
+        .filter(col("doc_id") =!= 7L), root, bucket, Seq(b0))
+    val mo = SnapshotStore.manifest(root, o.snapshot)
+    assert(mo.filter(_.bucket != b0).map(_.paths) ===
+      m2.values.toSeq.filter(_.bucket != b0).sortBy(_.bucket).map(_.paths))
+    assert(mo.find(_.bucket == b0).get.paths.size === 1)
+    assert(SnapshotStore.verify(spark, root).isEmpty)
+    // mergeChanges: only the change key's bucket is rewritten
+    val k = 350L
+    val mg = SnapshotStore.mergeChanges(spark, root,
+      Seq((k, "merged", "upsert")).toDF("doc_id", "text", "op"),
+      Seq("doc_id"), bucket)
+    assert(mg.written === Seq(bucketOf(k)))
+    val mm = SnapshotStore.manifest(root, mg.snapshot)
+    assert(mm.filter(_.bucket != bucketOf(k)).map(_.paths) ===
+      mo.filter(_.bucket != bucketOf(k)).map(_.paths))
+    val back = SnapshotStore.read(spark, root)
+    assert(back.count() === 399)
+    assert(back.filter(col("doc_id") === k).head.getString(1) === "merged")
+    assert(SnapshotStore.verify(spark, root).isEmpty)
+  }
+
+  test("append into a bucket pinned to an older column set fails " +
+      "until rewriteSnapshot folds the evolution") {
+    import spark.implicits._
+    val root = freshRoot()
+    val bucket = SnapshotStore.byKey("doc_id", 8)
+    SnapshotStore.write(docRange(0, 100), root, bucket)
+    SnapshotStore.mergeChanges(spark, root,
+      Seq((3L, "three", "en", "upsert")).toDF("doc_id", "text", "lang",
+        "op"), Seq("doc_id"), bucket) // adds `lang`; 7 buckets pinned
+    val more = docRange(100, 160).withColumn("lang", lit("fr"))
+    intercept[IllegalArgumentException] {
+      SnapshotStore.append(more, root, bucket)
+    }
+    SnapshotStore.rewriteSnapshot(spark, root)
+    SnapshotStore.append(more, root, bucket)
+    assert(SnapshotStore.verify(spark, root).isEmpty)
+    val back = SnapshotStore.read(spark, root)
+    assert(back.count() === 160)
+    assert(back.filter(col("lang") === "fr").count() === 60)
+  }
+
+  test("a manifest line in the single-path format still reads") {
+    val root = freshRoot()
+    val bucket = SnapshotStore.byKey("doc_id", 8)
+    SnapshotStore.write(docRange(0, 100), root, bucket,
+      statsCols = Seq("doc_id"))
+    // the format written before appends existed: no "extra" field
+    val v1 = java.nio.file.Paths.get(root, "snapshots", "v1.manifest.jsonl")
+    val legacy = """\{"bucket":\d+,"rows":\d+,"xxh":-?\d+,"path":"[^"]*",""" +
+      """"stats":\{[^}]*\}\}"""
+    val lines = Files.readAllLines(v1).asScala.toSeq
+    assert(lines.nonEmpty && lines.forall(_.matches(legacy)), lines)
+    SnapshotStore.append(docRange(100, 150), root, bucket)
+    assert(Files.readString(java.nio.file.Paths.get(root, "snapshots",
+      "v2.manifest.jsonl")).contains(""""extra":["""))
+    val m1 = SnapshotStore.manifest(root, 1)
+    assert(m1.size === lines.size &&
+      m1.forall(e => e.extra.isEmpty && e.paths === Seq(e.path)) &&
+      m1.forall(_.stats.contains("doc_id")))
+    assert(SnapshotStore.read(spark, root, Some(1)).count() === 100)
+    assert(SnapshotStore.verify(spark, root, Some(1)).isEmpty)
+    assert(SnapshotStore.read(spark, root).count() === 150)
   }
 }
