@@ -61,6 +61,15 @@ object Components {
     * build side. Override with `spark.graft.cc.localEdgeLimit`
     * (0 disables the local finish; raise it on drivers with room, the
     * collect is packed primitive arrays, 16 bytes/edge).
+    *
+    * Driver heap of the local finish, per edge row at the bound: the
+    * packed collect (16 B) and the union-find's sorted id, parent and
+    * component arrays (~32 B), then the output built as one boxed
+    * `Row(id, component)` per node in a `java.util.ArrayList` (~100 B
+    * each: the row, its value array and two boxed longs) and converted
+    * into the returned frame's local relation (~40 B per node more).
+    * At the default 2M that is a few hundred MB transient; the local
+    * relation (tens of MB) lives as long as the returned frame.
     */
   private val LocalEdgeLimitDefault = 2000000L
 

@@ -87,6 +87,35 @@ object Dedup {
       .select(col("__id"), col("__s"))
   }
 
+  /** A document's distinct word `n`-gram shingles, in first-seen
+    * order; empty when the text is null or has fewer than `n` tokens.
+    * The one definition behind [[shingleSetsOf]] and the index probe's
+    * driver-side verification ([[MinhashIndex.batchNearDups]]).
+    */
+  private[graft] def shingleSet(text: String, n: Int): Array[String] =
+    if (text == null) Array.empty
+    else {
+      val toks = text.split(" ", -1)
+      if (toks.length < n) Array.empty
+      else {
+        val seen = new java.util.LinkedHashSet[String]
+        val sb = new java.lang.StringBuilder
+        var p = 0
+        while (p <= toks.length - n) {
+          sb.setLength(0)
+          var j = 0
+          while (j < n) {
+            if (j > 0) sb.append(' ')
+            sb.append(toks(p + j)); j += 1
+          }
+          seen.add(sb.toString); p += 1
+        }
+        val arr = new Array[String](seen.size)
+        seen.toArray(arr)
+        arr
+      }
+    }
+
   /** `(__id, __sh)` distinct shingle SETS per document (for exact
     * Jaccard verification) — computed by the per-partition JVM kernel
     * (round 6): each document's shingles are built and deduped inside
@@ -108,29 +137,9 @@ object Dedup {
       StructField("__sh", ArrayType(StringType, containsNull = false))))
     in.mapPartitions { it =>
       it.flatMap { r =>
-        val text = if (r.isNullAt(1)) null else r.getString(1)
-        if (text == null) Iterator.empty
-        else {
-          val toks = text.split(" ", -1)
-          if (toks.length < n) Iterator.empty
-          else {
-            val seen = new java.util.LinkedHashSet[String]
-            val sb = new java.lang.StringBuilder
-            var p = 0
-            while (p <= toks.length - n) {
-              sb.setLength(0)
-              var j = 0
-              while (j < n) {
-                if (j > 0) sb.append(' ')
-                sb.append(toks(p + j)); j += 1
-              }
-              seen.add(sb.toString); p += 1
-            }
-            val arr = new Array[String](seen.size)
-            seen.toArray(arr)
-            Iterator.single(Row(r.get(0), arr.toSeq))
-          }
-        }
+        val sh = shingleSet(if (r.isNullAt(1)) null else r.getString(1), n)
+        if (sh.isEmpty) Iterator.empty
+        else Iterator.single(Row(r.get(0), sh.toSeq))
       }
     }(Encoders.row(schema))
   }
@@ -270,14 +279,29 @@ object Dedup {
     verifyJaccard(cands, df, idCol, textCol, threshold, shingleSize)
   }
 
+  /** Exact Jaccard of two distinct shingle sets:
+    * `|inter| / (|a| + |b| - |inter|)`, the intersection counted by
+    * one hash-set probe of the larger set against the smaller. The one
+    * definition behind [[jaccardOfPairs]] and the index probe's
+    * driver-side verification, so both give bit-identical values.
+    */
+  private[graft] def jaccard(a: collection.Seq[String],
+      b: collection.Seq[String]): Double = {
+    val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
+    val set = new java.util.HashSet[String](small.size * 2)
+    small.foreach(set.add)
+    var inter = 0
+    large.foreach(t => if (set.contains(t)) inter += 1)
+    val i = inter.toDouble
+    i / ((a.size + b.size) - i)
+  }
+
   /** Per-pair exact Jaccard from two shingle-set columns — the shared
     * PAIR-VERIFY KERNEL (round 6): the per-pair intersection runs as a
-    * JVM hash-set probe inside `mapPartitions` instead of the
-    * `array_intersect` expression (which builds its set per evaluation
-    * and dominated the blocked all-pairs paths). Arithmetic identical:
-    * `|inter| / (|a| + |b| - |inter|)` over distinct sets, the |union|
-    * rearrangement, same IEEE order. Input must expose
-    * (id_a, sh_a, id_b, sh_b); output (id_a, id_b, jaccard).
+    * JVM hash-set probe inside `mapPartitions` ([[jaccard]]) instead
+    * of the `array_intersect` expression (which builds its set per
+    * evaluation and dominated the blocked all-pairs paths). Input must
+    * expose (id_a, sh_a, id_b, sh_b); output (id_a, id_b, jaccard).
     */
   private[graft] def jaccardOfPairs(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
@@ -289,15 +313,8 @@ object Dedup {
       StructField("jaccard", DoubleType, nullable = true)))
     in.mapPartitions { it =>
       it.map { r =>
-        val a = r.getSeq[String](2)
-        val b = r.getSeq[String](3)
-        val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
-        val set = new java.util.HashSet[String](small.size * 2)
-        small.foreach(set.add)
-        var inter = 0
-        large.foreach(t => if (set.contains(t)) inter += 1)
-        val i = inter.toDouble
-        Row(r.get(0), r.get(1), i / ((a.size + b.size) - i))
+        Row(r.get(0), r.get(1),
+          jaccard(r.getSeq[String](2), r.getSeq[String](3)))
       }
     }(Encoders.row(schema))
   }

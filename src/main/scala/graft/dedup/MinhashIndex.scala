@@ -1,8 +1,9 @@
 package graft.dedup
 
 import graft.io.SnapshotStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted MinHash-LSH dedup index for INCREMENTAL ingestion: at
   * corpus scale you cannot re-shingle and re-hash 100 TB every time a
@@ -23,13 +24,24 @@ import org.apache.spark.sql.functions._
   * stored row when the batch's ids lie above every stored id (the
   * index tracks per-bucket id bounds); a batch whose ids overlap a
   * bucket's range has that bucket scanned map-side. `batchNearDups`
-  * materialises the batch's band rows and candidate pairs first, so
-  * the planner sees their real size and broadcasts them into ONE
-  * map-side scan of the stored bands and ONE of the corpus text. A
-  * larger batch falls back to a shuffle join of the stored bands
-  * through the same planner rule. Those two scans still read every
-  * stored band row and every corpus text once per batch: the probe is
-  * O(stored) in I/O, O(batch) in shuffle.
+  * on a batch that fits runs three Spark actions and finishes on the
+  * driver: it collects the batch's band rows, collects the stored
+  * band rows sharing a bucket with them in ONE map-side scan of the
+  * stored bands, and collects the candidates' texts in ONE map-side
+  * scan of the corpus (and the batch); the driver pairs, verifies and
+  * returns a local frame. Nothing is persisted, checkpointed or left
+  * to release. Driver memory: each of the three collects holds at
+  * most the threshold's bytes, sized in Spark's UnsafeRow format (the
+  * measure a broadcast takes) by the tasks before they ship, and the
+  * candidate pairs are capped at the threshold over 32 bytes (the
+  * size of the broadcast of both their ids); boxed on the driver the
+  * rows take a small multiple of those bytes. A batch any of whose
+  * pieces is larger (or a session with the threshold at -1) falls
+  * back to a shuffle plan: batch band rows and candidates
+  * materialised, stored bands and texts joined by the planner's rule
+  * (broadcast when they fit, shuffle otherwise). Either way the two
+  * scans read every stored band row and every corpus text once per
+  * batch: the probe is O(stored) in I/O, O(batch) in shuffle.
   * `SnapshotStore.rewriteSnapshot` folds the per-append band
   * directories back into one per bucket.
   *
@@ -119,45 +131,249 @@ object MinhashIndex {
   /** Verified near-dup pairs TOUCHING THE BATCH: batch-vs-corpus pairs
     * (via the stored index — the corpus is never re-signatured) plus
     * batch-internal pairs. `corpus` supplies text for verification and
-    * is read only for candidate ids (semi-join restriction). Output
-    * (id_a, id_b, jaccard), id_a < id_b, ids globally unique across
-    * corpus and batch. The pairs come back locally checkpointed (a
-    * result bounded by the batch's verified pairs, whose blocks the
-    * ContextCleaner frees with the frame), and every intermediate is
-    * released before returning, the durable candidate copy included.
+    * is read only for candidate ids. Output (id_a, id_b, jaccard),
+    * id_a < id_b, each pair once; ids globally unique across corpus and
+    * batch, except that a redone batch may repeat ids (with their
+    * text) already in `corpus` and in the index. The returned frame
+    * holds its rows (a driver-built local frame, or locally
+    * checkpointed on the shuffle path) and leaves nothing to release.
+    * The chosen path and its sizes are logged, one line per call.
     */
   def batchNearDups(batch: DataFrame, corpus: DataFrame, idCol: String,
       textCol: String, root: String, threshold: Double): DataFrame = {
-    val (pairs, release) =
-      batchNearDupsRaw(batch, corpus, idCol, textCol, root, threshold)
-    // the verified pairs are materialised before the intermediates
-    // they are computed from are released
-    try pairs.localCheckpoint(true) finally release()
+    val (pairs, stats) = probe(batch, corpus, idCol, textCol, root,
+      threshold)
+    log.info(stats.toString)
+    pairs
   }
 
-  /** [[batchNearDups]] before its final materialisation: the lazy
-    * verified pairs plus the release of the intermediates they read.
-    * The caller must materialise the pairs before calling the release.
-    * Plan-shape checks run on this frame, whose plan still shows the
-    * stored-band and corpus scans (a checkpointed frame's plan is an
-    * RDD scan).
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** What one probe did: `path` is `local` or `shuffle` (`reason`
+    * names the piece whose size sent it there: `threshold_off`,
+    * `batch_bands`, `candidates`, `stored_bands` or `texts`; `fits` on
+    * the local path), `bandRows` counts the batch's band rows, whose
+    * bytes are logged against `limitBytes` (the session's
+    * `spark.sql.autoBroadcastJoinThreshold`), `candidates` and
+    * `verified` count pairs.
     */
-  private[graft] def batchNearDupsRaw(batch: DataFrame, corpus: DataFrame,
+  private[graft] final case class ProbeStats(path: String, reason: String,
+      bandRows: Long, limitBytes: Long, candidates: Long, verified: Long) {
+    override def toString: String =
+      s"minhash.probe path=$path reason=$reason band_rows=$bandRows " +
+        s"band_bytes=${bandRows * BandRowBytes} limit_bytes=$limitBytes " +
+        s"candidates=$candidates verified=$verified"
+  }
+
+  /** UnsafeRow bytes of one `(id, band, bh)` band row, and of one
+    * candidate pair as the shuffle path's broadcast of its two ids
+    * holds it.
+    */
+  private val BandRowBytes = 32L
+  private val PairBytes = 32L
+
+  private[graft] def probe(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, root: String, threshold: Double)
-      : (DataFrame, () => Unit) = {
+      : (DataFrame, ProbeStats) = {
     // the batch side is guarded inside bandRowsOf; the corpus text
     // side is cast below and would silently null out non-integral ids
     // (dropping every batch-vs-corpus pair from the output)
     requireIntegralId(corpus, idCol)
+    val spark = batch.sparkSession
+    val sc = spark.sparkContext
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val callerDesc = sc.getLocalProperty("spark.job.description")
+    try {
+      val local =
+        if (limit <= 0) Left("threshold_off")
+        else localProbe(batch, corpus, idCol, textCol, root, threshold,
+          limit)
+      local match {
+        case Right(done) => done
+        case Left(reason) =>
+          sc.setJobDescription("minhash.probe: shuffle")
+          shuffleProbe(batch, corpus, idCol, textCol, root, threshold,
+            limit, reason)
+      }
+    } finally sc.setJobDescription(callerDesc)
+  }
+
+  /** The probe finished on the driver, for a batch whose pieces each
+    * fit in `limit` bytes: ONE job collects the batch's band rows, ONE
+    * map-side scan of the stored bands collects the stored rows sharing
+    * a bucket with them (the driver pairs those up, together with the
+    * batch-internal pairs), and ONE scan of corpus ∪ batch text
+    * collects the candidates' texts, which the driver verifies with the
+    * kernels' own [[Dedup.shingleSet]] and [[Dedup.jaccard]]. Nothing
+    * is persisted, checkpointed or shuffled. Each collect is sized
+    * before it ships ([[collectWithin]]) and the candidate pairs are
+    * counted as they are built; the first piece over `limit` returns
+    * its name instead (the caller then runs [[shuffleProbe]]).
+    */
+  private def localProbe(batch: DataFrame, corpus: DataFrame,
+      idCol: String, textCol: String, root: String, threshold: Double,
+      limit: Long): Either[String, (DataFrame, ProbeStats)] = {
+    val p = params(root)
+    val spark = batch.sparkSession
+    val sc = spark.sparkContext
+    sc.setJobDescription("minhash.probe: batch bands")
+    val newBands = collectWithin(bandRowsOf(batch, idCol, textCol, p),
+      limit).getOrElse(return Left("batch_bands"))
+    // per band, the batch rows' bh values sorted, with their ids
+    // aligned: a bucket is a run of equal bh
+    val (bhs, ids) = {
+      val byBand = Array.fill(p.bands)(
+        scala.collection.mutable.ArrayBuffer.empty[(Long, Long)])
+      newBands.foreach(r =>
+        byBand(r.getInt(1)) += ((r.getLong(2), r.getLong(0))))
+      val sorted = byBand.map(_.toArray.sorted)
+      (sorted.map(_.map(_._1)), sorted.map(_.map(_._2)))
+    }
+    val maxPairs = limit / PairBytes
+    val cands = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    def add(a: Long, b: Long): Boolean = {
+      if (a != b) cands += (if (a < b) (a, b) else (b, a))
+      cands.size <= maxPairs
+    }
+    for (band <- 0 until p.bands; i <- bhs(band).indices) {
+      var j = i + 1
+      while (j < bhs(band).length && bhs(band)(j) == bhs(band)(i)) {
+        if (!add(ids(band)(i), ids(band)(j))) return Left("candidates")
+        j += 1
+      }
+    }
+    if (newBands.nonEmpty) {
+      // the sorted keys travel in the task closure: each task reads its
+      // own copy, with no broadcast to look up per row or release
+      val hit = udf((band: Int, bh: Long) => band >= 0 &&
+        band < bhs.length && java.util.Arrays.binarySearch(bhs(band), bh) >= 0)
+      sc.setJobDescription("minhash.probe: stored bands")
+      val stored = collectWithin(bands(spark, root)
+        .filter(hit(col("band"), col("bh")))
+        .select(col("id"), col("band"), col("bh")), limit)
+      for (r <- stored.getOrElse(return Left("stored_bands"))) {
+        val (band, bh) = (r.getInt(1), r.getLong(2))
+        var k = lowerBound(bhs(band), bh)
+        while (k < bhs(band).length && bhs(band)(k) == bh) {
+          if (!add(r.getLong(0), ids(band)(k))) return Left("candidates")
+          k += 1
+        }
+      }
+    }
+    val verified = new java.util.ArrayList[Row]
+    if (cands.nonEmpty) {
+      val candIds =
+        cands.iterator.flatMap(c => Iterator(c._1, c._2)).toArray.sorted
+      val wanted = udf((id: Long) =>
+        java.util.Arrays.binarySearch(candIds, id) >= 0)
+      def textsOf(df: DataFrame) = df.select(
+        col(idCol).cast("long").as("id"), col(textCol).cast("string"))
+      sc.setJobDescription("minhash.probe: verify")
+      val texts = collectWithin(textsOf(corpus)
+        .unionByName(textsOf(batch)).filter(wanted(col("id"))), limit)
+      // a redone batch repeats corpus ids; their text is the same
+      val text = texts.getOrElse(return Left("texts"))
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      // one shingle set per id_a at a time: the driver holds the
+      // texts, not every candidate's shingle set
+      var curA = 0L
+      var shA: Array[String] = null
+      for ((a, b) <- cands.toArray.sorted) {
+        if (shA == null || a != curA) {
+          curA = a
+          shA = text.get(a).fold(Array.empty[String])(
+            Dedup.shingleSet(_, p.shingleSize))
+        }
+        val shB = text.get(b).fold(Array.empty[String])(
+          Dedup.shingleSet(_, p.shingleSize))
+        if (shA.nonEmpty && shB.nonEmpty) {
+          val j = Dedup.jaccard(shA, shB)
+          if (j >= threshold) verified.add(Row(a, b, j))
+        }
+      }
+    }
+    Right((spark.createDataFrame(verified, PairsSchema), ProbeStats("local",
+      "fits", newBands.length, limit, cands.size, verified.size)))
+  }
+
+  /** The first index of sorted `a` holding a value >= `v`. */
+  private def lowerBound(a: Array[Long], v: Long): Int = {
+    var (lo, hi) = (0, a.length)
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (a(mid) < v) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** The probe's output schema on both paths. */
+  private val PairsSchema = StructType(Seq(
+    StructField("id_a", LongType), StructField("id_b", LongType),
+    StructField("jaccard", DoubleType)))
+
+  /** The rows of `df` on the driver, or None when they would take more
+    * than `limit` bytes there. Each task measures its rows as Spark's
+    * UnsafeRow format sizes them (the measure a broadcast takes) and
+    * ships them only if they fit in an even share of `limit` (`limit`
+    * over the stage's task count), else none and an overflow count:
+    * one job, and the driver never receives more than `limit` bytes of
+    * rows. A partition over its share reports an overflow even when
+    * the rows as a whole would fit.
+    */
+  private[graft] def collectWithin(df: DataFrame, limit: Long)
+      : Option[Array[Row]] = {
+    val over = df.sparkSession.sparkContext.longAccumulator
+    val rows = df.mapPartitions { it =>
+      val share = limit / org.apache.spark.TaskContext.get().numPartitions()
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var bytes = 0L
+      while (bytes <= share && it.hasNext) {
+        val r = it.next()
+        bytes += unsafeRowBytes(r)
+        buf += r
+      }
+      if (bytes <= share) buf.iterator
+      else { over.add(1L); Iterator.empty }
+    }(Encoders.row(df.schema)).collect()
+    if (over.value > 0) None else Some(rows)
+  }
+
+  /** Bytes of `r` as an UnsafeRow: the null bits, one 8-byte slot per
+    * field, and each string's UTF-8 bytes padded to 8.
+    */
+  private[graft] def unsafeRowBytes(r: Row): Long = {
+    var b = 8L * ((r.length + 63) / 64) + 8L * r.length
+    var i = 0
+    while (i < r.length) {
+      r.get(i) match {
+        case s: String =>
+          b += (org.apache.spark.unsafe.types.UTF8String.fromString(s)
+            .numBytes + 7) / 8 * 8
+        case _ =>
+      }
+      i += 1
+    }
+    b
+  }
+
+  /** The probe as a shuffle plan, for a batch some piece of which does
+    * not fit in `limit` bytes: the batch's band rows and candidate
+    * pairs are materialised first, so the planner sees their real size
+    * (and still broadcasts what fits into the stored-band and corpus
+    * scans); otherwise the stored bands and texts are joined by
+    * shuffle. The verified pairs come back locally checkpointed, and
+    * every intermediate is released before returning, the durable
+    * candidate copy included.
+    */
+  private def shuffleProbe(batch: DataFrame, corpus: DataFrame,
+      idCol: String, textCol: String, root: String, threshold: Double,
+      limit: Long, reason: String): (DataFrame, ProbeStats) = {
     val p = params(root)
     val spark = batch.sparkSession
     val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    val release = () => held.reverseIterator.foreach(_())
     try {
-      // materialised intermediates report their real size, so the
-      // planner broadcasts them into the stored scans below
-      val newBands = materialise(bandRowsOf(batch, idCol, textCol, p),
-        held)
+      val (newBands, bandRows) =
+        materialise(bandRowsOf(batch, idCol, textCol, p), held)
       val vsCorpus = bands(spark, root)
         .select(col("id").as("old_id"), col("band"), col("bh"))
         .join(newBands, Seq("band", "bh"))
@@ -178,26 +394,30 @@ object MinhashIndex {
       // are harmless on the build side of a semi-join)
       val candIds = cands.select(col("id_a").as("cid"))
         .unionByName(cands.select(col("id_b").as("cid")))
-      val texts = materialise(corpus
+      // a redone batch repeats corpus ids: one text per id, so each
+      // pair is verified once
+      val (texts, _) = materialise(corpus
         .select(col(idCol).cast("long").as(idCol), col(textCol))
         .unionByName(batch
           .select(col(idCol).cast("long").as(idCol), col(textCol)))
-        .join(broadcast(candIds), col(idCol) === col("cid"), "left_semi"),
+        .join(broadcast(candIds), col(idCol) === col("cid"), "left_semi")
+        .dropDuplicates(idCol),
         held)
-      (Dedup.verifyJaccard(cands, texts, idCol, textCol,
-        threshold, p.shingleSize), release)
-    } catch { case e: Throwable => release(); throw e }
+      val pairs = Dedup.verifyJaccard(cands, texts, idCol, textCol,
+        threshold, p.shingleSize).localCheckpoint(true)
+      (pairs, ProbeStats("shuffle", reason, bandRows, limit, cands.count(),
+        pairs.count()))
+    } finally held.reverseIterator.foreach(_())
   }
 
   /** Persist and count `df` (its real size then reaches the planner);
     * its release joins `held`.
     */
   private def materialise(df: DataFrame,
-      held: scala.collection.mutable.Buffer[() => Unit]): DataFrame = {
+      held: scala.collection.mutable.Buffer[() => Unit]): (DataFrame, Long) = {
     val m = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     held += (() => { m.unpersist(false); () })
-    m.count()
-    m
+    (m, m.count())
   }
 
   /** [[materialise]], except that with a checkpoint dir set the rows
@@ -208,7 +428,7 @@ object MinhashIndex {
       held: scala.collection.mutable.Buffer[() => Unit]): DataFrame = {
     val spark = df.sparkSession
     spark.sparkContext.getCheckpointDir match {
-      case None => materialise(df, held)
+      case None => materialise(df, held)._1
       case Some(dir) =>
         val path = new org.apache.hadoop.fs.Path(dir,
           s"graft-minhash-cands-${java.util.UUID.randomUUID()}")

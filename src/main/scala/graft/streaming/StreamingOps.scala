@@ -188,11 +188,21 @@ object StreamingOps {
 
   /** Streaming NEAR-dup ingestion against the persisted
     * [[graft.dedup.MinhashIndex]]: each micro-batch runs
-    * `batchNearDups` (batch-only signatures + one band join against
-    * the stored corpus rows + candidate-restricted verification),
+    * `batchNearDups` (batch-only signatures, one map-side scan of the
+    * stored band rows, one candidate-restricted scan of the text),
     * drops batch docs that near-duplicate the corpus or a smaller-id
     * batch sibling, emits survivors via `emit`, and absorbs them into
     * the index — so the NEXT batch dedups against them too.
+    *
+    * Per micro-batch the probe costs three Spark actions and a driver
+    * finish when its pieces fit under
+    * `spark.sql.autoBroadcastJoinThreshold`: the driver then holds at
+    * most that many bytes (UnsafeRow-sized) of each of the batch's band
+    * rows, the matching stored band rows and the candidates' texts,
+    * plus at most threshold / 32 candidate pairs, and nothing is
+    * persisted or written under the checkpoint dir. A larger
+    * micro-batch falls back to the probe's shuffle plan (its
+    * intermediates released before the probe returns).
     *
     * A write-ahead intent marker (same pattern as [[snapshotSink]])
     * makes a fully-committed batch's replay a no-op; a MID-batch

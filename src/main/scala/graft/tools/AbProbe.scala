@@ -37,7 +37,7 @@ object AbProbe {
     }
 
     // one-time pair materialization (untimed scaffold)
-    val pairPath = s"/tmp/graft_abprobe_pairs_$$${cpus}"
+    val pairPath = s"/tmp/graft_abprobe_pairs_${cpus}"
     Dedup.minhashNearDups(docs, "doc_id", "text", 0.5)
       .write.mode("overwrite").parquet(pairPath)
     def pairs = spark.read.parquet(pairPath)

@@ -2,7 +2,7 @@ package graft
 
 import graft.ann.Knn
 import graft.dedup.Dedup
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -360,25 +360,54 @@ class DedupKnnSpec extends SparkSpec {
         Row(202L, "nothing like anything else entirely novel " +
           "words qq ww ee rr tt yy uu")))
 
-  /** The indexed pairs touching `mhBatch` against a fresh index of
-    * `mhCorpus`, and the one-shot near-dups over corpus+batch
-    * restricted to pairs touching the batch (the ground truth).
+  /** Inputs the index probe must answer exactly, as (name, corpus,
+    * batch): the mixed batch, an empty batch, a batch with no band rows
+    * (null or shorter-than-a-shingle captions), and a redo of a batch
+    * the corpus and the index already hold.
     */
-  private def mhIncAndOneShot(root: String)
-      : (Set[(Long, Long)], Set[(Long, Long)]) = {
+  private def mhCases: Seq[(String, DataFrame, DataFrame)] = Seq(
+    ("mixed", mhCorpus, mhBatch),
+    ("empty", mhCorpus, df("doc_id BIGINT, text STRING", Seq.empty)),
+    ("no band rows", mhCorpus, df("doc_id BIGINT, text STRING", Seq(
+      Row(300L, null), Row(301L, "too short"), Row(302L, "")))),
+    ("redo", mhCorpus.unionByName(mhBatch), mhBatch))
+
+  /** The indexed pairs touching `batch` against a fresh index of
+    * `corpus`, and the one-shot near-dups over the distinct documents
+    * of corpus+batch restricted to pairs touching the batch (the ground
+    * truth), both as sorted (id_a, id_b, jaccard) rows. The two frames
+    * must also have the same schema.
+    */
+  private def mhIncAndOneShot(root: String, corpus: DataFrame = mhCorpus,
+      batch: DataFrame = mhBatch)
+      : (Seq[(Long, Long, Double)], Seq[(Long, Long, Double)]) = {
     import graft.dedup.MinhashIndex
-    MinhashIndex.build(mhCorpus, "doc_id", "text", root)
-    val inc = MinhashIndex.batchNearDups(mhBatch, mhCorpus, "doc_id",
+    MinhashIndex.build(corpus, "doc_id", "text", root)
+    val incDf = MinhashIndex.batchNearDups(batch, corpus, "doc_id",
       "text", root, threshold = 0.5)
-      .select("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val oneShot = Dedup.minhashNearDups(
-      mhCorpus.unionByName(mhBatch), "doc_id", "text", threshold = 0.5)
-      .select("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .filter { case (a, b) => a > 100L || b > 100L }.toSet
-    (inc, oneShot)
+    val oneShotDf = Dedup.minhashNearDups(
+      corpus.unionByName(batch).dropDuplicates("doc_id"), "doc_id", "text",
+      threshold = 0.5)
+    assert(incDf.schema == oneShotDf.schema,
+      s"${incDf.schema} != ${oneShotDf.schema}")
+    def rows(d: DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    val batchIds = batch.select("doc_id").collect().map(_.getLong(0)).toSet
+    (rows(incDf), rows(oneShotDf).filter { case (a, b, _) =>
+      batchIds(a) || batchIds(b) })
   }
+
+  /** [[mhIncAndOneShot]] over every case of [[mhCases]]: the mixed
+    * batch's result, after asserting each case's equality.
+    */
+  private def mhAllCasesExact(label: String): Seq[(Long, Long, Double)] =
+    mhCases.map { case (name, corpus, batch) =>
+      val (inc, oneShot) = mhIncAndOneShot(java.nio.file.Files
+        .createTempDirectory(s"mhidx_$label").toString, corpus, batch)
+      assert(inc == oneShot, s"$name: inc=$inc oneShot=$oneShot")
+      if (name == "redo") assert(inc.nonEmpty, "redo must find pairs")
+      inc
+    }.head
 
   test("MinhashIndex: incremental batch dedup == one-shot over union") {
     import graft.dedup.MinhashIndex
@@ -386,14 +415,14 @@ class DedupKnnSpec extends SparkSpec {
     val batch = mhBatch
     val root = java.nio.file.Files
       .createTempDirectory("mhidx").toString
-    val (inc, oneShot) = mhIncAndOneShot(root)
-    assert(inc == oneShot, s"inc=$inc oneShot=$oneShot")
+    val inc = mhAllCasesExact("default").map(t => (t._1, t._2))
     assert(inc.exists { case (a, b) => a <= 40L && b > 100L },
       "must find batch-vs-corpus dups via the stored index")
     assert(inc.contains((200L, 201L)),
       "must find batch-internal dups")
 
     // absorb survivors; next batch sees them through the index
+    MinhashIndex.build(corpus, "doc_id", "text", root)
     MinhashIndex.appendBatch(batch.filter(col("doc_id") === 202L),
       "doc_id", "text", root)
     val batch3 = df("doc_id BIGINT, text STRING", Seq(
@@ -410,28 +439,120 @@ class DedupKnnSpec extends SparkSpec {
       "broadcast (the shuffle-join fallback of a large batch)") {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
-    val (inc, oneShot) = try {
+    val inc = try {
       spark.conf.set(key, "-1")
-      mhIncAndOneShot(java.nio.file.Files
-        .createTempDirectory("mhidx_nobc").toString)
+      mhAllCasesExact("nobc")
     } finally spark.conf.set(key, prev)
-    assert(inc == oneShot, s"inc=$inc oneShot=$oneShot")
     assert(inc.nonEmpty)
   }
 
-  test("MinhashIndex: with a checkpoint dir the candidate pairs are " +
-      "written there and nothing is left there once the probe returns") {
-    val ck = java.nio.file.Files.createTempDirectory("mhidx_ck")
-    spark.sparkContext.setCheckpointDir(ck.toString)
-    val (inc, oneShot) = try mhIncAndOneShot(java.nio.file.Files
-      .createTempDirectory("mhidx_durable").toString)
-    finally spark.sparkContext.setCheckpointDir(null)
-    assert(inc == oneShot, s"inc=$inc oneShot=$oneShot")
-    // neither the candidate copy nor the returned pairs stay behind
-    val s = java.nio.file.Files.walk(ck)
-    val files = try s.iterator().asScala.toList
-      .filterNot(java.nio.file.Files.isDirectory(_)) finally s.close()
-    assert(files.isEmpty, s"files left in the checkpoint dir: $files")
+  test("MinhashIndex: with a checkpoint dir set, the probe answers " +
+      "exactly and nothing is left there once it returns, on both paths") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    for (limit <- Seq(prev, "-1")) {
+      val ck = java.nio.file.Files.createTempDirectory("mhidx_ck")
+      spark.sparkContext.setCheckpointDir(ck.toString)
+      try { spark.conf.set(key, limit); mhAllCasesExact("durable") }
+      finally {
+        spark.sparkContext.setCheckpointDir(null)
+        spark.conf.set(key, prev)
+      }
+      // neither the candidate copy nor the returned pairs stay behind
+      val s = java.nio.file.Files.walk(ck)
+      val files = try s.iterator().asScala.toList
+        .filterNot(java.nio.file.Files.isDirectory(_)) finally s.close()
+      assert(files.isEmpty, s"files left in the checkpoint dir: $files")
+    }
+  }
+
+  test("MinhashIndex: a small batch's probe runs at most 3 jobs, named, " +
+      "with no shuffle write from a stage reading stored bands or corpus " +
+      "text, and restores the caller's job description") {
+    import graft.dedup.MinhashIndex
+    import org.apache.spark.scheduler._
+    val dir = java.nio.file.Files.createTempDirectory("mhidx_jobs").toString
+    mhCorpus.write.parquet(s"$dir/corpus")
+    val corpus = spark.read.parquet(s"$dir/corpus")
+    MinhashIndex.build(corpus, "doc_id", "text", s"$dir/index")
+    val batch = mhBatch
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val shuffleFromScans =
+      new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty(DrainKey) == null)
+          .foreach(p => descs.add(
+            String.valueOf(p.getProperty("spark.job.description"))))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        if (m != null && m.inputMetrics.bytesRead > 0 &&
+            m.shuffleWriteMetrics.bytesWritten > 0)
+          shuffleFromScans.add(e.stageInfo.name)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    val (pairs, stats) = try {
+      sc.addSparkListener(l)
+      try {
+        val r = MinhashIndex.probe(batch, corpus, "doc_id", "text",
+          s"$dir/index", 0.5)
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        drainListenerBus()
+        r
+      } finally sc.removeSparkListener(l)
+    } finally sc.setJobDescription(null)
+    assert(stats.path == "local" && stats.bandRows == 8L * 8,
+      stats.toString)
+    assert(stats.verified == pairs.count() && stats.candidates >= stats.verified,
+      stats.toString)
+    val jobs = descs.asScala.toList
+    assert(jobs.size <= 3, s"jobs: $jobs")
+    assert(jobs.toSet == Set("minhash.probe: batch bands",
+      "minhash.probe: stored bands", "minhash.probe: verify"), s"$jobs")
+    assert(shuffleFromScans.isEmpty,
+      s"stages reading files wrote shuffle: $shuffleFromScans")
+  }
+
+  test("MinhashIndex.collectWithin: ships the rows only while each " +
+      "task's share of the limit holds them") {
+    import graft.dedup.MinhashIndex
+    // 100 rows of one long: 16 UnsafeRow bytes each
+    val one = spark.range(0, 100, 1, 1).toDF("id")
+    assert(MinhashIndex.unsafeRowBytes(Row(1L)) == 16L)
+    assert(MinhashIndex.unsafeRowBytes(Row(1L, "abcdefghi")) == 8 + 16 + 16)
+    assert(MinhashIndex.collectWithin(one, 1600L)
+      .map(_.map(_.getLong(0)).toSeq) == Some((0L until 100L).toSeq))
+    assert(MinhashIndex.collectWithin(one, 1599L).isEmpty)
+    // four tasks of 25 rows: each share is a quarter of the limit
+    val four = spark.range(0, 100, 1, 4).toDF("id")
+    assert(MinhashIndex.collectWithin(four, 1600L).map(_.length) == Some(100))
+    assert(MinhashIndex.collectWithin(four, 1596L).isEmpty)
+    // a skewed split fails its share even though the total would fit
+    val skewed = spark.range(0, 100, 1, 1)
+      .union(spark.range(100, 101, 1, 3)).toDF("id")
+    assert(MinhashIndex.collectWithin(skewed, 1600L * 4 - 1).isEmpty)
+  }
+
+  test("MinhashIndex: a batch over the limit takes the shuffle path " +
+      "and still answers exactly") {
+    import graft.dedup.MinhashIndex
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val root = java.nio.file.Files.createTempDirectory("mhidx_small").toString
+    MinhashIndex.build(mhCorpus, "doc_id", "text", root)
+    val (pairs, stats) = try {
+      // the batch's 64 band rows take 2048 bytes
+      spark.conf.set(key, "1000")
+      MinhashIndex.probe(mhBatch, mhCorpus, "doc_id", "text", root, 0.5)
+    } finally spark.conf.set(key, prev)
+    assert(stats.path == "shuffle" && stats.reason == "batch_bands" &&
+      stats.bandRows == 64L, stats.toString)
+    val (inc, _) = mhIncAndOneShot(java.nio.file.Files
+      .createTempDirectory("mhidx_small_ref").toString)
+    assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getDouble(2))).toSeq.sorted == inc)
   }
 
   test("MinhashIndex: appendBatch writes only the batch's band rows " +

@@ -677,10 +677,11 @@ class PlanDisciplineSpec extends SparkSpec {
       case _ => false
     }
 
-  test("minhash index probe: a small batch broadcasts into ONE " +
-      "map-side scan of the stored bands and of the corpus text; with " +
-      "broadcast off it still plans equi-joins only") {
+  test("minhash index probe: a small batch reads the stored bands and " +
+      "the corpus text map-side with no exchange above either scan; " +
+      "with broadcast off it still plans equi-joins only") {
     import graft.dedup.MinhashIndex
+    import org.apache.spark.sql.execution.SparkPlan
     val dir = Files.createTempDirectory("plan_mhidx").toString
     val corpusPath = s"$dir/corpus_text"
     spark.range(1, 201).selectExpr("id AS doc_id",
@@ -692,42 +693,59 @@ class PlanDisciplineSpec extends SparkSpec {
     // near-copies of the first 20 corpus docs, built apart from the
     // corpus file (every scan of that file is then a corpus-side
     // scan) and backed by an RDD, whose size the planner cannot
-    // estimate — like a batch that arrives through joins or a stream.
-    // Only the probe's own materialisation lets it broadcast.
+    // estimate — like a batch that arrives through joins or a stream
     val batch = spark.createDataFrame(spark.sparkContext.parallelize(
       (1 to 20).map(i => org.apache.spark.sql.Row(i + 1000L,
         s"$i about topic ${i % 7} with shared words and token$i tail"))),
       org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id BIGINT, text STRING"))
-    def planOf() = {
-      val (q, release) = MinhashIndex.batchNearDupsRaw(batch, corpus,
-        "doc_id", "text", s"$dir/index", 0.5)
-      try { q.collect(); q.queryExecution.executedPlan }
-      finally release()
+    /** The executed plan of every SQL action the probe runs. */
+    def plansOf(): Seq[SparkPlan] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            d: Long): Unit = { plans.add(qe.executedPlan); () }
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        val pairs = MinhashIndex.batchNearDups(batch, corpus, "doc_id",
+          "text", s"$dir/index", 0.5)
+        assert(pairs.count() > 0)
+        drainListenerBus()
+      } finally spark.listenerManager.unregister(l)
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toList
     }
-    val plan = planOf()
+    val plans = plansOf()
     for (part <- Seq("bands/runs", "corpus_text")) {
-      val chains = scanChains(plan, part)
-      assert(chains.nonEmpty, s"no scan of $part in:\n$plan")
+      val chains = plans.flatMap(scanChains(_, part))
+      assert(chains.nonEmpty, s"no scan of $part in:\n${plans.mkString("\n")}")
       chains.foreach { c =>
-        val b = firstBarrier(c)
-        assert(b.exists(_.isInstanceOf[
-          org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
-          s"$part must stream into a broadcast join, not an exchange; " +
-            s"first barrier ${b.map(_.nodeName)}:\n$plan")
+        assert(!c.exists(_.isInstanceOf[
+          org.apache.spark.sql.execution.exchange.Exchange]),
+          s"$part must not feed an exchange:\n${c.last}")
       }
     }
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
-    val noBc = try { spark.conf.set(key, "-1"); planOf() }
+    val noBc = try { spark.conf.set(key, "-1"); plansOf() }
       finally spark.conf.set(key, prev)
-    val all = scanChains(noBc, "bands/runs").flatten ++
-      scanChains(noBc, "corpus_text").flatten
+    val all = noBc.flatMap(scanChains(_, "bands/runs")).flatten ++
+      noBc.flatMap(scanChains(_, "corpus_text")).flatten
     assert(all.nonEmpty)
+    assert(all.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.joins.ShuffledJoin]),
+      noBc.mkString("\n"))
     assert(!all.exists(n => n.nodeName.contains("CartesianProduct") ||
-      n.nodeName.contains("BroadcastNestedLoopJoin")), noBc.toString)
-    assert(!noBc.toString.contains("CartesianProduct") &&
-      !noBc.toString.contains("BroadcastNestedLoop"), noBc.toString)
+      n.nodeName.contains("BroadcastNestedLoopJoin")), noBc.mkString("\n"))
+    noBc.foreach { p =>
+      assert(!p.toString.contains("CartesianProduct") &&
+        !p.toString.contains("BroadcastNestedLoop"), p.toString)
+    }
   }
 
   test("pairPsnrVerify: candidate ids broadcast into the corpus scan " +

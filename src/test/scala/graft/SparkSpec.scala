@@ -12,6 +12,37 @@ trait SparkSpec extends AnyFunSuite {
     spark.createDataFrame(rows.asJava,
       org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
 
+  /** Local property marking [[drainListenerBus]]'s marker job. */
+  val DrainKey = "graft.test.drain"
+
+  /** Blocks until the listener bus has delivered every event posted so
+    * far to the shared queue (listeners added with `addSparkListener`
+    * and the session's QueryExecutionListeners): it is FIFO, so the
+    * end of a marker job, tagged with [[DrainKey]], arrives last.
+    */
+  def drainListenerBus(): Unit = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val token = java.util.UUID.randomUUID().toString
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      @volatile private var marker = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(DrainKey) == token))
+          marker = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == marker) done.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(DrainKey, token)
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(DrainKey, null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain within 60 s")
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Collect a single column as a seq (null-safe). */
   def column[T](d: DataFrame, c: String): Seq[Any] =
     d.select(c).collect().toSeq.map(r => if (r.isNullAt(0)) null else r.get(0))
