@@ -107,11 +107,11 @@ object Flagship {
   def fitPipeline(spark: SparkSession, nImages: Long,
       eventsPerImage: Int): Pipeline = {
     val pipe = pipelineDef()
-    val fitInput = fitProjection(pipe,
-      joinedInput(spark, nImages, eventsPerImage))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try { pipe.fit(fitInput); pipe }
-    finally { fitInput.unpersist(false); () }
+    graft.core.Lineage.scoped { sc =>
+      pipe.fit(sc.persist(fitProjection(pipe,
+        joinedInput(spark, nImages, eventsPerImage))))
+      pipe
+    }
   }
 
   def features(spark: SparkSession, nImages: Long,

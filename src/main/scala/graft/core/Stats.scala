@@ -44,27 +44,30 @@ object Stats {
     */
   def weightedMediansMelted(df: DataFrame, columns: Seq[String],
       weight: Column): Map[String, Option[Double]] = {
+    val hits = Lineage.scoped(s =>
+      keyedCumFractions(s, meltedPairs(df, columns, weight))
+      .filter(col("f") >= 0.5)
+      .groupBy(col("k")).agg(min(col("v")).as("med"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+    columns.map(c => c -> hits.get(c)).toMap
+  }
+
+  /** `columns` melted to (k = column name, v, w = `weight`) rows, all
+    * doubles. Zero/null weights are dropped (all-zero weights would
+    * make f = 0/0 = NaN, which Spark's NaN-greatest ordering lets PASS
+    * f >= 0.5; a null weight would NPE the partition totals collect),
+    * and NaN values are excluded like nulls (NaN sorts greatest,
+    * shifting every fraction and winning the upper bracket —
+    * groupedWeightedQuantiles filters it for the same reason).
+    */
+  private def meltedPairs(df: DataFrame, columns: Seq[String],
+      weight: Column): DataFrame = {
     val pair = explode(array(columns.map(c =>
       struct(lit(c).as("k"), col(c).cast("double").as("v"))): _*))
-    // same hygiene as the quantile path: zero/null weights are
-    // dropped (all-zero weights would make f = 0/0 = NaN, which
-    // Spark's NaN-greatest ordering lets PASS f >= 0.5, returning
-    // min(v) instead of None; a null weight would NPE the partition
-    // totals collect), and NaN values are excluded like nulls (NaN
-    // sorts greatest, shifting every fraction and poisoning the
-    // bracket — groupedWeightedQuantiles filters it for the same
-    // reason)
-    val pairs = df.filter(weight.cast("double") =!= 0)
+    df.filter(weight.cast("double") =!= 0)
       .select(pair.as("p"), weight.cast("double").as("w"))
       .filter(col("p.v").isNotNull && !isnan(col("p.v")))
       .select(col("p.k").as("k"), col("p.v").as("v"), col("w"))
-    val (fv, cleanup) = keyedCumFractions(pairs)
-    try {
-      val hits = fv.filter(col("f") >= 0.5)
-        .groupBy(col("k")).agg(min(col("v")).as("med"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      columns.map(c => c -> hits.get(c)).toMap
-    } finally cleanup()
   }
 
   /** Distributed keyed cumulative fractions: input (k, v, w) rows;
@@ -75,16 +78,16 @@ object Stats {
     *   3. per-(key, partition) totals (tiny collect) become broadcast
     *      prefix offsets + per-key totals;
     *   4. Window.partitionBy(k, pid).orderBy(v) running sum + offset.
+    * The result reads a range-partitioned copy persisted in `scope`.
     */
-  private[graft] def keyedCumFractions(pairs: DataFrame)
-      : (DataFrame, () => Unit) = {
+  private[graft] def keyedCumFractions(scope: Lineage.Scope,
+      pairs: DataFrame): DataFrame = {
     val parts = math.max(1,
       pairs.sparkSession.sessionState.conf.numShufflePartitions)
-    val ranged = pairs
+    val ranged = scope.persist(pairs
       .groupBy(col("k"), col("v")).agg(sum(col("w")).as("w"))
       .repartitionByRange(parts, col("k"), col("v"))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__pid", spark_partition_id()))
     val partTotals = ranged.groupBy(col("k"), col("__pid"))
       .agg(sum(col("w")).as("pw"))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
@@ -97,17 +100,15 @@ object Stats {
         .map { case (pid, off) => s"$k#$pid" -> off }.toSeq
     }.toMap
     if (partTotals.isEmpty)
-      return (ranged.select(col("k"), col("v"), lit(0.0).as("f")),
-        () => { ranged.unpersist(false); () })
+      return ranged.select(col("k"), col("v"), lit(0.0).as("f"))
     val offCol = coalesce(element_at(typedLit(offsets),
       concat_ws("#", col("k"), col("__pid"))), lit(0.0))
     val totCol = element_at(typedLit(totals), col("k"))
     val wPart = Window.partitionBy(col("k"), col("__pid"))
       .orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fv = ranged.select(col("k"), col("v"),
+    ranged.select(col("k"), col("v"),
       ((sum(col("w")).over(wPart) + offCol) / totCol).as("f"))
-    (fv, () => { ranged.unpersist(false); () })
   }
 
   /** Exact weighted quantiles of SEVERAL columns in one distributed
@@ -121,17 +122,6 @@ object Stats {
     require(perCol.values.flatten.forall(q => q >= 0 && q <= 1),
       s"quantiles must be in [0,1], got $perCol")
     val cols = perCol.keys.toSeq.sorted
-    val pair = explode(array(cols.map(c =>
-      struct(lit(c).as("k"), col(c).cast("double").as("v"))): _*))
-    val pairs = df.filter(weight.cast("double") =!= 0)
-      .select(pair.as("p"), weight.cast("double").as("__mw"))
-      // NaN excluded like null (NaN sorts GREATEST, so it would both
-      // shift every cumulative fraction and win the v_hi bracket —
-      // the grouped path filters it for the same reason)
-      .filter(col("p.v").isNotNull && !isnan(col("p.v")))
-      .select(col("p.k").as("k"), col("p.v").as("v"),
-        col("__mw").as("w"))
-    val (fv, cleanup) = keyedCumFractions(pairs)
     val slots = cols.flatMap(c => perCol(c).indices.map(i => (c, i)))
     val aggs = slots.zipWithIndex.flatMap { case ((c, i), s) =>
       val q = perCol(c)(i)
@@ -142,9 +132,8 @@ object Stats {
         min(when(in && col("f") >= q, col("f"))).as(s"f_hi_$s"),
         min(when(in && col("f") >= q, col("v"))).as(s"v_hi_$s"))
     }
-    val row =
-      try fv.agg(aggs.head, aggs.tail: _*).head()
-      finally cleanup()
+    val row = Lineage.scoped(s => keyedCumFractions(s,
+      meltedPairs(df, cols, weight)).agg(aggs.head, aggs.tail: _*).head())
     val bySlot = slots.zipWithIndex.map { case ((c, i), s) =>
       (c, i) -> interp(perCol(c)(i),
         Option(row.getAs[java.lang.Double](s"f_lo_$s")).map(_.toDouble),
@@ -289,41 +278,37 @@ object Stats {
       .select(lit(k).as("k"), col(c).cast("double").as("v"),
         lit(1.0).as("w"))
       .filter(col("v").isNotNull && !isnan(col("v")))
-    // BOTH CDFs in one keyed pass (one shuffle, one offsets collect)
-    val (allF, rel) = keyedCumFractions(
-      side(cur, curCol, "c").unionByName(side(ref, refCol, "r")))
-    // the (x -> mapped) table is |distinct cur| rows; localCheckpoint
-    // materializes it eagerly so every upstream persist can release
-    // (the rankAuc pattern) — nothing cached survives this call
-    val mapped =
-      try {
-        val refF = allF.filter(col("k") === "r")
-        val curF = allF.filter(col("k") === "c")
-        val u = refF.select(col("f").as("s"), lit(1).as("isref"),
-            col("f").as("fr"), col("v").as("vr"),
-            lit(null).cast("double").as("x"))
-          .unionByName(curF.select(col("f").as("s"),
-            lit(0).as("isref"), lit(null).cast("double").as("fr"),
-            lit(null).cast("double").as("vr"), col("v").as("x")))
-        val (lo, relLo) = refCarryFill(u, forward = true)
-        val (hi, relHi) = refCarryFill(u, forward = false)
-        try {
-          val q = col("q")
-          lo.join(hi, "x")
-            .select(col("x").as("__qx"),
-              when(col("flo").isNull && col("vlo").isNull &&
-                col("fhi").isNull && col("vhi").isNull,
-                lit(null).cast("double"))
-                .when(col("flo").isNull, col("vhi"))
-                .when(col("fhi").isNull, col("vlo"))
-                .when(col("fhi") === col("flo"), col("vlo"))
-                .otherwise(col("vlo") + (q - col("flo")) /
-                  (col("fhi") - col("flo")) *
-                  (col("vhi") - col("vlo")))
-                .as("__m"))
-            .localCheckpoint(true)
-        } finally { relLo(); relHi() }
-      } finally rel()
+    // the (x -> mapped) table is |distinct cur| rows; it is cut so
+    // every upstream cache can release (the rankAuc pattern) —
+    // nothing cached survives this call
+    val mapped = Lineage.scoped { s =>
+      // BOTH CDFs in one keyed pass (one shuffle, one offsets collect)
+      val allF = keyedCumFractions(s,
+        side(cur, curCol, "c").unionByName(side(ref, refCol, "r")))
+      val refF = allF.filter(col("k") === "r")
+      val curF = allF.filter(col("k") === "c")
+      val u = refF.select(col("f").as("s"), lit(1).as("isref"),
+          col("f").as("fr"), col("v").as("vr"),
+          lit(null).cast("double").as("x"))
+        .unionByName(curF.select(col("f").as("s"),
+          lit(0).as("isref"), lit(null).cast("double").as("fr"),
+          lit(null).cast("double").as("vr"), col("v").as("x")))
+      val lo = refCarryFill(s, u, forward = true)
+      val hi = refCarryFill(s, u, forward = false)
+      val q = col("q")
+      Lineage.cut(lo.join(hi, "x")
+        .select(col("x").as("__qx"),
+          when(col("flo").isNull && col("vlo").isNull &&
+            col("fhi").isNull && col("vhi").isNull,
+            lit(null).cast("double"))
+            .when(col("flo").isNull, col("vhi"))
+            .when(col("fhi").isNull, col("vlo"))
+            .when(col("fhi") === col("flo"), col("vlo"))
+            .otherwise(col("vlo") + (q - col("flo")) /
+              (col("fhi") - col("flo")) *
+              (col("vhi") - col("vlo")))
+            .as("__m")))
+    }
     val vIn = col(curCol).cast("double")
     cur.join(mapped, vIn === col("__qx"), "left")
       .withColumn(out, when(vIn.isNull || isnan(vIn),
@@ -338,18 +323,18 @@ object Stats {
     * (backward) of boundary payloads. Forward order puts a
     * reference BEFORE a probe at equal f (f_r <= q inclusive);
     * backward order the reverse (f_r >= q inclusive). Returns probe
-    * rows only: forward (x, q, flo, vlo), backward (x, fhi, vhi).
+    * rows only: forward (x, q, flo, vlo), backward (x, fhi, vhi),
+    * read from a range-partitioned copy persisted in `scope`.
     */
-  private def refCarryFill(u: DataFrame, forward: Boolean)
-      : (DataFrame, () => Unit) = {
+  private def refCarryFill(scope: Lineage.Scope, u: DataFrame,
+      forward: Boolean): DataFrame = {
     val parts = math.max(1,
       u.sparkSession.sessionState.conf.numShufflePartitions)
     val ord: Seq[Column] =
       if (forward) Seq(col("s").asc, col("isref").desc)
       else Seq(col("s").asc, col("isref").asc)
-    val ranged = u.repartitionByRange(parts, ord: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranged = scope.persist(u.repartitionByRange(parts, ord: _*)
+      .withColumn("__pid", spark_partition_id()))
     val boundary = ranged.filter(col("isref") === 1)
       .groupBy(col("__pid"))
       .agg((if (forward) max_by(struct(col("fr"), col("vr")), col("fr"))
@@ -391,13 +376,11 @@ object Stats {
       coalesce(fill("fr"), carry(frMap)).as("__f"),
       coalesce(fill("vr"), carry(vrMap)).as("__v"))
       .filter(col("isref") === 0)
-    val outDf =
-      if (forward)
-        filled.select(col("x"), col("s").as("q"),
-          col("__f").as("flo"), col("__v").as("vlo"))
-      else
-        filled.select(col("x"), col("__f").as("fhi"),
-          col("__v").as("vhi"))
-    (outDf, () => { ranged.unpersist(false); () })
+    if (forward)
+      filled.select(col("x"), col("s").as("q"),
+        col("__f").as("flo"), col("__v").as("vlo"))
+    else
+      filled.select(col("x"), col("__f").as("fhi"),
+        col("__v").as("vhi"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Lineage
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Connected components over a duplicate-pair graph — the step that
@@ -130,113 +131,105 @@ object Components {
       .filter(col("u") =!= col("v"))
     // both directions once; duplicate pairs collapse (min is
     // idempotent but distinct keeps the per-round join small)
-    val und = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // size probe doubles as the persist materializer (the first round
-    // would otherwise materialize it); decides local finish vs rounds
-    val localLimit = edges.sparkSession.conf
-      .get("spark.graft.cc.localEdgeLimit", LocalEdgeLimitDefault.toString)
-      .toLong
-    val undCount = und.count()
-    if (undCount <= localLimit && localLimit > 0) {
-      try {
-        // pack per-partition primitive arrays so the collect moves
-        // 16 bytes/edge, not boxed Rows
-        val packed = und.rdd.mapPartitions { it =>
-          val us = scala.collection.mutable.ArrayBuilder.make[Long]
-          val vs = scala.collection.mutable.ArrayBuilder.make[Long]
-          it.foreach { r => us += r.getLong(0); vs += r.getLong(1) }
-          Iterator.single((us.result(), vs.result()))
-        }.collect()
-        val m = packed.map(_._1.length).sum
-        val allU = new Array[Long](m)
-        val allV = new Array[Long](m)
-        var off = 0
-        packed.foreach { case (u, v) =>
-          System.arraycopy(u, 0, allU, off, u.length)
-          System.arraycopy(v, 0, allV, off, v.length)
-          off += u.length
-        }
-        val (nodes, comp) = localComponents(allU, allV)
-        val spark = edges.sparkSession
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row](
-          nodes.length)
-        var i = 0
-        while (i < nodes.length) {
-          rows.add(org.apache.spark.sql.Row(nodes(i), nodes(comp(i))))
-          i += 1
-        }
-        // nullable mirrors the iterative path's output schema exactly
-        // (dump/readout schemas must not depend on which path ran)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("component",
-            org.apache.spark.sql.types.LongType, nullable = true)))
-        return spark.createDataFrame(rows, schema)
-      } finally { und.unpersist(false); () }
+    Lineage.scoped { sc =>
+      val und = sc.persist(e.unionByName(
+        e.select(col("v").as("u"), col("u").as("v"))).distinct())
+      // size probe doubles as the persist materializer (the first round
+      // would otherwise materialize it); decides local finish vs rounds
+      val localLimit = edges.sparkSession.conf
+        .get("spark.graft.cc.localEdgeLimit", LocalEdgeLimitDefault.toString)
+        .toLong
+      if (und.count() <= localLimit && localLimit > 0) localFinish(und)
+      else rounds(und, maxIter)
     }
-    // Durable checkpoint dir set -> durable per-round checkpoints
-    // (executor-loss recovery, as documented above). Otherwise the
-    // round-6 LOCAL strategy: LAZY localCheckpoint — the plan is
-    // truncated immediately (a lazily-checkpointed Dataset is already
-    // a LogicalRDD, so the 3-way label self-reference cannot nest
-    // round over round) and the round's ONE convergence count both
-    // materializes the blocks and decides convergence, where the
-    // previous eager localCheckpoint + count paid two actions per
-    // round.
-    val durable =
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def round(df: DataFrame): DataFrame =
-      if (durable) df.checkpoint(true) // eager durable write, as before
-      else df.localCheckpoint(false)
-    try {
-      // seed labels with ROUND ONE's result directly: from comp=id,
-      // the first propagation's min over {id, neighbors' ids, id's
-      // label's label=id} is exactly min(id, min neighbor) — one
-      // map-side-combined groupBy over the edge list instead of a
-      // full join round (round-6 optimization; saves one join + one
-      // convergence action per call)
-      var labels = round(und.groupBy(col("u").as("id"))
-        .agg(least(min(col("v")), first(col("u"))).as("comp")))
-      var iter = 1
-      var converged = false
-      while (!converged && iter < maxIter) {
-        // ONE message relation per round (round-6 optimization: the
-        // neighbor and jump propagations used to be two separate
-        // joins — 2 exchanges + a third convergence join per round):
-        // a row (x, y) means "x hears label(y)". Graph edges (u, v)
-        // give neighbor messages; pointer edges (id, comp) give the
-        // label-of-label jump (join comp -> labels yields
-        // comp(comp(id))). Both resolve through a SINGLE equi-join
-        // against the label table.
-        val msgs = und.unionByName(
-          labels.select(col("id").as("u"), col("comp").as("v")))
-        val heard = msgs
-          .join(labels.select(col("id").as("v"), col("comp")), Seq("v"))
-          .select(col("u").as("id"), col("comp"))
-        // fold the OLD label into the same aggregation so convergence
-        // needs no join: every aggregated id appears in the labels
-        // branch exactly once (edge endpoints and pointer sources are
-        // all labeled), so max(old) recovers its previous label.
-        val next = round(heard
-          .select(col("id"), col("comp"), lit(null).cast("long").as("old"))
-          .unionByName(labels.select(col("id"), col("comp"),
-            col("comp").as("old")))
-          .groupBy(col("id"))
-          .agg(min(col("comp")).as("comp"), max(col("old")).as("old")))
-        // the ONE action of the round: materializes the lazily-
-        // checkpointed round and decides convergence
-        val changed = next.filter(col("comp") =!= col("old")).count()
-        labels = next.select(col("id"), col("comp"))
-        converged = changed == 0
-        iter += 1
-      }
-      require(converged,
-        s"connectedComponents did not converge in $maxIter rounds")
-      labels.select(col("id"), col("comp").as("component"))
-    } finally { und.unpersist(false); () }
+  }
+
+  /** The driver union-find finish over the undirected edge list. */
+  private def localFinish(und: DataFrame): DataFrame = {
+    // pack per-partition primitive arrays so the collect moves
+    // 16 bytes/edge, not boxed Rows
+    val packed = und.rdd.mapPartitions { it =>
+      val us = scala.collection.mutable.ArrayBuilder.make[Long]
+      val vs = scala.collection.mutable.ArrayBuilder.make[Long]
+      it.foreach { r => us += r.getLong(0); vs += r.getLong(1) }
+      Iterator.single((us.result(), vs.result()))
+    }.collect()
+    val m = packed.map(_._1.length).sum
+    val allU = new Array[Long](m)
+    val allV = new Array[Long](m)
+    var off = 0
+    packed.foreach { case (u, v) =>
+      System.arraycopy(u, 0, allU, off, u.length)
+      System.arraycopy(v, 0, allV, off, v.length)
+      off += u.length
+    }
+    val (nodes, comp) = localComponents(allU, allV)
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](
+      nodes.length)
+    var i = 0
+    while (i < nodes.length) {
+      rows.add(org.apache.spark.sql.Row(nodes(i), nodes(comp(i))))
+      i += 1
+    }
+    // nullable mirrors the iterative path's output schema exactly
+    // (dump/readout schemas must not depend on which path ran)
+    und.sparkSession.createDataFrame(rows,
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "id BIGINT, component BIGINT"))
+  }
+
+  /** The label-propagation rounds over the undirected edge list. Each
+    * round is truncated by [[graft.core.Lineage.iterate]]: durable with
+    * a checkpoint dir (executor-loss recovery, as documented above),
+    * else lazily local — a LogicalRDD at once, so the 3-way label
+    * self-reference cannot nest round over round, materialized by the
+    * round's ONE convergence count.
+    */
+  private def rounds(und: DataFrame, maxIter: Int): DataFrame = {
+    // seed labels with ROUND ONE's result directly: from comp=id,
+    // the first propagation's min over {id, neighbors' ids, id's
+    // label's label=id} is exactly min(id, min neighbor) — one
+    // map-side-combined groupBy over the edge list instead of a
+    // full join round (round-6 optimization; saves one join + one
+    // convergence action per call)
+    var labels = Lineage.iterate(und.groupBy(col("u").as("id"))
+      .agg(least(min(col("v")), first(col("u"))).as("comp")))
+    var iter = 1
+    var converged = false
+    while (!converged && iter < maxIter) {
+      // ONE message relation per round (round-6 optimization: the
+      // neighbor and jump propagations used to be two separate
+      // joins — 2 exchanges + a third convergence join per round):
+      // a row (x, y) means "x hears label(y)". Graph edges (u, v)
+      // give neighbor messages; pointer edges (id, comp) give the
+      // label-of-label jump (join comp -> labels yields
+      // comp(comp(id))). Both resolve through a SINGLE equi-join
+      // against the label table.
+      val msgs = und.unionByName(
+        labels.select(col("id").as("u"), col("comp").as("v")))
+      val heard = msgs
+        .join(labels.select(col("id").as("v"), col("comp")), Seq("v"))
+        .select(col("u").as("id"), col("comp"))
+      // fold the OLD label into the same aggregation so convergence
+      // needs no join: every aggregated id appears in the labels
+      // branch exactly once (edge endpoints and pointer sources are
+      // all labeled), so max(old) recovers its previous label.
+      val next = Lineage.iterate(heard
+        .select(col("id"), col("comp"), lit(null).cast("long").as("old"))
+        .unionByName(labels.select(col("id"), col("comp"),
+          col("comp").as("old")))
+        .groupBy(col("id"))
+        .agg(min(col("comp")).as("comp"), max(col("old")).as("old")))
+      // the ONE action of the round: materializes the lazily-
+      // checkpointed round and decides convergence
+      val changed = next.filter(col("comp") =!= col("old")).count()
+      labels = next.select(col("id"), col("comp"))
+      converged = changed == 0
+      iter += 1
+    }
+    require(converged,
+      s"connectedComponents did not converge in $maxIter rounds")
+    labels.select(col("id"), col("comp").as("component"))
   }
 
   /** Duplicate-cluster size histogram — the dedup QUALITY REPORT:

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Lineage
 import graft.io.SnapshotStore
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,32 +17,31 @@ import org.apache.spark.sql.types._
   * corpus text ONLY for the matched candidate ids (a semi-join-
   * restricted scan, not a corpus pass).
   *
-  * Cost honesty: no per-batch step exchanges a stored relation while
-  * the batch fits under `spark.sql.autoBroadcastJoinThreshold`.
-  * `appendBatch` is a fast append: it writes only the batch's band
-  * rows and adds them to the touched buckets' manifest entries, so
-  * stored band files are never rewritten. Its replay guard reads no
-  * stored row when the batch's ids lie above every stored id (the
-  * index tracks per-bucket id bounds); a batch whose ids overlap a
-  * bucket's range has that bucket scanned map-side. `batchNearDups`
-  * on a batch that fits runs three Spark actions and finishes on the
-  * driver: it collects the batch's band rows, collects the stored
-  * band rows sharing a bucket with them in ONE map-side scan of the
-  * stored bands, and collects the candidates' texts in ONE map-side
-  * scan of the corpus (and the batch); the driver pairs, verifies and
-  * returns a local frame. Nothing is persisted, checkpointed or left
-  * to release. Driver memory: each of the three collects holds at
-  * most the threshold's bytes, sized in Spark's UnsafeRow format (the
-  * measure a broadcast takes) by the tasks before they ship, and the
-  * candidate pairs are capped at the threshold over 32 bytes (the
-  * size of the broadcast of both their ids); boxed on the driver the
-  * rows take a small multiple of those bytes. A batch any of whose
-  * pieces is larger (or a session with the threshold at -1) falls
-  * back to a shuffle plan: batch band rows and candidates
+  * Cost honesty: no per-batch step exchanges a stored relation while the
+  * batch fits under `spark.sql.autoBroadcastJoinThreshold`. `appendBatch`
+  * is a fast append: it writes only the batch's band rows and adds them to
+  * the touched buckets' manifest entries, so stored band files are never
+  * rewritten. Its replay guard reads no stored row when the batch's ids lie
+  * above every stored id (the index tracks per-bucket id bounds); a batch
+  * whose ids overlap a bucket's range has that bucket scanned map-side.
+  * `batchNearDups` on a batch that fits runs at most three Spark actions,
+  * reads the batch once and finishes on the driver: it collects the batch's
+  * band rows together with its texts, collects the stored band rows sharing
+  * a bucket with them in ONE map-side scan of the stored bands, and
+  * collects the corpus texts of the candidates outside the batch in ONE
+  * map-side scan of the corpus; the driver pairs, verifies and returns a
+  * local frame. Nothing is persisted, checkpointed or left to release.
+  * Driver memory: each of the three collects holds at most the threshold's
+  * bytes, sized in Spark's UnsafeRow format (the measure a broadcast takes)
+  * by the tasks before they ship, and the candidate pairs are capped at the
+  * threshold over 32 bytes (the size of the broadcast of both their ids);
+  * boxed on the driver the rows take a small multiple of those bytes. A
+  * batch any of whose pieces is larger (or a session with the threshold at
+  * -1) falls back to a shuffle plan: batch band rows and candidates
   * materialised, stored bands and texts joined by the planner's rule
-  * (broadcast when they fit, shuffle otherwise). Either way the two
-  * scans read every stored band row and every corpus text once per
-  * batch: the probe is O(stored) in I/O, O(batch) in shuffle.
+  * (broadcast when they fit, shuffle otherwise). Either way the two scans
+  * read every stored band row and every corpus text once per batch: the
+  * probe is O(stored) in I/O, O(batch) in shuffle.
   * `SnapshotStore.rewriteSnapshot` folds the per-append band
   * directories back into one per bucket.
   *
@@ -199,12 +199,14 @@ object MinhashIndex {
   }
 
   /** The probe finished on the driver, for a batch whose pieces each
-    * fit in `limit` bytes: ONE job collects the batch's band rows, ONE
-    * map-side scan of the stored bands collects the stored rows sharing
-    * a bucket with them (the driver pairs those up, together with the
-    * batch-internal pairs), and ONE scan of corpus ∪ batch text
-    * collects the candidates' texts, which the driver verifies with the
-    * kernels' own [[Dedup.shingleSet]] and [[Dedup.jaccard]]. Nothing
+    * fit in `limit` bytes: ONE job reads the batch once and collects
+    * its band rows with its texts ([[batchRowsOf]]), ONE map-side scan
+    * of the stored bands collects the stored rows sharing a bucket
+    * with them (the driver pairs those up, together with the
+    * batch-internal pairs), and ONE scan of the corpus collects the
+    * texts of the candidates the batch does not hold. The driver
+    * verifies with the kernels' own [[Dedup.shingleSet]] and
+    * [[Dedup.jaccard]]. Nothing
     * is persisted, checkpointed or shuffled. Each collect is sized
     * before it ships ([[collectWithin]]) and the candidate pairs are
     * counted as they are built; the first piece over `limit` returns
@@ -217,8 +219,10 @@ object MinhashIndex {
     val spark = batch.sparkSession
     val sc = spark.sparkContext
     sc.setJobDescription("minhash.probe: batch bands")
-    val newBands = collectWithin(bandRowsOf(batch, idCol, textCol, p),
+    val newBands = collectWithin(batchRowsOf(batch, idCol, textCol, p),
       limit).getOrElse(return Left("batch_bands"))
+    val batchText = newBands.filter(_.getInt(1) == 0)
+      .map(r => r.getLong(0) -> r.getString(3)).toMap
     // per band, the batch rows' bh values sorted, with their ids
     // aligned: a bucket is a run of equal bh
     val (bhs, ids) = {
@@ -262,18 +266,17 @@ object MinhashIndex {
     }
     val verified = new java.util.ArrayList[Row]
     if (cands.nonEmpty) {
-      val candIds =
-        cands.iterator.flatMap(c => Iterator(c._1, c._2)).toArray.sorted
+      // a redone batch repeats corpus ids; their text is the same, so
+      // the batch's copy serves and the corpus scan skips them
+      val candIds = cands.iterator.flatMap(c => Iterator(c._1, c._2))
+        .filterNot(batchText.contains).toArray.distinct.sorted
       val wanted = udf((id: Long) =>
         java.util.Arrays.binarySearch(candIds, id) >= 0)
-      def textsOf(df: DataFrame) = df.select(
-        col(idCol).cast("long").as("id"), col(textCol).cast("string"))
       sc.setJobDescription("minhash.probe: verify")
-      val texts = collectWithin(textsOf(corpus)
-        .unionByName(textsOf(batch)).filter(wanted(col("id"))), limit)
-      // a redone batch repeats corpus ids; their text is the same
-      val text = texts.getOrElse(return Left("texts"))
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      val text = collectWithin(corpus.select(col(idCol).cast("long").as("id"),
+        col(textCol).cast("string")).filter(wanted(col("id"))), limit)
+        .getOrElse(return Left("texts"))
+        .map(r => r.getLong(0) -> r.getString(1)).toMap ++ batchText
       // one shingle set per id_a at a time: the driver holds the
       // texts, not every candidate's shingle set
       var curA = 0L
@@ -294,6 +297,22 @@ object MinhashIndex {
     }
     Right((spark.createDataFrame(verified, PairsSchema), ProbeStats("local",
       "fits", newBands.length, limit, cands.size, verified.size)))
+  }
+
+  /** The batch's `(id, band, bh, text)` band rows in one pass, the
+    * band-0 row of each document carrying its text (`text` null on the
+    * others; a document without band rows can be in no pair). The id
+    * and text ride [[Dedup.bandRows]] as its id column.
+    */
+  private def batchRowsOf(batch: DataFrame, idCol: String,
+      textCol: String, p: Params): DataFrame = {
+    requireIntegralId(batch, idCol)
+    val doc = struct(col(idCol).cast("long").as("id"),
+      col(textCol).cast("string").as("text"))
+    Dedup.bandRows(batch.select(doc.as("__doc"), col(textCol)), "__doc",
+        textCol, p.shingleSize, p.numHashes, p.bands)
+      .select(col("__id.id").as("id"), col("band"), col("bh"),
+        when(col("band") === 0, col("__id.text")).as("text"))
   }
 
   /** The first index of sorted `a` holding a value >= `v`. */
@@ -361,19 +380,19 @@ object MinhashIndex {
     * pairs are materialised first, so the planner sees their real size
     * (and still broadcasts what fits into the stored-band and corpus
     * scans); otherwise the stored bands and texts are joined by
-    * shuffle. The verified pairs come back locally checkpointed, and
-    * every intermediate is released before returning, the durable
-    * candidate copy included.
+    * shuffle. The candidates are staged ([[Lineage.Scope.stage]]:
+    * durable when a checkpoint dir is set). The verified pairs come
+    * back cut, and every intermediate is released before returning,
+    * the durable candidate copy included.
     */
   private def shuffleProbe(batch: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, root: String, threshold: Double,
-      limit: Long, reason: String): (DataFrame, ProbeStats) = {
-    val p = params(root)
-    val spark = batch.sparkSession
-    val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    try {
+      limit: Long, reason: String): (DataFrame, ProbeStats) =
+    Lineage.scoped { sc =>
+      val p = params(root)
+      val spark = batch.sparkSession
       val (newBands, bandRows) =
-        materialise(bandRowsOf(batch, idCol, textCol, p), held)
+        sc.materialise(bandRowsOf(batch, idCol, textCol, p))
       val vsCorpus = bands(spark, root)
         .select(col("id").as("old_id"), col("band"), col("bh"))
         .join(newBands, Seq("band", "bh"))
@@ -388,57 +407,22 @@ object MinhashIndex {
       // three consumers read the candidate pairs (the id restriction
       // and both verify joins); with a checkpoint dir set they are
       // written there, so a lost executor does not fail the query
-      val cands = checkpointed(vsCorpus.unionByName(within).distinct(),
-        held)
+      val cands = sc.stage(vsCorpus.unionByName(within).distinct())
       // candidate ids are bounded by the LSH collision count (repeats
       // are harmless on the build side of a semi-join)
       val candIds = cands.select(col("id_a").as("cid"))
         .unionByName(cands.select(col("id_b").as("cid")))
       // a redone batch repeats corpus ids: one text per id, so each
       // pair is verified once
-      val (texts, _) = materialise(corpus
+      val (texts, _) = sc.materialise(corpus
         .select(col(idCol).cast("long").as(idCol), col(textCol))
         .unionByName(batch
           .select(col(idCol).cast("long").as(idCol), col(textCol)))
         .join(broadcast(candIds), col(idCol) === col("cid"), "left_semi")
-        .dropDuplicates(idCol),
-        held)
-      val pairs = Dedup.verifyJaccard(cands, texts, idCol, textCol,
-        threshold, p.shingleSize).localCheckpoint(true)
+        .dropDuplicates(idCol))
+      val pairs = Lineage.cut(Dedup.verifyJaccard(cands, texts, idCol,
+        textCol, threshold, p.shingleSize))
       (pairs, ProbeStats("shuffle", reason, bandRows, limit, cands.count(),
         pairs.count()))
-    } finally held.reverseIterator.foreach(_())
-  }
-
-  /** Persist and count `df` (its real size then reaches the planner);
-    * its release joins `held`.
-    */
-  private def materialise(df: DataFrame,
-      held: scala.collection.mutable.Buffer[() => Unit]): (DataFrame, Long) = {
-    val m = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    held += (() => { m.unpersist(false); () })
-    (m, m.count())
-  }
-
-  /** [[materialise]], except that with a checkpoint dir set the rows
-    * are written as parquet under it and read back (a durable copy a
-    * lost executor cannot take with it); the release deletes them.
-    */
-  private def checkpointed(df: DataFrame,
-      held: scala.collection.mutable.Buffer[() => Unit]): DataFrame = {
-    val spark = df.sparkSession
-    spark.sparkContext.getCheckpointDir match {
-      case None => materialise(df, held)._1
-      case Some(dir) =>
-        val path = new org.apache.hadoop.fs.Path(dir,
-          s"graft-minhash-cands-${java.util.UUID.randomUUID()}")
-        held += (() => {
-          path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(path, true)
-          ()
-        })
-        df.write.parquet(path.toString)
-        spark.read.parquet(path.toString)
     }
-  }
 }

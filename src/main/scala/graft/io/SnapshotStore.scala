@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.core.Lineage
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, Path}
@@ -107,6 +108,9 @@ object SnapshotStore {
     expr(s"bit_xor(xxhash64(struct(" +
       dataCols.map(c => s"`$c`").mkString(",") + ")))")
 
+  private type Incoming =
+    (Long, Long, Map[String, (String, String, String)], Set[String])
+
   /** Per-bucket (rows, content-hash, column bounding boxes, stats
     * columns holding a null) of an already-bucketed frame — ONE
     * distributed map-side-combined agg regardless of how many stats
@@ -115,9 +119,7 @@ object SnapshotStore {
     * (ANSI-safe, unlike a sum of hashes).
     */
   private def lineageOf(bucketed: DataFrame,
-      statsCols: Seq[String] = Seq.empty)
-      : Map[Int, (Long, Long, Map[String, (String, String, String)],
-        Set[String])] = {
+      statsCols: Seq[String] = Seq.empty): Map[Int, Incoming] = {
     val missing = statsCols.filterNot(bucketed.columns.contains)
     require(missing.isEmpty,
       s"SnapshotStore stats columns not in frame: $missing")
@@ -417,9 +419,8 @@ object SnapshotStore {
     // write observe ONE execution of the input plan — a
     // non-deterministic input (rand, unstable sampling) would otherwise
     // record lineage that disagrees with the stored files
-    val bucketed = df.withColumn(B, bucketExpr)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Lineage.scoped { sc =>
+      val bucketed = sc.persist(df.withColumn(B, bucketExpr))
       val incoming = lineageOf(bucketed, statsCols)
       // resume from the latest manifest INCLUDING incomplete ones: a
       // truncated run's buckets are already on disk and must be skipped
@@ -437,40 +438,51 @@ object SnapshotStore {
       // for pruned additive evolution)
       val sameSchema = prevSnap.forall(v =>
         ddlOf(root, v) == df.schema.toDDL)
-      val carried =
-        if (!sameSchema) Seq.empty[Int]
-        else incoming.keys.toSeq.sorted.filter { b =>
-          prev.get(b).exists(p =>
-            (p.rows, p.xxh) == ((incoming(b)._1, incoming(b)._2)))
-        }
-      val pending = incoming.keys.toSeq.sorted.filterNot(carried.contains)
-      val chosen = pending.take(maxBucketsPerRun)
-      val remaining = pending.drop(maxBucketsPerRun)
+      commit(root, prevSnap.getOrElse(0) + 1, df.schema.toDDL, bucketed,
+        incoming, prev, sameSchema, Seq.empty, maxBucketsPerRun)
+    }
+  }
 
-      val snap = latestAnySnapshot(root).getOrElse(0) + 1
-      val runDir = s"$root/runs/run=$snap"
-      dropStaleRunDir(root, snap)
-      if (chosen.nonEmpty) {
-        bucketed
-          .filter(col(B).isin(chosen: _*))
-          .write.partitionBy(B).mode("append").parquet(runDir)
+  /** The commit [[write]] and [[overwriteBuckets]] share: of the
+    * `incoming` buckets, those whose rows and hash match `prev` are
+    * carried by reference (when `carrySame`), at most `maxWrite` of the
+    * rest are written from `bucketed` into run `snap`, and `kept` plus
+    * those entries are published as its manifest.
+    */
+  private def commit(root: String, snap: Int, ddl: String,
+      bucketed: DataFrame, incoming: Map[Int, Incoming],
+      prev: Map[Int, BucketLineage], carrySame: Boolean,
+      kept: Seq[BucketLineage], maxWrite: Int): WriteResult = {
+    val carried =
+      if (!carrySame) Seq.empty[Int]
+      else incoming.keys.toSeq.sorted.filter { b =>
+        prev.get(b).exists(p =>
+          (p.rows, p.xxh) == ((incoming(b)._1, incoming(b)._2)))
       }
-      val entries =
-        carried.map(b => prev(b).copy(rows = incoming(b)._1,
-          xxh = incoming(b)._2, stats = incoming(b)._3)) ++
-        chosen.map(b => BucketLineage(b, incoming(b)._1, incoming(b)._2,
-          s"$runDir/$B=$b", incoming(b)._3))
-      // schema travels with every snapshot (BEFORE the manifest — the
-      // manifest is the commit point): an EMPTY table state (zero
-      // buckets, no parquet files to infer from) must still read back
-      // as a typed empty frame, not crash on a missing basePath
-      Files.createDirectories(Paths.get(root, "snapshots"))
-      Files.writeString(schemaPath(root, snap), df.schema.toDDL)
-      // a truncated run publishes an INCOMPLETE manifest: readers skip
-      // it by default (latestSnapshot/read), the next write resumes it
-      writeManifest(root, snap, entries, incomplete = remaining.nonEmpty)
-      WriteResult(snap, chosen, carried, remaining)
-    } finally bucketed.unpersist(false)
+    val (chosen, remaining) = incoming.keys.toSeq.sorted
+      .filterNot(carried.contains).splitAt(maxWrite)
+    val runDir = s"$root/runs/run=$snap"
+    dropStaleRunDir(root, snap)
+    if (chosen.nonEmpty) {
+      bucketed.filter(col(B).isin(chosen: _*))
+        .write.partitionBy(B).mode("append").parquet(runDir)
+    }
+    val entries = kept ++
+      carried.map(b => prev(b).copy(rows = incoming(b)._1,
+        xxh = incoming(b)._2, stats = incoming(b)._3)) ++
+      chosen.map(b => BucketLineage(b, incoming(b)._1, incoming(b)._2,
+        s"$runDir/$B=$b", incoming(b)._3))
+    // schema travels with every snapshot (BEFORE the manifest — the
+    // manifest is the commit point): an EMPTY table state (zero
+    // buckets, no parquet files to infer from) must still read back
+    // as a typed empty frame, not crash on a missing basePath
+    Files.createDirectories(Paths.get(root, "snapshots"))
+    Files.writeString(schemaPath(root, snap), ddl)
+    // a truncated run publishes an INCOMPLETE manifest: readers skip
+    // it by default (latestSnapshot/read), the next write resumes it
+    writeManifest(root, snap, entries, incomplete = remaining.nonEmpty)
+    WriteResult(snap, chosen, (kept.map(_.bucket) ++ carried).sorted,
+      remaining)
   }
 
   /** Dynamic-partition-OVERWRITE commit (Iceberg's
@@ -499,9 +511,8 @@ object SnapshotStore {
       s"overwriteBuckets: $root has an incomplete snapshot newer " +
         s"than v$prevSnap — resume that write first")
     val bucketSet = buckets.toSet
-    val bucketed = df.withColumn(B, bucketExpr)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Lineage.scoped { sc =>
+      val bucketed = sc.persist(df.withColumn(B, bucketExpr))
       val incoming = lineageOf(bucketed, statsCols)
       val stray = incoming.keys.filterNot(bucketSet.contains).toSeq
       require(stray.isEmpty,
@@ -522,32 +533,9 @@ object SnapshotStore {
         else e
       val carriedOther = prev.keys.toSeq.sorted
         .filterNot(bucketSet.contains).map(prev).map(pin)
-      val carriedSame =
-        if (evolved) Seq.empty[Int]
-        else incoming.keys.toSeq.sorted.filter { b =>
-          prev.get(b).exists(p =>
-            (p.rows, p.xxh) == ((incoming(b)._1, incoming(b)._2)))
-        }
-      val chosen = incoming.keys.toSeq.sorted
-        .filterNot(carriedSame.contains)
-      val snap = prevSnap + 1
-      val runDir = s"$root/runs/run=$snap"
-      dropStaleRunDir(root, snap)
-      if (chosen.nonEmpty) {
-        bucketed.filter(col(B).isin(chosen: _*))
-          .write.partitionBy(B).mode("append").parquet(runDir)
-      }
-      val entries = carriedOther ++
-        carriedSame.map(b => prev(b).copy(rows = incoming(b)._1,
-          xxh = incoming(b)._2, stats = incoming(b)._3)) ++
-        chosen.map(b => BucketLineage(b, incoming(b)._1,
-          incoming(b)._2, s"$runDir/$B=$b", incoming(b)._3))
-      Files.createDirectories(Paths.get(root, "snapshots"))
-      Files.writeString(schemaPath(root, snap), df.schema.toDDL)
-      writeManifest(root, snap, entries, incomplete = false)
-      WriteResult(snap, chosen,
-        (carriedOther.map(_.bucket) ++ carriedSame).sorted, Seq.empty)
-    } finally bucketed.unpersist(false)
+      commit(root, prevSnap + 1, df.schema.toDDL, bucketed, incoming,
+        prev, !evolved, carriedOther, Int.MaxValue)
+    }
   }
 
   /** Fast-append commit (Iceberg's `AppendFiles`): add `df`'s rows to
@@ -599,11 +587,9 @@ object SnapshotStore {
     val absent = schema.fieldNames.filterNot(df.columns.contains)
     require(absent.isEmpty,
       s"append: incoming rows lack table columns ${absent.mkString(",")}")
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bucketed = conformTo(df, schema).withColumn(B, bucketExpr)
-      .persist(level)
-    val held = scala.collection.mutable.ArrayBuffer(bucketed)
-    try {
+    Lineage.scoped { sc =>
+      val bucketed =
+        sc.persist(conformTo(df, schema).withColumn(B, bucketExpr))
       val prev = manifest(root, prevSnap).map(e => e.bucket -> e).toMap
       val statsCols = prev.values.flatMap(_.stats.keys).toSeq.distinct
       val all = lineageOf(bucketed, statsCols)
@@ -614,49 +600,47 @@ object SnapshotStore {
       val guarded = if (suspect.isEmpty) None else {
         val stored = readEntries(df.sparkSession, root, prevSnap,
           suspect.flatMap(prev(_).paths))
-        val already = stored.join(bucketed, schema.fieldNames
-          .map(c => stored(c) <=> bucketed(c)).reduce(_ && _), "left_semi")
-          .persist(level)
-        held += already
+        val already = sc.persist(stored.join(bucketed, schema.fieldNames
+          .map(c => stored(c) <=> bucketed(c)).reduce(_ && _), "left_semi"))
         if (already.count() == 0) None
-        else Some(bucketed.join(already, schema.fieldNames
+        else Some(sc.persist(bucketed.join(already, schema.fieldNames
           .map(c => bucketed(c) <=> already(c)).reduce(_ && _),
-          "left_anti").persist(level))
+          "left_anti")))
       }
-      held ++= guarded
       val rows = guarded.getOrElse(bucketed)
       val incoming = guarded.fold(all)(lineageOf(_, statsCols))
       if (incoming.isEmpty)
-        return WriteResult(prevSnap, Seq.empty, prev.keys.toSeq.sorted,
-          Seq.empty)
-      // an entry pinned to a schema version with the same columns
-      // (e.g. one that differed only in nullability) hashes alike
-      val cols = schema.fieldNames.toSeq
-      val pinned = incoming.keys.filter(b => prev.get(b)
-        .flatMap(_.schemaV)
-        .exists(sv => tableSchema(root, sv).fieldNames.toSeq != cols))
-        .toSeq.sorted
-      require(pinned.isEmpty,
-        s"append: buckets ${pinned.mkString(",")} still serve files of " +
-          "an older schema version — rewriteSnapshot first")
-      val snap = prevSnap + 1
-      val runDir = s"$root/runs/run=$snap"
-      dropStaleRunDir(root, snap)
-      rows.write.partitionBy(B).mode("append").parquet(runDir)
-      val touched = incoming.toSeq.map { case (b, (n, x, st, _)) =>
-        val dir = s"$runDir/$B=$b"
-        prev.get(b) match {
-          case Some(e) => e.copy(rows = e.rows + n, xxh = e.xxh ^ x,
-            stats = widen(e.stats, st), extra = e.extra :+ dir)
-          case None => BucketLineage(b, n, x, dir, st)
+        WriteResult(prevSnap, Seq.empty, prev.keys.toSeq.sorted, Seq.empty)
+      else {
+        // an entry pinned to a schema version with the same columns
+        // (e.g. one that differed only in nullability) hashes alike
+        val cols = schema.fieldNames.toSeq
+        val pinned = incoming.keys.filter(b => prev.get(b)
+          .flatMap(_.schemaV)
+          .exists(sv => tableSchema(root, sv).fieldNames.toSeq != cols))
+          .toSeq.sorted
+        require(pinned.isEmpty,
+          s"append: buckets ${pinned.mkString(",")} still serve files of " +
+            "an older schema version — rewriteSnapshot first")
+        val snap = prevSnap + 1
+        val runDir = s"$root/runs/run=$snap"
+        dropStaleRunDir(root, snap)
+        rows.write.partitionBy(B).mode("append").parquet(runDir)
+        val touched = incoming.toSeq.map { case (b, (n, x, st, _)) =>
+          val dir = s"$runDir/$B=$b"
+          prev.get(b) match {
+            case Some(e) => e.copy(rows = e.rows + n, xxh = e.xxh ^ x,
+              stats = widen(e.stats, st), extra = e.extra :+ dir)
+            case None => BucketLineage(b, n, x, dir, st)
+          }
         }
+        val carried = prev.keys.toSeq.sorted.filterNot(incoming.contains)
+        Files.writeString(schemaPath(root, snap), ddlOf(root, prevSnap))
+        writeManifest(root, snap, carried.map(prev) ++ touched,
+          incomplete = false)
+        WriteResult(snap, incoming.keys.toSeq.sorted, carried, Seq.empty)
       }
-      val carried = prev.keys.toSeq.sorted.filterNot(incoming.contains)
-      Files.writeString(schemaPath(root, snap), ddlOf(root, prevSnap))
-      writeManifest(root, snap, carried.map(prev) ++ touched,
-        incomplete = false)
-      WriteResult(snap, incoming.keys.toSeq.sorted, carried, Seq.empty)
-    } finally held.foreach(_.unpersist(false))
+    }
   }
 
   /** True when no stored row of a bucket with stats `stored` can equal
@@ -766,10 +750,9 @@ object SnapshotStore {
       if (layoutCols.isEmpty) Seq(col(B))
       else Seq(col(B), Layout.zValue(layoutCols.map(col),
         Layout.rangesOf(df0, layoutCols), bits))
-    val clustered = df0.repartition(col(B))
-      .sortWithinPartitions(sortKeys: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Lineage.scoped { sc =>
+      val clustered = sc.persist(df0.repartition(col(B))
+        .sortWithinPartitions(sortKeys: _*))
       val runDir = s"$root/runs/run=$snap"
       dropStaleRunDir(root, snap)
       clustered.write.partitionBy(B).mode("append").parquet(runDir)
@@ -803,7 +786,7 @@ object SnapshotStore {
         incomplete = false)
       WriteResult(snap, entries.map(_.bucket).sorted, Seq.empty,
         Seq.empty)
-    } finally { clustered.unpersist(false); () }
+    }
   }
 
   /** Snapshot-scoped read: exactly the files the manifest lists. The

@@ -28,7 +28,7 @@ object AspectBatch {
     *
     * Shape: the global rank comes from the two-phase exclusive
     * cumulative count over (bucket, id) —
-    * [[graft.text.Sharding.exclusiveCumSumRaw]], range-partitioned,
+    * [[graft.text.Sharding.exclusiveCumSum]], range-partitioned,
     * no single-partition stage — minus the bucket's start offset,
     * which is a \|buckets\|-row min-aggregation joined back
     * (broadcastable). A `PARTITION BY bucket` window would sort
@@ -160,10 +160,8 @@ object AspectBatch {
       orderCols: Seq[org.apache.spark.sql.Column], outCol: String)
       : DataFrame = {
     graft.core.Ids.requireNoBinary(df, "AspectBatch rank")
-    val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-      df, col(bucketCol) +: orderCols, lit(1L), "__pos")
-    val positioned =
-      try ranked.localCheckpoint(true) finally cleanup()
+    val positioned = graft.text.Sharding.exclusiveCumSum(
+      df, col(bucketCol) +: orderCols, lit(1L) -> "__pos")
     val starts = positioned.groupBy(col(bucketCol).as("__b"))
       .agg(min(col("__pos")).as("__start"))
     positioned

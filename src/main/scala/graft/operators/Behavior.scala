@@ -250,7 +250,7 @@ object Behavior {
     *
     * NTILE at scale WITHOUT a single-partition window: each of the
     * three ranks is the shared two-phase range-partitioned machinery
-    * ([[graft.text.Sharding.exclusiveCumSumRaw]] — range shuffle +
+    * ([[graft.text.Sharding.exclusiveCumSum]] — range shuffle +
     * |partitions|-row offset broadcast + per-partition window), and
     * the bucket is then PURE INTEGER MATH replicating SQL NTILE
     * exactly (first `N mod n` buckets take `N div n + 1` rows):
@@ -276,12 +276,8 @@ object Behavior {
     val rec = base.crossJoin(broadcast(asOf))
       .withColumn("recency_us", col("__asof") - col("last_us"))
       .drop("__asof", "last_us")
-    def rank(d: DataFrame, order: Seq[Column], out: String)
-        : DataFrame = {
-      val (ranked, cleanup) = graft.text.Sharding
-        .exclusiveCumSumRaw(d, order, lit(1L), out)
-      try ranked.localCheckpoint(true) finally cleanup()
-    }
+    def rank(d: DataFrame, order: Seq[Column], out: String) =
+      graft.text.Sharding.exclusiveCumSum(d, order, lit(1L) -> out)
     val s3 = rank(rank(rank(rec,
       Seq(col("recency_us").desc, col(entity)), "__r0"),
       Seq(col("frequency").asc, col(entity)), "__f0"),

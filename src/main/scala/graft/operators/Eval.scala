@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -52,43 +53,40 @@ object Eval {
     // ONE scan: invalid rows fold into the same partial aggregation
     // under __ok=false (their count is the only thing kept); a
     // non-0/1 label on an otherwise-valid row fails loudly
-    val byValue = df
-      .select(valid.as("__ok"),
-        when(valid, v).as("__v"),
-        when(!valid, lit(null).cast("long"))
-          .when(y.isin(0L, 1L), y)
-          .otherwise(raise_error(concat(lit(
-            s"rankAuc: label $labelCol must be 0/1, got "),
-            col(labelCol).cast("string")))).as("__y"))
-      .groupBy(col("__ok"), col("__v"))
-      .agg(sum(col("__y")).as("__np"),
-        count(lit(1)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val excluded = byValue.filter(!col("__ok"))
-      .agg(coalesce(sum(col("__n")), lit(0L)))
-      .head().getLong(0)
-    val levels = byValue.filter(col("__ok"))
-      .withColumn("__nn", col("__n") - col("__np"))
-    val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-      levels, Seq(col("__v")), col("__nn"), "__cum_nn")
-    val out =
-      try {
-        val agg = ranked.agg(
-          sum(col("__np")).as("n_pos"),
-          sum(col("__nn")).as("n_neg"),
-          sum(col("__np") * (lit(2L) * col("__cum_nn") + col("__nn")))
-            .as("auc_num2")).localCheckpoint(true)
-        agg.select(
-          coalesce(col("n_pos"), lit(0L)).as("n_pos"),
-          coalesce(col("n_neg"), lit(0L)).as("n_neg"),
-          lit(excluded).as("n_excluded"),
-          coalesce(col("auc_num2"), lit(0L)).as("auc_num2"),
-          when(col("n_pos") > 0 && col("n_neg") > 0,
-            col("auc_num2").cast("double") /
-              (lit(2.0) * col("n_pos") * col("n_neg")))
-            .as("auc"))
-      } finally { cleanup(); byValue.unpersist(false) }
-    out
+    Lineage.scoped { sc =>
+      val byValue = sc.persist(df
+        .select(valid.as("__ok"),
+          when(valid, v).as("__v"),
+          when(!valid, lit(null).cast("long"))
+            .when(y.isin(0L, 1L), y)
+            .otherwise(raise_error(concat(lit(
+              s"rankAuc: label $labelCol must be 0/1, got "),
+              col(labelCol).cast("string")))).as("__y"))
+        .groupBy(col("__ok"), col("__v"))
+        .agg(sum(col("__y")).as("__np"),
+          count(lit(1)).as("__n")))
+      val excluded = byValue.filter(!col("__ok"))
+        .agg(coalesce(sum(col("__n")), lit(0L)))
+        .head().getLong(0)
+      val levels = byValue.filter(col("__ok"))
+        .withColumn("__nn", col("__n") - col("__np"))
+      val ranked = graft.text.Sharding.exclusiveCumSumRaw(sc,
+        levels, Seq(col("__v")), col("__nn") -> "__cum_nn")
+      val agg = Lineage.cut(ranked.agg(
+        sum(col("__np")).as("n_pos"),
+        sum(col("__nn")).as("n_neg"),
+        sum(col("__np") * (lit(2L) * col("__cum_nn") + col("__nn")))
+          .as("auc_num2")))
+      agg.select(
+        coalesce(col("n_pos"), lit(0L)).as("n_pos"),
+        coalesce(col("n_neg"), lit(0L)).as("n_neg"),
+        lit(excluded).as("n_excluded"),
+        coalesce(col("auc_num2"), lit(0L)).as("auc_num2"),
+        when(col("n_pos") > 0 && col("n_neg") > 0,
+          col("auc_num2").cast("double") /
+            (lit(2.0) * col("n_pos") * col("n_neg")))
+          .as("auc"))
+    }
   }
 
   /** Tie-corrected Spearman rank correlation between two numeric
@@ -119,30 +117,25 @@ object Eval {
   def spearman(df: DataFrame, colA: String, colB: String): DataFrame = {
     val (a, b) = (col(colA).cast("double"), col(colB).cast("double"))
     val valid = a.isNotNull && !isnan(a) && b.isNotNull && !isnan(b)
-    val sel = df.select(valid.as("__ok"), a.as("__a"), b.as("__b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val excluded = sel.filter(!col("__ok")).count()
-    val base = sel.filter(col("__ok"))
-    def ranks(c: String, out: String): DataFrame = {
-      val byValue = base.groupBy(col(c)).agg(count(lit(1)).as("__c"))
-      val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-        byValue, Seq(col(c)), col("__c"), "__cum")
-      try {
-        ranked.select(col(c),
+    val (excluded, agg) = Lineage.scoped { sc =>
+      val sel = sc.persist(
+        df.select(valid.as("__ok"), a.as("__a"), b.as("__b")))
+      val excluded = sel.filter(!col("__ok")).count()
+      val base = sel.filter(col("__ok"))
+      def ranks(c: String, out: String) = graft.text.Sharding
+        .exclusiveCumSum(base.groupBy(col(c)).agg(count(lit(1)).as("__c")),
+          Seq(col(c)), col("__c") -> "__cum")
+        .select(col(c),
           (lit(2L) * col("__cum") + col("__c") + lit(1L)).as(out))
-          .localCheckpoint(true)
-      } finally cleanup()
+      val ra = ranks("__a", "__u")
+      val rb = ranks("__b", "__v")
+      val joined = base.join(ra, "__a").join(rb, "__b")
+      (excluded, Lineage.cut(joined.agg(count(lit(1)).as("n"),
+        sum(col("__u")).as("sum_u"), sum(col("__v")).as("sum_v"),
+        sum(col("__u") * col("__v")).as("sum_uv"),
+        sum(col("__u") * col("__u")).as("sum_u2"),
+        sum(col("__v") * col("__v")).as("sum_v2"))))
     }
-    val ra = ranks("__a", "__u")
-    val rb = ranks("__b", "__v")
-    val joined = base.join(ra, "__a").join(rb, "__b")
-    val agg = joined.agg(count(lit(1)).as("n"),
-      sum(col("__u")).as("sum_u"), sum(col("__v")).as("sum_v"),
-      sum(col("__u") * col("__v")).as("sum_uv"),
-      sum(col("__u") * col("__u")).as("sum_u2"),
-      sum(col("__v") * col("__v")).as("sum_v2"))
-      .localCheckpoint(true)
-    sel.unpersist(false)
     val nd = col("n").cast("double")
     val varU = nd * col("sum_u2") - col("sum_u").cast("double") *
       col("sum_u")
@@ -476,9 +469,9 @@ object Eval {
     val base = df
       .filter(score.isNotNull && y.isNotNull)
       .select(score.as("__s"), y.as("__y"), col(idCol).as("__id"))
-    val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-      base, Seq(col("__s").desc, col("__id").asc), lit(1L), "__r0")
-    val binsRows = try {
+    val binsRows = Lineage.scoped { sc =>
+      val ranked = graft.text.Sharding.exclusiveCumSumRaw(sc,
+        base, Seq(col("__s").desc, col("__id").asc), lit(1L) -> "__r0")
       val withN = ranked.crossJoin(
         broadcast(ranked.agg(count(lit(1)).as("__N"))))
       // SQL NTILE on 1-based rank r over N rows: the first N mod b
@@ -495,7 +488,7 @@ object Eval {
         .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"))
         .orderBy("bin")
         .collect() // bounded: <= nBins aggregated rows
-    } finally cleanup()
+    }
     val totN = binsRows.map(_.getLong(1)).sum
     val totP = binsRows.map(_.getLong(2)).sum
     var cn = 0L; var cp = 0L

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Lineage
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -240,15 +241,13 @@ object StreamingOps {
       emit: DataFrame => Unit): Unit = {
     // the batch feeds several actions below (emptiness, min/max agg,
     // signatures, the survivors join) — evaluate the source once
-    batch.persist()
-    try dedupIngestBatchImpl(batch, batchId, corpusText, idCol,
-      textCol, indexRoot, threshold, emit)
-    finally { batch.unpersist(false); () }
+    Lineage.scoped(sc => dedupIngestBatchImpl(sc, sc.persist(batch),
+      batchId, corpusText, idCol, textCol, indexRoot, threshold, emit))
   }
 
-  private def dedupIngestBatchImpl(batch: DataFrame, batchId: Long,
-      corpusText: DataFrame, idCol: String, textCol: String,
-      indexRoot: String, threshold: Double,
+  private def dedupIngestBatchImpl(sc: Lineage.Scope, batch: DataFrame,
+      batchId: Long, corpusText: DataFrame, idCol: String,
+      textCol: String, indexRoot: String, threshold: Double,
       emit: DataFrame => Unit): Unit = {
     val s = batch.sparkSession
     val commits = java.nio.file.Paths.get(indexRoot, "_ingest_commits")
@@ -335,9 +334,8 @@ object StreamingOps {
     val doomed = pairs
       .filter(col("id_b") >= minBatchId)
       .select(col("id_b").as("__dead")).distinct()
-    val survivors = batch.join(doomed,
-      batch(idCol).cast("long") === col("__dead"), "left_anti")
-      .persist()
+    val survivors = sc.persist(batch.join(doomed,
+      batch(idCol).cast("long") === col("__dead"), "left_anti"))
     emit(survivors) // at-least-once on mid-batch crash redo
     val survText = survivors
       .select(col(idCol).cast("long").as(idCol), col(textCol))
@@ -359,8 +357,6 @@ object StreamingOps {
         idCol, textCol, indexRoot)
     }
     writeAtomic(hwmPath, maxBatchId.toString)
-    survivors.unpersist(false)
-    ()
   }
 
   /** Crash-safe small-file write: the recovery markers and high-water
@@ -1550,13 +1546,13 @@ object StreamingOps {
         if (!batch.isEmpty) {
           // the batch feeds banding twice (query + absorb) — evaluate
           // the source once
-          batch.persist()
-          try {
+          Lineage.scoped { sc =>
+            sc.persist(batch)
             emit(graft.multimodal.PhashIndex.batchNearDups(batch,
               idCol, phashCol, indexRoot, maxDist))
             graft.multimodal.PhashIndex.appendBatch(batch, idCol,
               phashCol, indexRoot)
-          } finally { batch.unpersist(false); () }
+          }
         }
         ()
       }
@@ -1602,8 +1598,8 @@ object StreamingOps {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          batch.persist()
-          try {
+          Lineage.scoped { sc =>
+            sc.persist(batch)
             val cand = graft.multimodal.PhashIndex.batchNearDups(
               batch.select(col(idCol), col(phashCol)),
               idCol, phashCol, indexRoot, maxDist)
@@ -1619,7 +1615,7 @@ object StreamingOps {
             graft.multimodal.PhashIndex.appendBatch(
               batch.select(col(idCol), col(phashCol)), idCol,
               phashCol, indexRoot)
-          } finally { batch.unpersist(false); () }
+          }
         }
         ()
       }

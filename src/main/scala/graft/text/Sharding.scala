@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,60 +13,44 @@ import org.apache.spark.sql.functions._
   */
 object Sharding {
 
-  /** Global EXCLUSIVE cumulative sum of `valueCol` in `orderCol`
-    * order, with no single-partition stage: range-repartition on the
-    * order key, per-partition totals (one tiny collect, |partitions|
-    * rows) become broadcast prefix offsets, then a per-partition
-    * window does the local running sum. Same two-phase shape as
-    * [[graft.core.Stats.keyedCumFractions]].
+  /** Global EXCLUSIVE cumulative sums of `values` (expression ->
+    * output column) in `orderCols` order, with no single-partition
+    * stage: range-repartition on the order key, per-partition totals
+    * (one tiny collect, |partitions| rows) become broadcast prefix
+    * offsets, then a per-partition window does the local running sum.
+    * Same two-phase shape as [[graft.core.Stats.keyedCumFractions]].
+    * Several sums share ONE range shuffle and ONE totals collect (a
+    * dual-constraint packer needs cumulative bytes AND rows). The
+    * result is cut ([[graft.core.Lineage.cut]]), so its range
+    * boundaries can never be recomputed differently.
     *
-    * `orderCol` must be unique (it is the deterministic total order).
+    * `orderCols` must be unique (they are the deterministic total
+    * order).
     */
-  private[graft] def exclusiveCumSum(df: DataFrame, orderCol: String,
-      valueCol: String, outCol: String): DataFrame = {
-    val (frame, cleanup) = exclusiveCumSumRaw(df, Seq(col(orderCol)),
-      col(valueCol), outCol)
-    // materialize before unpersist (caller sees a plain frame whose
-    // range boundaries can never be recomputed differently)
-    try frame.localCheckpoint(true) finally cleanup()
-  }
+  private[graft] def exclusiveCumSum(df: DataFrame, orderCols: Seq[Column],
+      values: (Column, String)*): DataFrame =
+    Lineage.scoped(s =>
+      Lineage.cut(exclusiveCumSumRaw(s, df, orderCols, values: _*)))
 
-  /** The two-phase machinery itself, generalized to ANY sort-order key
-    * list and value expression, PRE-checkpoint: returns the ranked
-    * frame plus a cleanup callback — the caller must materialize
-    * (e.g. `localCheckpoint(true)`) before invoking cleanup, or the
-    * range boundaries could be re-sampled under it. Shared by
-    * [[packShards]] and [[graft.text.TextOps.vocabulary]] (dense rank
-    * = exclusive cumulative count of ones); the no-single-partition
-    * plan property is asserted on THIS frame in ShardingSpec, where
-    * the plan is still visible (a checkpointed frame's executed plan
-    * is just the RDD scan).
+  /** [[exclusiveCumSum]] before the cut: the ranked frame reads a
+    * range-partitioned copy persisted in `scope`. The
+    * no-single-partition plan property is asserted on THIS frame in
+    * ShardingSpec, where the plan is still visible (a cut frame's
+    * executed plan is just the RDD scan).
     */
-  private[graft] def exclusiveCumSumRaw(df: DataFrame,
-      orderCols: Seq[Column], valueCol: Column, outCol: String)
-      : (DataFrame, () => Unit) =
-    exclusiveCumSumsRaw(df, orderCols, Seq(valueCol -> outCol))
-
-  /** N-value generalization: several exclusive running sums over the
-    * SAME order, all carried by ONE range shuffle + ONE per-partition
-    * totals collect (a dual-constraint packer needs cumulative bytes
-    * AND cumulative rows — two passes would double the dominant
-    * exchange for the second column's 8 bytes/row).
-    */
-  private[graft] def exclusiveCumSumsRaw(df: DataFrame,
-      orderCols: Seq[Column], values: Seq[(Column, String)])
-      : (DataFrame, () => Unit) = {
-    require(values.nonEmpty, "exclusiveCumSumsRaw: no value columns")
+  private[graft] def exclusiveCumSumRaw(scope: Lineage.Scope,
+      df: DataFrame, orderCols: Seq[Column], values: (Column, String)*)
+      : DataFrame = {
+    require(values.nonEmpty, "exclusiveCumSumRaw: no value columns")
     // backstop for every rank/pack layout built on this: whole rows
     // ride the range shuffle AND the persist, so a binary payload here
     // is terabytes of needless exchange for an index-only answer
     graft.core.Ids.requireNoBinary(df, "two-phase cumulative layout")
     val parts = math.max(1,
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    val ranged = df
+    val ranged = scope.persist(df
       .repartitionByRange(parts, orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__pid", spark_partition_id()))
     // null values count as 0 (and a partition of only-null values
     // must not NPE the driver-side unboxing)
     val vs = values.map { case (c, _) => coalesce(c.cast("long"), lit(0L)) }
@@ -78,7 +63,7 @@ object Sharding {
       .sortBy(_._1)
     val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val out = values.indices.foldLeft(ranged) { (acc, i) =>
+    values.indices.foldLeft(ranged) { (acc, i) =>
       val offsets: Map[Int, Long] = partTotals.map(_._1)
         .zip(partTotals.map(_._2(i)).scanLeft(0L)(_ + _).init).toMap
       val offCol =
@@ -88,7 +73,6 @@ object Sharding {
       acc.withColumn(values(i)._2,
         coalesce(sum(vs(i)).over(w), lit(0L)) + offCol)
     }.drop("__pid")
-    (out, () => { ranged.unpersist(false); () })
   }
 
   /** Contiguous token-budget sharding: documents are laid out in
@@ -104,7 +88,7 @@ object Sharding {
   def packShards(df: DataFrame, orderCol: String, tokenCol: String,
       budget: Long): DataFrame = {
     require(budget > 0, s"shard budget must be positive, got $budget")
-    exclusiveCumSum(df, orderCol, tokenCol, "cum_before")
+    exclusiveCumSum(df, Seq(col(orderCol)), col(tokenCol) -> "cum_before")
       .withColumn("shard",
         floor(col("cum_before") / lit(budget)).cast("long"))
   }
@@ -137,7 +121,7 @@ object Sharding {
       tokenCol: String, blockSize: Long): DataFrame = {
     require(blockSize > 0, s"block size must be positive, got $blockSize")
     val n = coalesce(col(tokenCol).cast("long"), lit(0L))
-    exclusiveCumSum(df, orderCol, tokenCol, "cum_before")
+    exclusiveCumSum(df, Seq(col(orderCol)), col(tokenCol) -> "cum_before")
       .withColumn("__last_tok",
         col("cum_before") + greatest(n, lit(1L)) - lit(1L))
       .withColumn("start_block", expr(s"cum_before div $blockSize"))
@@ -222,9 +206,8 @@ object Sharding {
       "epochShuffle: input already has a '__eh' column (reserved " +
         "scratch name — it would be silently overwritten)")
     val withHash = df.withColumn("__eh", epochHash(col(idCol), epoch))
-    val (ranked, cleanup) = exclusiveCumSumRaw(withHash,
-      Seq(col("__eh"), col(idCol)), lit(1L), "shuffle_pos")
-    try ranked.drop("__eh").localCheckpoint(true) finally cleanup()
+    Lineage.scoped(s => Lineage.cut(exclusiveCumSumRaw(s, withHash,
+      Seq(col("__eh"), col(idCol)), lit(1L) -> "shuffle_pos").drop("__eh")))
   }
 
   /** Curriculum schedule: the exact global rank of every row under
@@ -251,9 +234,8 @@ object Sharding {
       s"curriculumSchedule: null $scoreCol/$idCol rows (the " +
         "curriculum order must be total — filter or impute first)")
     val n = df.count()
-    val (ranked, cleanup) = exclusiveCumSumRaw(df,
-      Seq(col(scoreCol), col(idCol)), lit(1L), "rank")
-    val out = try ranked.localCheckpoint(true) finally cleanup()
+    val out = exclusiveCumSum(df, Seq(col(scoreCol), col(idCol)),
+      lit(1L) -> "rank")
     if (n == 0) out.withColumn("phase", lit(null).cast("long"))
     else out.withColumn("phase", expr(s"(rank * $phases) div ${n}L"))
   }
@@ -419,7 +401,7 @@ object Sharding {
     * does not reset byte counting — that recurrence resets on its own
     * value, like CUSUM, and would need a global sequential scan); the
     * two-level rule is prefix-decomposable, so it costs ONE range
-    * shuffle for BOTH running sums ([[exclusiveCumSumsRaw]]) plus a
+    * shuffle for BOTH running sums ([[exclusiveCumSum]]) plus a
     * |byte-spans|-row start-offset broadcast, at any corpus size.
     * Integer `div` keeps boundaries exact past 2^53 cumulative bytes.
     * Adds `cum_bytes_before`, `seq` (0-based layout position),
@@ -431,9 +413,8 @@ object Sharding {
       bytesCol: String, byteBudget: Long, maxRows: Long): DataFrame = {
     require(byteBudget > 0, s"byteBudget must be positive, got $byteBudget")
     require(maxRows > 0, s"maxRows must be positive, got $maxRows")
-    val (frame, cleanup) = exclusiveCumSumsRaw(df, Seq(col(orderCol)),
-      Seq(col(bytesCol) -> "cum_bytes_before", lit(1L) -> "seq"))
-    val out = try frame.localCheckpoint(true) finally cleanup()
+    val out = exclusiveCumSum(df, Seq(col(orderCol)),
+      col(bytesCol) -> "cum_bytes_before", lit(1L) -> "seq")
     val spans = out
       .withColumn("byte_shard",
         expr(s"cum_bytes_before div ${byteBudget}L"))

@@ -407,9 +407,8 @@ object TextOps {
       .filter(col("count") >= minCount)
     // dense rank = exclusive cumulative count of ones in the target
     // order — the shared two-phase machinery does the rest
-    val (ranked, cleanup) = graft.text.Sharding.exclusiveCumSumRaw(
-      counts, Seq(col("count").desc, col("term")), lit(1L), "id")
-    try ranked.localCheckpoint(true) finally cleanup()
+    graft.text.Sharding.exclusiveCumSum(
+      counts, Seq(col("count").desc, col("term")), lit(1L) -> "id")
   }
 
   /** VOCABULARY GROWTH curve (Heaps-law audit) — how many tokens

@@ -475,7 +475,11 @@ class DedupKnnSpec extends SparkSpec {
     mhCorpus.write.parquet(s"$dir/corpus")
     val corpus = spark.read.parquet(s"$dir/corpus")
     MinhashIndex.build(corpus, "doc_id", "text", s"$dir/index")
-    val batch = mhBatch
+    val sc = spark.sparkContext
+    // counts the batch rows the probe's plans evaluate
+    val seen = sc.longAccumulator("batch rows read")
+    val tap = udf((id: Long) => { seen.add(1L); id }).asNondeterministic()
+    val batch = mhBatch.withColumn("doc_id", tap(col("doc_id")))
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val shuffleFromScans =
       new java.util.concurrent.ConcurrentLinkedQueue[String]
@@ -491,7 +495,6 @@ class DedupKnnSpec extends SparkSpec {
           shuffleFromScans.add(e.stageInfo.name)
       }
     }
-    val sc = spark.sparkContext
     sc.setJobDescription("caller")
     val (pairs, stats) = try {
       sc.addSparkListener(l)
@@ -513,6 +516,8 @@ class DedupKnnSpec extends SparkSpec {
       "minhash.probe: stored bands", "minhash.probe: verify"), s"$jobs")
     assert(shuffleFromScans.isEmpty,
       s"stages reading files wrote shuffle: $shuffleFromScans")
+    assert(seen.value == mhBatch.count(),
+      s"${seen.value} batch rows evaluated for ${mhBatch.count()} rows")
   }
 
   test("MinhashIndex.collectWithin: ships the rows only while each " +

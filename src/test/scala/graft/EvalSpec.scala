@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Eval
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, udf}
 
 class EvalSpec extends SparkSpec {
 
@@ -148,6 +148,24 @@ class EvalSpec extends SparkSpec {
     val exp = (n * suv - su * sv) /
       (math.sqrt(n * su2 - su * su) * math.sqrt(n * sv2 - sv * sv))
     assert(math.abs(r.getDouble(7) - exp) < 1e-15)
+  }
+
+  test("spearman: an action failing after the selection is persisted " +
+      "leaves no cache behind") {
+    // the row error fires in the first action over the persisted
+    // selection (its count of excluded rows); a range source, since
+    // the optimizer would evaluate the UDF over a local relation
+    // while planning the persist
+    val boom = udf((x: Double) =>
+      if (x > 2.0) throw new IllegalStateException("bad row") else x)
+    val d = spark.range(1, 5).select(
+      boom(col("id").cast("double")).as("a"),
+      col("id").cast("double").as("b"))
+    spark.catalog.clearCache()
+    val ex = intercept[Exception](Eval.spearman(d, "a", "b").collect())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("bad row")), ex)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("spearman: constant column -> null rho (undefined, not 0)") {

@@ -71,17 +71,19 @@ class ShardingSpec extends SparkSpec {
     val d = df("id BIGINT, tok BIGINT",
       (1L to 100L).map(i => Row(i, 10L)))
     // single-key path (packShards' shape)
-    val (f1, c1) = Sharding.exclusiveCumSumRaw(d, Seq(col("id")),
-      col("tok"), "c")
-    val p1 = f1.queryExecution.executedPlan.toString
-    assert(!p1.contains("SinglePartition"), p1.take(800))
-    c1()
+    graft.core.Lineage.scoped { s =>
+      val f1 = Sharding.exclusiveCumSumRaw(s, d, Seq(col("id")),
+        col("tok") -> "c")
+      val p1 = f1.queryExecution.executedPlan.toString
+      assert(!p1.contains("SinglePartition"), p1.take(800))
+    }
     // multi-sort-key path (vocabulary's dense-rank shape)
-    val (f2, c2) = Sharding.exclusiveCumSumRaw(d,
-      Seq(col("tok").desc, col("id")), lit(1L), "rank")
-    val p2 = f2.queryExecution.executedPlan.toString
-    assert(!p2.contains("SinglePartition"), p2.take(800))
-    c2()
+    graft.core.Lineage.scoped { s =>
+      val f2 = Sharding.exclusiveCumSumRaw(s, d,
+        Seq(col("tok").desc, col("id")), lit(1L) -> "rank")
+      val p2 = f2.queryExecution.executedPlan.toString
+      assert(!p2.contains("SinglePartition"), p2.take(800))
+    }
   }
 
   test("sampleExactPerStratum: exact counts, matches the sort rule, " +

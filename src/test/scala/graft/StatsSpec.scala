@@ -150,12 +150,12 @@ class StatsSpec extends SparkSpec {
     import spark.implicits._
     val pairs = (1 to 100).map(i => ("x", i.toDouble, 1.0))
       .toDF("k", "v", "w")
-    val (fv, cleanup) = Stats.keyedCumFractions(pairs)
-    try {
+    graft.core.Lineage.scoped { s =>
+      val fv = Stats.keyedCumFractions(s, pairs)
       val plan = fv.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange SinglePartition"),
         s"single-partition stage in cum-frac plan:\n$plan")
-    } finally cleanup()
+    }
   }
 
   test("weighted median = min value with cum-weight-frac >= 0.5") {

@@ -168,6 +168,28 @@ class StreamingSpec extends SparkSpec {
     assert(ex.getMessage.contains("monotone"))
   }
 
+  test("dedupIngestBatch: a throwing emit leaves no cached batch or " +
+      "survivors behind") {
+    import spark.implicits._
+    val corpus = (1L to 6L).map(i => (i,
+      s"corpus document $i sharing many words plus token$i end"))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files
+      .createTempDirectory("ingest-leak").toString
+    graft.dedup.MinhashIndex.build(corpus, "doc_id", "text", root)
+    val batch = Seq(
+      (201L, "totally new content aa bb cc dd ee ff gg hh"))
+      .toDF("doc_id", "text")
+    spark.catalog.clearCache()
+    val ex = intercept[IllegalStateException] {
+      StreamingOps.dedupIngestBatch(batch, 0L, corpus, "doc_id", "text",
+        root, threshold = 0.5,
+        emit = _ => throw new IllegalStateException("emit failed"))
+    }
+    assert(ex.getMessage == "emit failed")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("as-of enrich carries MICROSECOND feature timestamps exactly") {
     // regression (caught by the q109 oracle): the carry state stored
     // Timestamp.getTime (epoch millis), truncating Spark-native µs on
