@@ -71,12 +71,20 @@ class Pipeline(val steps: Seq[(String, Transformer)]) extends Serializable {
       // What this buys is overlapped job-scheduling/collect latency:
       // a pipeline of k small fit jobs pays ~1 job latency, not k
       // (the fit passes over a cached input are often latency-bound,
-      // not throughput-bound).
+      // not throughput-bound). Each future runs with the caller's local
+      // properties (job description, group, custom keys): a pooled
+      // thread would otherwise label the jobs with whatever it
+      // inherited when it was created.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
+      import org.apache.spark.sql.graftbridge.LocalProperties
+      val sc = cur.sparkSession.sparkContext
+      val props = LocalProperties.capture(sc)
+      def launch(body: => Unit): Future[Unit] =
+        Future(LocalProperties.within(sc, props)(body))
       val fusedJob: Option[Future[Unit]] =
-        if (withExprs.nonEmpty) Some(Future {
+        if (withExprs.nonEmpty) Some(launch {
           val aliased = withExprs.flatMap(_._2).zipWithIndex
             .map { case (e, k) => e.as(s"__fused$k") }
           val row = cur.agg(aliased.head, aliased.tail: _*).head()
@@ -86,7 +94,7 @@ class Pipeline(val steps: Seq[(String, Transformer)]) extends Serializable {
             off += exprs.size
           }
         }) else None
-      val seqJobs = sequential.map(t => Future { t.fit(cur); () })
+      val seqJobs = sequential.map(t => launch { t.fit(cur); () })
       (fusedJob.toSeq ++ seqJobs)
         .foreach(Await.result(_, Duration.Inf))
       cur = run.foldLeft(cur)((d, t) => t.transform(d))

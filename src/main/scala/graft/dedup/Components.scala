@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.core.Lineage
+import graft.core.{DriverFinish, Lineage}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions._
   * chains every round, giving O(log n) rounds on any graph — the same
   * doubling that powers the MapReduce CC algorithms (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14).
+  *
+  * A graph whose edges fit the driver bound runs no round at all: it is
+  * finished on the driver by union-find (see [[connectedComponents]]).
   *
   * Scale shape per round: two equi-joins + one min-groupBy, ALL
   * hash-partitioned on node id — no broadcast of the label table, no
@@ -48,31 +51,6 @@ import org.apache.spark.sql.functions._
   * co-partitioned (old, new) join.
   */
 object Components {
-
-  /** Edge-count bound (rows of the deduped undirected relation) below
-    * which components are finished on the DRIVER by union-find instead
-    * of iterative rounds — the standard endgame of the MapReduce CC
-    * algorithms (Kiveris et al., SoCC'14: iterate while the graph is
-    * large, finish locally once it fits in one machine). Near-dup pair
-    * graphs are SPARSE relative to the corpus (most documents are in
-    * no pair), so in practice the whole graph is often already below
-    * the bound and every per-round driver round-trip (2 exchanges + an
-    * action) is pure overhead. 2M rows of two longs is ~32 MB packed —
-    * broadcast-scale, the same order as a routine auto-broadcast
-    * build side. Override with `spark.graft.cc.localEdgeLimit`
-    * (0 disables the local finish; raise it on drivers with room, the
-    * collect is packed primitive arrays, 16 bytes/edge).
-    *
-    * Driver heap of the local finish, per edge row at the bound: the
-    * packed collect (16 B) and the union-find's sorted id, parent and
-    * component arrays (~32 B), then the output built as one boxed
-    * `Row(id, component)` per node in a `java.util.ArrayList` (~100 B
-    * each: the row, its value array and two boxed longs) and converted
-    * into the returned frame's local relation (~40 B per node more).
-    * At the default 2M that is a few hundred MB transient; the local
-    * relation (tens of MB) lives as long as the returned frame.
-    */
-  private val LocalEdgeLimitDefault = 2000000L
 
   /** Driver union-find over a packed edge list: id -> min component
     * id, exactly the fixpoint the iterative rounds converge to. Dense
@@ -121,6 +99,26 @@ object Components {
     * `component` = the minimum node id in the component. Isolated
     * nodes (absent from `edges`) are absent from the output.
     *
+    * A graph whose edge rows fit the driver bound
+    * ([[graft.core.DriverFinish]]: `spark.sql.autoBroadcastJoinThreshold`
+    * bytes of `(u, v)` UnsafeRows, 24 B per edge, so about 440k edges at
+    * the 10 MB default) is finished on the DRIVER by union-find in ONE
+    * job (none when the edges are already a local relation) — the
+    * standard endgame of the MapReduce CC algorithms (Kiveris et al.,
+    * SoCC'14: iterate while the graph is large, finish locally once it
+    * fits in one machine). Near-dup pair graphs are sparse relative to
+    * the corpus, so in practice the whole graph fits and every
+    * per-round driver round-trip would be pure overhead. A larger graph
+    * (or a session with the threshold at -1) runs the iterative rounds
+    * over the edges the collect cached.
+    *
+    * Driver heap of the local finish: the collected edge rows (at most
+    * the bound), the union-find's packed edge, sorted id, parent and
+    * component arrays (~48 B per edge), then one `(id, component)` row
+    * per node (~100 B boxed) converted into the returned frame's local
+    * relation (~40 B per node more), which lives as long as the
+    * returned frame.
+    *
     * Ids must be integral (cast to long internally).
     */
   def connectedComponents(edges: DataFrame, srcCol: String,
@@ -129,53 +127,36 @@ object Components {
       .select(col(srcCol).cast("long").as("u"),
         col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    // both directions once; duplicate pairs collapse (min is
-    // idempotent but distinct keeps the per-round join small)
-    Lineage.scoped { sc =>
-      val und = sc.persist(e.unionByName(
-        e.select(col("v").as("u"), col("u").as("v"))).distinct())
-      // size probe doubles as the persist materializer (the first round
-      // would otherwise materialize it); decides local finish vs rounds
-      val localLimit = edges.sparkSession.conf
-        .get("spark.graft.cc.localEdgeLimit", LocalEdgeLimitDefault.toString)
-        .toLong
-      if (und.count() <= localLimit && localLimit > 0) localFinish(und)
-      else rounds(und, maxIter)
+    DriverFinish.described(edges.sparkSession, "dedup.components") {
+      Lineage.scoped { sc =>
+        // edges already on the driver need no cache; any other edge
+        // plan is cached by the collect's job for the rounds to read
+        val kept = if (DriverFinish.held(e).isDefined) e else sc.persist(e)
+        DriverFinish.collect(kept, "dedup.components") match {
+          case Some(rows) => localFinish(edges.sparkSession, rows)
+          // both directions once; duplicate pairs collapse (min is
+          // idempotent but distinct keeps the per-round join small)
+          case None => rounds(sc.persist(kept.unionByName(
+            kept.select(col("v").as("u"), col("u").as("v"))).distinct()),
+            maxIter)
+        }
+      }
     }
   }
 
-  /** The driver union-find finish over the undirected edge list. */
-  private def localFinish(und: DataFrame): DataFrame = {
-    // pack per-partition primitive arrays so the collect moves
-    // 16 bytes/edge, not boxed Rows
-    val packed = und.rdd.mapPartitions { it =>
-      val us = scala.collection.mutable.ArrayBuilder.make[Long]
-      val vs = scala.collection.mutable.ArrayBuilder.make[Long]
-      it.foreach { r => us += r.getLong(0); vs += r.getLong(1) }
-      Iterator.single((us.result(), vs.result()))
-    }.collect()
-    val m = packed.map(_._1.length).sum
-    val allU = new Array[Long](m)
-    val allV = new Array[Long](m)
-    var off = 0
-    packed.foreach { case (u, v) =>
-      System.arraycopy(u, 0, allU, off, u.length)
-      System.arraycopy(v, 0, allV, off, v.length)
-      off += u.length
-    }
-    val (nodes, comp) = localComponents(allU, allV)
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](
-      nodes.length)
-    var i = 0
-    while (i < nodes.length) {
-      rows.add(org.apache.spark.sql.Row(nodes(i), nodes(comp(i))))
-      i += 1
-    }
+  /** The driver union-find finish over the collected `(u, v)` rows. */
+  private def localFinish(spark: org.apache.spark.sql.SparkSession,
+      edges: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
+    val us = edges.iterator.map(_.getLong(0)).toArray
+    val vs = edges.iterator.map(_.getLong(1)).toArray
+    val (nodes, comp) = localComponents(us, vs)
     // nullable mirrors the iterative path's output schema exactly
     // (dump/readout schemas must not depend on which path ran)
-    und.sparkSession.createDataFrame(rows,
+    DriverFinish.frame(spark,
       org.apache.spark.sql.types.StructType.fromDDL(
-        "id BIGINT, component BIGINT"))
+        "id BIGINT, component BIGINT"),
+      nodes.indices.map(i => org.apache.spark.sql.catalyst.InternalRow(
+        nodes(i), nodes(comp(i)))))
   }
 
   /** The label-propagation rounds over the undirected edge list. Each

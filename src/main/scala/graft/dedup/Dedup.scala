@@ -1,6 +1,8 @@
 package graft.dedup
 
+import graft.core.DriverFinish
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -11,7 +13,12 @@ import org.apache.spark.sql.expressions.Window
   *   - exact: hash-partition on the content key, keep rank-1;
   *   - MinHash: signatures are per-row projections (no shuffle), the
   *     LSH band join shuffles only (band, bandHash) pairs — tiny vs the
-  *     corpus — and candidate verification joins back by id;
+  *     corpus — and candidate verification joins back by id. A batch
+  *     whose band rows fit the driver bound skips both shuffles: ONE
+  *     bounded collect each for the band rows and the candidates' texts
+  *     ([[graft.core.DriverFinish]]), then the driver pairs and
+  *     verifies (see [[lshCandidates]], [[verifyJaccard]]); past the
+  *     bound, the joins run as they always did;
   *   - SimHash: per-row 64-bit signature, near-dup candidates via
   *     banded equality on signature quarters (Hamming<=3 within bands).
   */
@@ -25,17 +32,28 @@ object Dedup {
     * incidentally spread the rows). Round-robin repartition to
     * defaultParallelism ONLY when the input is clearly narrower —
     * scale-adaptive (derived from the session's parallelism, never a
-    * constant) and a no-op on real multi-split tables. Use ONLY on
-    * plain scan/projection inputs: the `.rdd` partition probe builds
-    * (and under AQE can partially execute) the physical plan, so
-    * probing a join subtree costs more than it saves — the cheap
-    * kernels (minhash/shingle-set/winnow/signals) therefore skip it;
-    * the md5-heavy span gram kernel is the one measured to need it
-    * (sf1 span 4.8 s single-core -> 2.5 s spread).
+    * constant) and a no-op on real multi-split tables. The partition
+    * count is read only from a plain input, one whose physical plan has
+    * no exchange and no cached relation: counting those partitions
+    * builds the scan's splits and executes nothing. Any other input (a
+    * join, an aggregate, a cached frame) is returned as it is, since
+    * reading its partition count would run its stages (AQE) or build
+    * its cache. The cheap kernels (minhash/shingle-set/winnow/signals)
+    * skip the spread; the md5-heavy span gram kernel is the one
+    * measured to need it (sf1 span 4.8 s single-core -> 2.5 s spread).
     */
   private[graft] def spreadForKernel(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plain = !df.queryExecution.executedPlan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange |
+          _: InMemoryTableScanExec => true
+      case _ => false
+    }
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target)
+    if (plain && df.rdd.getNumPartitions * 2 <= target)
+      df.repartition(target)
     else df
   }
 
@@ -251,21 +269,118 @@ object Dedup {
   }
 
   /** LSH candidate pairs: self-join the band rows on (band, bucket).
-    * Returns (id_a, id_b), id_a < id_b, distinct. The self-join's two
-    * sides alias the SAME pre-partitioned plan, so Spark reuses one
-    * shuffle (ReusedExchange) instead of computing signatures twice.
+    * Returns (id_a, id_b), id_a < id_b, distinct.
+    *
+    * Scale shape: each document yields at most `bands` band rows of 32
+    * UnsafeRow bytes, so the input's row count
+    * ([[graft.core.DriverFinish.rowCount]]: no job for a cached or local
+    * input, else one) bounds them before any signature is computed. When
+    * that bound fits `spark.sql.autoBroadcastJoinThreshold` (~40k
+    * documents at 8 bands under the 10 MB default) and the ids are
+    * integral, ONE bounded collect ([[graft.core.DriverFinish]]) brings
+    * the band rows to the driver, which pairs up each bucket
+    * ([[Buckets]]) and returns a local frame with the distributed path's
+    * schema and rows. The pairs are capped at the same bound (24 B
+    * each), so a hot bucket falls back (computing the signatures of this
+    * small input again). Otherwise the self-join runs: its
+    * two sides alias the SAME pre-partitioned plan, so Spark reuses one
+    * shuffle (ReusedExchange) instead of computing signatures twice. An
+    * input over the bound thus has its signatures computed once, by the
+    * self-join; nothing is cached. With the threshold at -1, or
+    * non-integral ids, the self-join is returned as it is, with no job.
     */
   def lshCandidates(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8)
       : DataFrame = {
-    val banded =
-      bandRows(df, idCol, textCol, shingleSize, numHashes, bands)
-      .repartition(col("band"), col("bh"))
-    val a = banded.select(col("__id").as("id_a"), col("band"), col("bh"))
-    val b = banded.select(col("__id").as("id_b"), col("band"), col("bh"))
-    a.join(b, Seq("band", "bh"))
+    val spark = df.sparkSession
+    val rows = bandRows(df, idCol, textCol, shingleSize, numHashes, bands)
+    val parted = rows.repartition(col("band"), col("bh"))
+    val a = parted.select(col("__id").as("id_a"), col("band"), col("bh"))
+    val b = parted.select(col("__id").as("id_b"), col("band"), col("bh"))
+    val selfJoin = a.join(b, Seq("band", "bh"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
+    val idType = rows.schema("__id").dataType
+    val lim = DriverFinish.limit(spark)
+    if (lim <= 0 || !DriverFinish.isIntegral(idType)) selfJoin
+    else DriverFinish.described(spark, "dedup.candidates") {
+      DriverFinish.collectAtMost(rows, "dedup.candidates",
+          DriverFinish.rowCount(df) * bands * 32)
+        .flatMap { got =>
+          val found = new Pairs(lim / 24)
+          val full = !new Buckets(bands, got.iterator.filter(!_.isNullAt(0))
+            .map(r => (r.getInt(1), r.getLong(2),
+              DriverFinish.keyAt(r, 0, idType)))).pairUp(found)
+          if (full) None else Some(found.all)
+        }
+        .fold(selfJoin)(ps => DriverFinish.frame(spark, selfJoin.schema,
+          ps.toSeq.map { case (a, b) =>
+            InternalRow(DriverFinish.key(a, idType),
+              DriverFinish.key(b, idType)) }))
+    }
+  }
+
+  /** Distinct candidate pairs `(a, b)`, `a < b`, built on the driver;
+    * [[add]] answers false once there are more than `max`.
+    */
+  private[graft] final class Pairs(max: Long) {
+    private val set = scala.collection.mutable.HashSet.empty[(Long, Long)]
+
+    def add(a: Long, b: Long): Boolean = {
+      if (a != b) set += (if (a < b) (a, b) else (b, a))
+      set.size <= max
+    }
+
+    /** The pairs, sorted by `a` then `b`. */
+    def all: Array[(Long, Long)] = set.toArray.sorted
+  }
+
+  /** `(band, bh, id)` band rows on the driver, per band sorted by `bh`
+    * then id (`bhs(band)` and `ids(band)` aligned): a bucket is a run of
+    * equal `bh`.
+    */
+  private[graft] final class Buckets(bands: Int,
+      rows: Iterator[(Int, Long, Long)]) {
+    val (bhs, ids): (Array[Array[Long]], Array[Array[Long]]) = {
+      val byBand = Array.fill(bands)(
+        scala.collection.mutable.ArrayBuffer.empty[(Long, Long)])
+      rows.foreach { case (band, bh, id) => byBand(band) += ((bh, id)) }
+      val sorted = byBand.map(_.toArray.sorted)
+      (sorted.map(_.map(_._1)), sorted.map(_.map(_._2)))
+    }
+
+    /** Adds every pair within one bucket to `to`; false once it is full. */
+    def pairUp(to: Pairs): Boolean =
+      (0 until bands).forall { band =>
+        val (bh, id) = (bhs(band), ids(band))
+        bh.indices.forall { i =>
+          var j = i + 1
+          var room = true
+          while (room && j < bh.length && bh(j) == bh(i)) {
+            room = to.add(id(i), id(j))
+            j += 1
+          }
+          room
+        }
+      }
+
+    /** Adds `id` paired with each row of bucket `(band, bh)` to `to`;
+      * false once it is full.
+      */
+    def pairWith(band: Int, bh: Long, id: Long, to: Pairs): Boolean = {
+      val b = bhs(band)
+      var (lo, hi) = (0, b.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (b(mid) < bh) lo = mid + 1 else hi = mid
+      }
+      var room = true
+      while (room && lo < b.length && b(lo) == bh) {
+        room = to.add(id, ids(band)(lo))
+        lo += 1
+      }
+      room
+    }
   }
 
   /** Verified near-dups: LSH candidates with true shingle-set Jaccard
@@ -322,12 +437,21 @@ object Dedup {
   /** Exact shingle-Jaccard verification of candidate pairs against a
     * `(id, text)` source; shared by the one-shot near-dup path and the
     * incremental index.
+    *
+    * Scale shape: candidates already held on the driver (a local
+    * relation, as [[lshCandidates]]' small path returns) with integral
+    * ids are verified there: ONE bounded collect ([[textsOf]]) brings the
+    * texts of the candidate ids, and the driver scores each pair
+    * ([[jaccardLocal]]), returning a local frame with the distributed
+    * path's schema and rows. When those texts do not fit, or the
+    * candidates are a distributed frame, both shingle sets join to the
+    * pairs and a map-side kernel scores them.
     */
   def verifyJaccard(cands: DataFrame, texts: DataFrame, idCol: String,
       textCol: String, threshold: Double, shingleSize: Int)
       : DataFrame = {
     val sh = shingleSetsOf(texts, idCol, textCol, shingleSize)
-    jaccardOfPairs(cands
+    val dist = jaccardOfPairs(cands
       .join(sh.withColumnRenamed("__id", "id_a")
         .withColumnRenamed("__sh", "sh_a"), Seq("id_a"))
       .join(sh.withColumnRenamed("__id", "id_b")
@@ -338,6 +462,73 @@ object Dedup {
       .repartition(
         texts.sparkSession.sessionState.conf.numShufflePartitions))
       .filter(col("jaccard") >= threshold)
+    val (ia, ib) = (cands.schema.fieldIndex("id_a"),
+      cands.schema.fieldIndex("id_b"))
+    val (ta, tb) = (cands.schema(ia).dataType, cands.schema(ib).dataType)
+    val held =
+      if (Seq(ta, tb, texts.schema(idCol).dataType)
+          .forall(DriverFinish.isIntegral)) DriverFinish.held(cands)
+      else None
+    held.fold(dist)(rows =>
+      DriverFinish.described(texts.sparkSession, "dedup.verify") {
+        val pairs = rows.iterator
+          .filter(r => !r.isNullAt(ia) && !r.isNullAt(ib))
+          .map(r => (DriverFinish.keyAt(r, ia, ta),
+            DriverFinish.keyAt(r, ib, tb))).toArray.sorted
+        val ids = pairs.flatMap(p => Array(p._1, p._2)).distinct.sorted
+        textsOf(texts, idCol, textCol, ids, "dedup.verify")
+          .fold(dist)(found => DriverFinish.frame(texts.sparkSession,
+            dist.schema, jaccardLocal(pairs, found, shingleSize, threshold)
+              .map { case (a, b, j) =>
+                InternalRow(DriverFinish.key(a, ta), DriverFinish.key(b, tb),
+                  j) }))
+      })
+  }
+
+  /** The texts of `texts` whose integral id is one of the sorted `ids`,
+    * per id (a repeated id keeps each of its texts), brought to the
+    * driver by ONE bounded collect ([[graft.core.DriverFinish]]) of a
+    * map-side filter; None when they do not fit.
+    */
+  private[graft] def textsOf(texts: DataFrame, idCol: String,
+      textCol: String, ids: Array[Long], op: String)
+      : Option[Map[Long, List[String]]] =
+    if (ids.isEmpty) Some(Map.empty)
+    else {
+      // the sorted ids travel in the task closure
+      val wanted = udf((id: Long) =>
+        java.util.Arrays.binarySearch(ids, id) >= 0)
+      DriverFinish.collect(texts
+        .select(col(idCol).cast("long").as("id"), col(textCol).cast("string"))
+        .filter(wanted(col("id"))), op)
+        .map(_.foldLeft(Map.empty[Long, List[String]]) { (m, r) =>
+          val t = if (r.isNullAt(1)) null else r.getUTF8String(1).toString
+          m.updated(r.getLong(0), t :: m.getOrElse(r.getLong(0), Nil))
+        })
+    }
+
+  /** [[jaccardOfPairs]] on the driver: each of the `pairs`, sorted by
+    * `a`, scored with [[shingleSet]] and [[jaccard]] over every text of
+    * its two ids (a repeated id pairs once per copy, as the joins do; an
+    * empty shingle set pairs with nothing), kept at `threshold`. One
+    * `a`'s shingle sets are held at a time, not every candidate's.
+    */
+  private[graft] def jaccardLocal(pairs: Array[(Long, Long)],
+      texts: Map[Long, List[String]], shingleSize: Int, threshold: Double)
+      : Seq[(Long, Long, Double)] = {
+    def sets(id: Long) = texts.getOrElse(id, Nil)
+      .map(shingleSet(_, shingleSize)).filter(_.nonEmpty)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    var curA = 0L
+    var shA: List[Array[String]] = null
+    for ((a, b) <- pairs) {
+      if (shA == null || a != curA) { curA = a; shA = sets(a) }
+      for (sa <- shA; sb <- sets(b)) {
+        val j = jaccard(sa, sb)
+        if (j >= threshold) out += ((a, b, j))
+      }
+    }
+    out.toSeq
   }
 
   /** Pairwise token-set Jaccard within candidate blocks (same

@@ -1,8 +1,9 @@
 package graft.dedup
 
-import graft.core.Lineage
+import graft.core.{DriverFinish, Lineage}
 import graft.io.SnapshotStore
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,9 +32,11 @@ import org.apache.spark.sql.types._
   * collects the corpus texts of the candidates outside the batch in ONE
   * map-side scan of the corpus; the driver pairs, verifies and returns a
   * local frame. Nothing is persisted, checkpointed or left to release.
-  * Driver memory: each of the three collects holds at most the threshold's
-  * bytes, sized in Spark's UnsafeRow format (the measure a broadcast takes)
-  * by the tasks before they ship, and the candidate pairs are capped at the
+  * Driver memory: each of the three collects is the engine's one bounded
+  * collect ([[graft.core.DriverFinish]]: the driver receives at most the
+  * threshold's bytes of UnsafeRows), pairing and verification are the
+  * one-shot path's own driver finish ([[Dedup.Buckets]],
+  * [[Dedup.jaccardLocal]]), and the candidate pairs are capped at the
   * threshold over 32 bytes (the size of the broadcast of both their ids);
   * boxed on the driver the rows take a small multiple of those bytes. A
   * batch any of whose pieces is larger (or a session with the threshold at
@@ -80,17 +83,11 @@ object MinhashIndex {
   /** Ids must be integral: a silent cast of string/UUID ids would
     * null them out and make every join quietly return nothing.
     */
-  private def requireIntegralId(docs: DataFrame, idCol: String): Unit = {
-    import org.apache.spark.sql.types._
-    val ok = docs.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    require(ok,
+  private def requireIntegralId(docs: DataFrame, idCol: String): Unit =
+    require(DriverFinish.isIntegral(docs.schema(idCol).dataType),
       s"MinhashIndex requires an integral id column, got $idCol: " +
         s"${docs.schema(idCol).dataType}" +
         " (hash non-numeric ids to int64 first, e.g. xxhash64)")
-  }
 
   private def bandRowsOf(docs: DataFrame, idCol: String,
       textCol: String, p: Params): DataFrame = {
@@ -180,22 +177,18 @@ object MinhashIndex {
     // (dropping every batch-vs-corpus pair from the output)
     requireIntegralId(corpus, idCol)
     val spark = batch.sparkSession
-    val sc = spark.sparkContext
-    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val callerDesc = sc.getLocalProperty("spark.job.description")
-    try {
-      val local =
-        if (limit <= 0) Left("threshold_off")
-        else localProbe(batch, corpus, idCol, textCol, root, threshold,
-          limit)
-      local match {
-        case Right(done) => done
-        case Left(reason) =>
-          sc.setJobDescription("minhash.probe: shuffle")
+    val limit = DriverFinish.limit(spark)
+    val local =
+      if (limit <= 0) Left("threshold_off")
+      else localProbe(batch, corpus, idCol, textCol, root, threshold, limit)
+    local match {
+      case Right(done) => done
+      case Left(reason) =>
+        DriverFinish.described(spark, "minhash.probe: shuffle") {
           shuffleProbe(batch, corpus, idCol, textCol, root, threshold,
             limit, reason)
-      }
-    } finally sc.setJobDescription(callerDesc)
+        }
+    }
   }
 
   /** The probe finished on the driver, for a batch whose pieces each
@@ -204,11 +197,12 @@ object MinhashIndex {
     * of the stored bands collects the stored rows sharing a bucket
     * with them (the driver pairs those up, together with the
     * batch-internal pairs), and ONE scan of the corpus collects the
-    * texts of the candidates the batch does not hold. The driver
-    * verifies with the kernels' own [[Dedup.shingleSet]] and
-    * [[Dedup.jaccard]]. Nothing
-    * is persisted, checkpointed or shuffled. Each collect is sized
-    * before it ships ([[collectWithin]]) and the candidate pairs are
+    * texts of the candidates the batch does not hold ([[Dedup.textsOf]]).
+    * The driver pairs with [[Dedup.Buckets]] and verifies with
+    * [[Dedup.jaccardLocal]], the one-shot path's own driver finish
+    * over the kernels' [[Dedup.shingleSet]] and [[Dedup.jaccard]]. Nothing
+    * is persisted, checkpointed or shuffled. Each collect is bounded
+    * ([[graft.core.DriverFinish.collect]]) and the candidate pairs are
     * counted as they are built; the first piece over `limit` returns
     * its name instead (the caller then runs [[shuffleProbe]]).
     */
@@ -217,86 +211,45 @@ object MinhashIndex {
       limit: Long): Either[String, (DataFrame, ProbeStats)] = {
     val p = params(root)
     val spark = batch.sparkSession
-    val sc = spark.sparkContext
-    sc.setJobDescription("minhash.probe: batch bands")
-    val newBands = collectWithin(batchRowsOf(batch, idCol, textCol, p),
-      limit).getOrElse(return Left("batch_bands"))
-    val batchText = newBands.filter(_.getInt(1) == 0)
-      .map(r => r.getLong(0) -> r.getString(3)).toMap
-    // per band, the batch rows' bh values sorted, with their ids
-    // aligned: a bucket is a run of equal bh
-    val (bhs, ids) = {
-      val byBand = Array.fill(p.bands)(
-        scala.collection.mutable.ArrayBuffer.empty[(Long, Long)])
-      newBands.foreach(r =>
-        byBand(r.getInt(1)) += ((r.getLong(2), r.getLong(0))))
-      val sorted = byBand.map(_.toArray.sorted)
-      (sorted.map(_.map(_._1)), sorted.map(_.map(_._2)))
-    }
-    val maxPairs = limit / PairBytes
-    val cands = scala.collection.mutable.HashSet.empty[(Long, Long)]
-    def add(a: Long, b: Long): Boolean = {
-      if (a != b) cands += (if (a < b) (a, b) else (b, a))
-      cands.size <= maxPairs
-    }
-    for (band <- 0 until p.bands; i <- bhs(band).indices) {
-      var j = i + 1
-      while (j < bhs(band).length && bhs(band)(j) == bhs(band)(i)) {
-        if (!add(ids(band)(i), ids(band)(j))) return Left("candidates")
-        j += 1
+    def collect(piece: String, df: DataFrame) =
+      DriverFinish.described(spark, s"minhash.probe: $piece") {
+        DriverFinish.collect(df, s"minhash.probe.${piece.replace(' ', '_')}")
       }
-    }
+    val newBands = collect("batch bands", batchRowsOf(batch, idCol,
+      textCol, p)).getOrElse(return Left("batch_bands"))
+    val batchText = newBands.filter(_.getInt(1) == 0)
+      .map(r => r.getLong(0) ->
+        List(if (r.isNullAt(3)) null else r.getUTF8String(3).toString)).toMap
+    val buckets = new Dedup.Buckets(p.bands,
+      newBands.iterator.map(r => (r.getInt(1), r.getLong(2), r.getLong(0))))
+    val cands = new Dedup.Pairs(limit / PairBytes)
+    if (!buckets.pairUp(cands)) return Left("candidates")
     if (newBands.nonEmpty) {
       // the sorted keys travel in the task closure: each task reads its
       // own copy, with no broadcast to look up per row or release
+      val bhs = buckets.bhs
       val hit = udf((band: Int, bh: Long) => band >= 0 &&
         band < bhs.length && java.util.Arrays.binarySearch(bhs(band), bh) >= 0)
-      sc.setJobDescription("minhash.probe: stored bands")
-      val stored = collectWithin(bands(spark, root)
+      val stored = collect("stored bands", bands(spark, root)
         .filter(hit(col("band"), col("bh")))
-        .select(col("id"), col("band"), col("bh")), limit)
-      for (r <- stored.getOrElse(return Left("stored_bands"))) {
-        val (band, bh) = (r.getInt(1), r.getLong(2))
-        var k = lowerBound(bhs(band), bh)
-        while (k < bhs(band).length && bhs(band)(k) == bh) {
-          if (!add(r.getLong(0), ids(band)(k))) return Left("candidates")
-          k += 1
-        }
-      }
+        .select(col("id"), col("band"), col("bh")))
+      for (r <- stored.getOrElse(return Left("stored_bands")))
+        if (!buckets.pairWith(r.getInt(1), r.getLong(2), r.getLong(0), cands))
+          return Left("candidates")
     }
-    val verified = new java.util.ArrayList[Row]
-    if (cands.nonEmpty) {
-      // a redone batch repeats corpus ids; their text is the same, so
-      // the batch's copy serves and the corpus scan skips them
-      val candIds = cands.iterator.flatMap(c => Iterator(c._1, c._2))
-        .filterNot(batchText.contains).toArray.distinct.sorted
-      val wanted = udf((id: Long) =>
-        java.util.Arrays.binarySearch(candIds, id) >= 0)
-      sc.setJobDescription("minhash.probe: verify")
-      val text = collectWithin(corpus.select(col(idCol).cast("long").as("id"),
-        col(textCol).cast("string")).filter(wanted(col("id"))), limit)
-        .getOrElse(return Left("texts"))
-        .map(r => r.getLong(0) -> r.getString(1)).toMap ++ batchText
-      // one shingle set per id_a at a time: the driver holds the
-      // texts, not every candidate's shingle set
-      var curA = 0L
-      var shA: Array[String] = null
-      for ((a, b) <- cands.toArray.sorted) {
-        if (shA == null || a != curA) {
-          curA = a
-          shA = text.get(a).fold(Array.empty[String])(
-            Dedup.shingleSet(_, p.shingleSize))
-        }
-        val shB = text.get(b).fold(Array.empty[String])(
-          Dedup.shingleSet(_, p.shingleSize))
-        if (shA.nonEmpty && shB.nonEmpty) {
-          val j = Dedup.jaccard(shA, shB)
-          if (j >= threshold) verified.add(Row(a, b, j))
-        }
-      }
-    }
-    Right((spark.createDataFrame(verified, PairsSchema), ProbeStats("local",
-      "fits", newBands.length, limit, cands.size, verified.size)))
+    // a redone batch repeats corpus ids; their text is the same, so the
+    // batch's copy serves and the corpus scan skips them
+    val pairs = cands.all
+    val corpusIds = pairs.flatMap(c => Array(c._1, c._2))
+      .filterNot(batchText.contains).distinct.sorted
+    val text = DriverFinish.described(spark, "minhash.probe: verify") {
+      Dedup.textsOf(corpus, idCol, textCol, corpusIds, "minhash.probe.verify")
+    }.getOrElse(return Left("texts")) ++ batchText
+    val verified = Dedup.jaccardLocal(pairs, text, p.shingleSize, threshold)
+    Right((DriverFinish.frame(spark, PairsSchema,
+      verified.map { case (a, b, j) => InternalRow(a, b, j) }),
+      ProbeStats("local", "fits", newBands.length, limit, pairs.length,
+        verified.size)))
   }
 
   /** The batch's `(id, band, bh, text)` band rows in one pass, the
@@ -315,65 +268,10 @@ object MinhashIndex {
         when(col("band") === 0, col("__id.text")).as("text"))
   }
 
-  /** The first index of sorted `a` holding a value >= `v`. */
-  private def lowerBound(a: Array[Long], v: Long): Int = {
-    var (lo, hi) = (0, a.length)
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (a(mid) < v) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
   /** The probe's output schema on both paths. */
   private val PairsSchema = StructType(Seq(
     StructField("id_a", LongType), StructField("id_b", LongType),
     StructField("jaccard", DoubleType)))
-
-  /** The rows of `df` on the driver, or None when they would take more
-    * than `limit` bytes there. Each task measures its rows as Spark's
-    * UnsafeRow format sizes them (the measure a broadcast takes) and
-    * ships them only if they fit in an even share of `limit` (`limit`
-    * over the stage's task count), else none and an overflow count:
-    * one job, and the driver never receives more than `limit` bytes of
-    * rows. A partition over its share reports an overflow even when
-    * the rows as a whole would fit.
-    */
-  private[graft] def collectWithin(df: DataFrame, limit: Long)
-      : Option[Array[Row]] = {
-    val over = df.sparkSession.sparkContext.longAccumulator
-    val rows = df.mapPartitions { it =>
-      val share = limit / org.apache.spark.TaskContext.get().numPartitions()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var bytes = 0L
-      while (bytes <= share && it.hasNext) {
-        val r = it.next()
-        bytes += unsafeRowBytes(r)
-        buf += r
-      }
-      if (bytes <= share) buf.iterator
-      else { over.add(1L); Iterator.empty }
-    }(Encoders.row(df.schema)).collect()
-    if (over.value > 0) None else Some(rows)
-  }
-
-  /** Bytes of `r` as an UnsafeRow: the null bits, one 8-byte slot per
-    * field, and each string's UTF-8 bytes padded to 8.
-    */
-  private[graft] def unsafeRowBytes(r: Row): Long = {
-    var b = 8L * ((r.length + 63) / 64) + 8L * r.length
-    var i = 0
-    while (i < r.length) {
-      r.get(i) match {
-        case s: String =>
-          b += (org.apache.spark.unsafe.types.UTF8String.fromString(s)
-            .numBytes + 7) / 8 * 8
-        case _ =>
-      }
-      i += 1
-    }
-    b
-  }
 
   /** The probe as a shuffle plan, for a batch some piece of which does
     * not fit in `limit` bytes: the batch's band rows and candidate

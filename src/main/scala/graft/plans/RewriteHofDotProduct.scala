@@ -61,16 +61,16 @@ object RewriteHofDotProduct extends Rule[LogicalPlan] {
     plan.transformAllExpressions {
       case ArrayAggregate(
             ZipWith(l, r,
-              LambdaFunction(Multiply(mx, my, mMode), zArgs, _)),
+              LambdaFunction(Multiply(mx, my, mCtx), zArgs, _)),
             Literal(0L, LongType),
-            LambdaFunction(Add(ax, ay, aMode), aArgs, _),
+            LambdaFunction(Add(ax, ay, aCtx), aArgs, _),
             finish)
           // TRY arithmetic is excluded: try_multiply/try_add promise
           // null-on-overflow, which the wraparound kernel cannot
           // honor. ANSI is rewritten with the documented caveat (the
           // kernel wraps where ANSI would raise — quantized embedding
           // dot products cannot overflow int64 by construction).
-          if mMode != EvalMode.TRY && aMode != EvalMode.TRY &&
+          if mCtx.evalMode != EvalMode.TRY && aCtx.evalMode != EvalMode.TRY &&
             isLongArray(l) && isLongArray(r) &&
             usesBothArgs(mx, my, zArgs) && usesBothArgs(ax, ay, aArgs) &&
             isIdentity(finish) =>

@@ -1,10 +1,13 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.DriverFinish
 import graft.dedup.Dedup
 
 /** Exact substring (duplicated n-gram span) deduplication, the
@@ -50,7 +53,12 @@ import graft.dedup.Dedup
   *     dup-gram set is tiny (true duplication is rare);
   *   - the join back to (doc, pos) is an equi-join on the int64 hash;
   *   - span merge is a per-doc lag/sum window over the few marked
-  *     positions — bounded by marked windows per document.
+  *     positions — bounded by marked windows per document;
+  *   - a batch whose gram rows fit the driver bound skips the count,
+  *     join and window: [[duplicatedSpans]] brings the persisted grams
+  *     to the driver in ONE bounded collect
+  *     ([[graft.core.DriverFinish]]) and merges there; past the bound,
+  *     the plan above reads the gram cache that collect built.
   *
   * Gram identity is `md5` folded to 60 bits
   * ([[graft.dedup.Dedup.md5Hash60]]) so external engines reproduce it
@@ -151,12 +159,34 @@ object SpanDedup {
     * (next start within `n` tokens of the previous start) merge into
     * one span. All windows are length n, so starts alone decide
     * mergeability — no max-end bookkeeping needed.
+    *
+    * Small path: when the persisted gram rows fit the driver bound
+    * ([[graft.core.DriverFinish]]: `spark.sql.autoBroadcastJoinThreshold`
+    * bytes, 32 B per `(doc_id, pos, gram)` UnsafeRow, so ~330k grams at
+    * the 10 MB default), ONE bounded collect brings them to the driver,
+    * which counts the gram ids, merges each document's duplicated starts
+    * and returns a local frame with the distributed path's schema and
+    * rows. Integral doc ids only take this path
+    * ([[graft.core.DriverFinish.isIntegral]]). Otherwise, or past the
+    * bound, the distributed plan below reads the same gram cache the
+    * collect built, so no gram is computed twice.
     */
   def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      n: Int, minCount: Long = 2L): DataFrame = {
-    val grams = gramRows(df, idCol, textCol, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val starts = dupStartsFromGrams(grams, minCount)
+      n: Int, minCount: Long = 2L): DataFrame =
+    DriverFinish.described(df.sparkSession, "text.spans") {
+      val grams = gramRows(df, idCol, textCol, n)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val dist = spansFromStarts(dupStartsFromGrams(grams, minCount), n)
+      val idType = grams.schema("doc_id").dataType
+      val local =
+        if (!DriverFinish.isIntegral(idType)) None
+        else DriverFinish.collect(grams, "text.spans")
+      local.fold(dist)(rows => DriverFinish.frame(df.sparkSession,
+        dist.schema, localSpans(rows, idType, n, minCount)))
+    }
+
+  /** The distributed span merge over `(doc_id, __pos)` starts. */
+  private def spansFromStarts(starts: DataFrame, n: Int): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("__pos"))
     starts
       // first row of a doc: lag is null -> comparison null -> break
@@ -169,6 +199,54 @@ object SpanDedup {
       .agg(min(col("__pos")).cast("long").as("span_start"),
         (max(col("__pos")) + n - 1).cast("long").as("span_end"))
       .select(col("doc_id"), col("span_start"), col("span_end"))
+  }
+
+  /** [[spansFromStarts]] on the driver, over collected
+    * `(doc_id, __pos, __g)` gram rows.
+    */
+  private def localSpans(grams: Seq[InternalRow], idType: DataType,
+      n: Int, minCount: Long): Seq[InternalRow] = {
+    val sorted = grams.iterator.map(_.getLong(2)).toArray
+    java.util.Arrays.sort(sorted)
+    // the gram ids occurring >= minCount times, ascending
+    val dup = scala.collection.mutable.ArrayBuilder.make[Long]
+    var i = 0
+    while (i < sorted.length) {
+      var j = i
+      while (j < sorted.length && sorted(j) == sorted(i)) j += 1
+      if (j - i >= minCount) dup += sorted(i)
+      i = j
+    }
+    val dups = dup.result()
+    // duplicated starts per doc (a null doc id is one group, as in
+    // the window partitioning)
+    val starts = scala.collection.mutable.HashMap
+      .empty[Option[Long], scala.collection.mutable.ArrayBuilder[Int]]
+    grams.foreach { r =>
+      if (java.util.Arrays.binarySearch(dups, r.getLong(2)) >= 0) {
+        val key = Option.unless(r.isNullAt(0))(
+          DriverFinish.keyAt(r, 0, idType))
+        starts.getOrElseUpdate(key,
+          scala.collection.mutable.ArrayBuilder.make[Int]) += r.getInt(1)
+      }
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    for ((key, b) <- starts) {
+      val pos = b.result()
+      java.util.Arrays.sort(pos)
+      val id = key.map(DriverFinish.key(_, idType)).orNull
+      var first = 0
+      var k = 1
+      while (k <= pos.length) {
+        if (k == pos.length || pos(k).toLong - pos(k - 1) > n) {
+          out += InternalRow(id, pos(first).toLong,
+            pos(k - 1).toLong + n - 1)
+          first = k
+        }
+        k += 1
+      }
+    }
+    out.toSeq
   }
 
   /** Per-document duplication ratio — the RefinedWeb-style novelty

@@ -47,13 +47,15 @@ class ComponentsSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L))
   }
 
-  /** Run `body` with the driver local finish disabled, forcing the
-    * distributed iterative rounds (the 100-TB path).
+  /** Run `body` with the driver local finish disabled (threshold -1),
+    * forcing the distributed iterative rounds (the 100-TB path).
     */
   private def forcingIterative[T](body: => T): T = {
-    spark.conf.set("spark.graft.cc.localEdgeLimit", "0")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
     try body
-    finally spark.conf.unset("spark.graft.cc.localEdgeLimit")
+    finally spark.conf.set(key, prev)
   }
 
   test("random graphs match union-find (local-finish path)") {

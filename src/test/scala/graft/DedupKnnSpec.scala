@@ -520,26 +520,6 @@ class DedupKnnSpec extends SparkSpec {
       s"${seen.value} batch rows evaluated for ${mhBatch.count()} rows")
   }
 
-  test("MinhashIndex.collectWithin: ships the rows only while each " +
-      "task's share of the limit holds them") {
-    import graft.dedup.MinhashIndex
-    // 100 rows of one long: 16 UnsafeRow bytes each
-    val one = spark.range(0, 100, 1, 1).toDF("id")
-    assert(MinhashIndex.unsafeRowBytes(Row(1L)) == 16L)
-    assert(MinhashIndex.unsafeRowBytes(Row(1L, "abcdefghi")) == 8 + 16 + 16)
-    assert(MinhashIndex.collectWithin(one, 1600L)
-      .map(_.map(_.getLong(0)).toSeq) == Some((0L until 100L).toSeq))
-    assert(MinhashIndex.collectWithin(one, 1599L).isEmpty)
-    // four tasks of 25 rows: each share is a quarter of the limit
-    val four = spark.range(0, 100, 1, 4).toDF("id")
-    assert(MinhashIndex.collectWithin(four, 1600L).map(_.length) == Some(100))
-    assert(MinhashIndex.collectWithin(four, 1596L).isEmpty)
-    // a skewed split fails its share even though the total would fit
-    val skewed = spark.range(0, 100, 1, 1)
-      .union(spark.range(100, 101, 1, 3)).toDF("id")
-    assert(MinhashIndex.collectWithin(skewed, 1600L * 4 - 1).isEmpty)
-  }
-
   test("MinhashIndex: a batch over the limit takes the shuffle path " +
       "and still answers exactly") {
     import graft.dedup.MinhashIndex

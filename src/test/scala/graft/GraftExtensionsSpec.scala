@@ -106,6 +106,27 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("rewrite does NOT fire on try_multiply/try_add: null on " +
+      "overflow survives, while the plain form is still rewritten") {
+    withExtSession { s =>
+      val d = s.range(1, 2).selectExpr(
+        "array(9223372036854775807L, id) AS a", "array(2L, 1L) AS b")
+      def has(q: org.apache.spark.sql.DataFrame) =
+        q.queryExecution.optimizedPlan.expressions.exists(
+          _.exists(_.isInstanceOf[DotProductQ]))
+      val tried = d.selectExpr("aggregate(zip_with(a, b, (x, y) -> " +
+        "try_multiply(x, y)), 0L, (acc, v) -> try_add(acc, v)) AS d")
+      assert(!has(tried), tried.queryExecution.optimizedPlan.toString)
+      assert(tried.head().isNullAt(0))
+      val added = d.selectExpr("aggregate(zip_with(a, b, (x, y) -> " +
+        "x * y), 0L, (acc, v) -> try_add(acc, v)) AS d")
+      assert(!has(added), added.queryExecution.optimizedPlan.toString)
+      val plain = d.selectExpr("aggregate(zip_with(a, b, (x, y) -> " +
+        "x * y), 0L, (acc, v) -> acc + v) AS d")
+      assert(has(plain), plain.queryExecution.optimizedPlan.toString)
+    }
+  }
+
   test("top_k_by is callable from SQL via injectFunction") {
     withExtSession { s =>
       s.range(0, 100).selectExpr("id % 3 AS g",

@@ -193,14 +193,15 @@ class LineageSpec extends SparkSpec {
       assert(m == Map(1.0 -> 10.0, 2.0 -> 20.0, 3.0 -> 30.0, 4.0 -> 40.0))
     },
     "Components.connectedComponents (iterative rounds)" -> { () =>
-      val key = "spark.graft.cc.localEdgeLimit"
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(key)
       val e = df("a BIGINT, b BIGINT",
         Seq(Row(1L, 2L), Row(2L, 3L), Row(5L, 6L)))
-      spark.conf.set(key, "0")
+      spark.conf.set(key, "-1")
       val cc =
         try longs(Components.connectedComponents(e, "a", "b"), "id",
           "component")
-        finally spark.conf.unset(key)
+        finally spark.conf.set(key, prev)
       assert(cc == Seq(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L),
         Seq(5L, 5L), Seq(6L, 5L)))
     },

@@ -57,6 +57,44 @@ class PipelineFusionSpec extends SparkSpec {
     assert(out.columns.contains("fmt_png"))
   }
 
+  test("fit jobs on pooled threads carry the caller's description, " +
+      "job group and custom properties") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    def pipe() = Pipeline(
+      "im" -> new MeanImputer(Seq("a")),
+      "ce" -> new CountEncoderTransformer(Seq("fmt")),
+      "mr" -> new MeanResponseTransformer(Seq("fmt"), "y"))
+    // pooled threads first created under other labels must not leak them
+    (1 to 2).foreach { i =>
+      sc.setJobDescription(s"stale $i")
+      try pipe().fit(frame()) finally sc.setJobDescription(null)
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      java.util.Properties]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty(DrainKey) == null)
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup("fit-group", "fit caller")
+    sc.setLocalProperty("graft.test.caller", "yes")
+    try { pipe().fit(frame()); drainListenerBus() }
+    finally {
+      sc.removeSparkListener(l)
+      sc.clearJobGroup()
+      sc.setLocalProperty("graft.test.caller", null)
+    }
+    val props = seen.asScala.toList
+    assert(props.size >= 3, s"${props.size} fit jobs")
+    props.foreach { p =>
+      assert(p.getProperty("spark.job.description") == "fit caller", p)
+      assert(p.getProperty("spark.jobGroup.id") == "fit-group", p)
+      assert(p.getProperty("graft.test.caller") == "yes", p)
+    }
+  }
+
   test("fused fit equals sequential fit") {
     val d = frame()
     val fused = Pipeline(

@@ -300,9 +300,15 @@ class PlanDisciplineSpec extends SparkSpec {
 
   test("span dedup: equi-joins only (no BNLJ/cartesian), dup-gram " +
       "count is map-side combined, no single-partition stage") {
-    val q = graft.text.SpanDedup.duplicatedSpans(
+    // the distributed plan (threshold -1): a small input is otherwise
+    // finished on the driver
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val plan = try graft.text.SpanDedup.duplicatedSpans(
       spark.read.parquet(docPath), "doc_id", "text", 8)
-    val plan = q.queryExecution.executedPlan.toString
+      .queryExecution.executedPlan.toString
+    finally spark.conf.set(key, prev)
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"), plan.take(800))
     assert(!plan.contains("SinglePartition"), plan.take(800))
