@@ -231,14 +231,33 @@ object Components {
     * in no duplicate pair at all. `edges` are duplicate pairs over
     * `idCol` values (e.g. the output of [[Dedup.minHashNearDups]] /
     * [[graft.multimodal.Multimodal.phashNearDups]]).
+    *
+    * Components finished on the driver (see [[connectedComponents]])
+    * drop their non-root members with a filter on an id list bounded by
+    * the same driver bound, so no action over the result ships the
+    * component relation; an integral id column is required for it (the
+    * join's comparison casts other types). Components computed by the
+    * distributed rounds are joined.
     */
   def dedupByComponents(df: DataFrame, idCol: String, edges: DataFrame,
       srcCol: String, dstCol: String): DataFrame = {
-    val comp = connectedComponents(edges, srcCol, dstCol)
-      .select(col("id").as("__cc_id"), col("component").as("__cc_comp"))
-    df.join(comp, df(idCol) === col("__cc_id"), "left")
-      .filter(col("__cc_comp").isNull || col("__cc_comp") === df(idCol))
-      .drop("__cc_id", "__cc_comp")
+    val comps = connectedComponents(edges, srcCol, dstCol)
+    val integral = DriverFinish.isIntegral(
+      df.select(df(idCol)).schema.head.dataType)
+    DriverFinish.held(comps) match {
+      case Some(rows) if integral =>
+        val members = rows.collect {
+          case r if r.getLong(0) != r.getLong(1) => r.getLong(0)
+        }
+        if (members.isEmpty) df
+        else df.filter(df(idCol).isNull || !df(idCol).isin(members: _*))
+      case _ =>
+        val comp = comps
+          .select(col("id").as("__cc_id"), col("component").as("__cc_comp"))
+        df.join(comp, df(idCol) === col("__cc_id"), "left")
+          .filter(col("__cc_comp").isNull || col("__cc_comp") === df(idCol))
+          .drop("__cc_id", "__cc_comp")
+    }
   }
 
   /** Component-level dedup keeping the BEST row per cluster by a

@@ -22,9 +22,12 @@ import org.apache.spark.sql.types._
   * batch fits under `spark.sql.autoBroadcastJoinThreshold`. `appendBatch`
   * is a fast append: it writes only the batch's band rows and adds them to
   * the touched buckets' manifest entries, so stored band files are never
-  * rewritten. Its replay guard reads no stored row when the batch's ids lie
-  * above every stored id (the index tracks per-bucket id bounds); a batch
-  * whose ids overlap a bucket's range has that bucket scanned map-side.
+  * rewritten. When the batch's ids lie above every stored id (the index
+  * tracks per-bucket id bounds) it is ONE Spark job, the write, which
+  * computes the new rows' lineage as it writes them; its replay guard
+  * reads no stored row. A batch whose ids overlap a bucket's range has that
+  * bucket scanned map-side after the write, and a bucket holding replayed
+  * band rows is rewritten without them.
   * `batchNearDups` on a batch that fits runs at most three Spark actions,
   * reads the batch once and finishes on the driver: it collects the batch's
   * band rows together with its texts, collects the stored band rows sharing

@@ -1,8 +1,9 @@
 package graft.io
 
-import graft.core.Lineage
+import graft.core.{DriverFinish, Lineage}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TrackedWrite
 import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 
@@ -36,13 +37,29 @@ import scala.jdk.CollectionConverters._
   * all of an entry's paths; [[rewriteSnapshot]] folds a bucket's files
   * back into one directory.
   *
+  * == Lineage inside the write ==
+  * Every run is written by ONE Spark job that also computes the
+  * lineage of what it writes: a write-stats tracker folds each written
+  * row into its bucket's partial (rows, `xxh`, and min/max/non-null
+  * counts of the stats columns — [[graft.io.BucketFold]]), and the
+  * partials of the committed task attempts reach the driver with the
+  * commit messages. The manifest and the files therefore come from one
+  * execution of the input by construction, with no persist, no
+  * aggregation job and no exchange of the store's own. [[verify]] runs
+  * the same fold over the stored files (one job per schema version).
+  *
   * == Resumability ==
-  * `write` computes the incoming per-bucket lineage with ONE distributed
-  * aggregation, diffs it against the previous snapshot, and writes only
-  * buckets whose (rows, xxh) changed — completed buckets are skipped and
-  * their immutable files are carried into the new manifest by reference.
-  * `maxBucketsPerRun` bounds a run (checkpoint granularity): a job killed
-  * between runs restarts with no lost or duplicated work.
+  * `write` over a previous snapshot (or with a run bound) needs the
+  * incoming lineage BEFORE it writes: it caches the bucketed input, folds
+  * it in one job, diffs that against the previous snapshot, and writes
+  * (from the cache) only buckets whose (rows, xxh) changed — completed
+  * buckets are skipped and their immutable files are carried into the
+  * new manifest by reference. `maxBucketsPerRun` bounds a run
+  * (checkpoint granularity): a job killed between runs restarts with no
+  * lost or duplicated work. A first `write` with no bound, and every
+  * [[overwriteBuckets]] and [[append]], is the write job alone; their
+  * decisions (stray rows, unchanged buckets, the replay guard) are taken
+  * after it, from its lineage.
   *
   * == Snapshot-scoped reads ==
   * `read(root, snapshot=Some(v))` sees exactly the files v's manifest
@@ -50,10 +67,13 @@ import scala.jdk.CollectionConverters._
   * time travel holds. `verify` recomputes per-bucket rows/xxh from
   * storage and compares to the manifest (per-partition metrics check).
   *
-  * At cluster scale: the lineage agg is a map-side-combined hash
-  * aggregate (tiny result, nBuckets rows); the data write is one shuffle-
-  * free pass partitioned by the bucket expression; manifests are
-  * driver-side kilobytes.
+  * At cluster scale: the data write is one shuffle-free pass partitioned
+  * by the bucket expression, whose tasks each ship one small partial per
+  * bucket they wrote; manifests are driver-side kilobytes. Each op labels
+  * its jobs (`snapshot.write`, `snapshot.overwrite`, `snapshot.append`,
+  * `snapshot.rewrite`, `snapshot.verify`) and each commit logs one
+  * `snapshot.commit op= snap= written= carried= guard= rows=` line at
+  * INFO.
   */
 object SnapshotStore {
 
@@ -100,63 +120,76 @@ object SnapshotStore {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  /** The row-content hash expression shared by [[lineageOf]] and
-    * [[verify]] — names BACKQUOTED so columns needing quoting
-    * (spaces, dashes, reserved words) don't break the parse.
-    */
-  private def rowHashExpr(dataCols: Seq[String]): Column =
-    expr(s"bit_xor(xxhash64(struct(" +
-      dataCols.map(c => s"`$c`").mkString(",") + ")))")
-
   private type Incoming =
     (Long, Long, Map[String, (String, String, String)], Set[String])
 
-  /** Per-bucket (rows, content-hash, column bounding boxes, stats
-    * columns holding a null) of an already-bucketed frame — ONE
-    * distributed map-side-combined agg regardless of how many stats
-    * columns are tracked (min/max ride the same groupBy as the
-    * lineage), bit_xor is order-independent and overflow-free
-    * (ANSI-safe, unlike a sum of hashes).
+  /** The lineage fold over `bucketed`'s data columns (every column but
+    * the bucket), with the stats columns' fields.
     */
-  private def lineageOf(bucketed: DataFrame,
-      statsCols: Seq[String] = Seq.empty): Map[Int, Incoming] = {
-    val missing = statsCols.filterNot(bucketed.columns.contains)
+  private def foldOf(bucketed: DataFrame, statsCols: Seq[String])
+      : (BucketFold, Seq[org.apache.spark.sql.types.StructField]) = {
+    val data = bucketed.schema.fields.filterNot(_.name == B)
+    val missing = statsCols.filterNot(c => data.exists(_.name == c))
     require(missing.isEmpty,
       s"SnapshotStore stats columns not in frame: $missing")
-    val statAggs = statsCols.flatMap(c => Seq(
-      min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"),
-      count(col(c)).as(s"__nn_$c")))
-    val aggs = Seq(count(lit(1)).as("rows"),
-      rowHashExpr(bucketed.columns.toSeq.filterNot(_ == B))
-        .as("xxh")) ++ statAggs
-    bucketed
-      .groupBy(col(B))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val stats = statsCols.flatMap { c =>
-          (statRepr(r.getAs[Any](s"__min_$c")),
-            statRepr(r.getAs[Any](s"__max_$c"))) match {
-            case (Some((t1, lo)), Some((t2, hi))) if t1 == t2 =>
-              // Iceberg-style string-bound truncation: a manifest must
-              // stay driver-side kilobytes even when the tracked
-              // column holds documents. A truncated LOWER bound is the
-              // prefix (prefix <= s in UTF-8 order); a truncated UPPER
-              // bound must INCREMENT the last code point (the prefix
-              // alone would under-state it and prune matching
-              // buckets). An un-incrementable upper (all max code
-              // points) leaves the column untracked for this bucket.
-              if (t1 != "s") Some(c -> ((t1, lo, hi)))
-              else truncUpper(hi).map(h =>
-                c -> (("s", truncLower(lo), h)))
-            case _ => None // null/NaN bound -> untracked (no pruning)
-          }
-        }.toMap
-        val nulls = statsCols.filter(c =>
-          r.getAs[Long](s"__nn_$c") < r.getLong(1)).toSet
-        r.getInt(0) -> ((r.getLong(1), r.getLong(2), stats, nulls))
+    val ordinals = statsCols.map(c => data.indexWhere(_.name == c))
+    (new BucketFold(data.map(_.dataType), ordinals.toArray),
+      ordinals.map(data(_)))
+  }
+
+  /** Writes `bucketed` under `dir`, one directory per bucket, in ONE
+    * job that computes each bucket's lineage from the rows it writes
+    * (see [[graft.io.BucketFold]]): the manifest and the files come from
+    * one execution of the input by construction.
+    */
+  private def writeRun(bucketed: DataFrame, dir: String,
+      statsCols: Seq[String]): Map[Int, Incoming] = {
+    val (fold, fields) = foldOf(bucketed, statsCols)
+    TrackedWrite.parquet(bucketed, dir, B, fold)
+      .map { case (b, p) => b -> incoming(p, fields) }
+  }
+
+  /** Per-bucket lineage of an already-bucketed frame without writing
+    * it: the fold [[writeRun]] runs, over the frame's rows, in ONE
+    * job with no exchange of its own.
+    */
+  private def lineage(bucketed: DataFrame,
+      statsCols: Seq[String] = Seq.empty): Map[Int, Incoming] = {
+    val (fold, fields) = foldOf(bucketed, statsCols)
+    TrackedWrite.fold(bucketed, B, fold)
+      .map { case (b, p) => b -> incoming(p, fields) }
+  }
+
+  /** A folded bucket as the manifest records it: (rows, content hash,
+    * column bounding boxes, stats columns holding a null). Bounds are
+    * normalised by [[statRepr]] from the values a collected row would
+    * hold.
+    */
+  private def incoming(p: BucketPartial,
+      fields: Seq[org.apache.spark.sql.types.StructField]): Incoming = {
+    val stats = fields.indices.flatMap { k =>
+      val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(fields(k).dataType)
+      def repr(v: Any) = Option(v).flatMap(x => statRepr(toScala(x)))
+      (repr(p.lo(k)), repr(p.hi(k))) match {
+        case (Some((t1, lo)), Some((t2, hi))) if t1 == t2 =>
+          // Iceberg-style string-bound truncation: a manifest must
+          // stay driver-side kilobytes even when the tracked
+          // column holds documents. A truncated LOWER bound is the
+          // prefix (prefix <= s in UTF-8 order); a truncated UPPER
+          // bound must INCREMENT the last code point (the prefix
+          // alone would under-state it and prune matching
+          // buckets). An un-incrementable upper (all max code
+          // points) leaves the column untracked for this bucket.
+          val c = fields(k).name
+          if (t1 != "s") Some(c -> ((t1, lo, hi)))
+          else truncUpper(hi).map(h => c -> (("s", truncLower(lo), h)))
+        case _ => None // null/NaN bound -> untracked (no pruning)
       }
-      .toMap
+    }.toMap
+    val nulls = fields.indices.filter(k => p.nonNull(k) < p.rows)
+      .map(fields(_).name).toSet
+    (p.rows, p.xxh, stats, nulls)
   }
 
   private val StringBoundChars = 32
@@ -380,25 +413,96 @@ object SnapshotStore {
       else lit(null).cast(f.dataType).as(f.name)): _*)
   }
 
-  /** Manifest-scoped file read under a snapshot's committed schema.
-    * The schema is passed EXPLICITLY (stored DDL + the two partition
-    * columns): files written before an additive evolution resolve
-    * missing columns to null by name, per-file footer inference never
-    * runs, and the column types are pinned to what the snapshot
-    * committed — not to whatever parquet file the reader lists first.
+  /** Manifest-scoped file read under a snapshot's committed schema,
+    * keeping each row's bucket column. The schema is passed EXPLICITLY
+    * (the given DDL + the two partition columns): files written before
+    * an additive evolution resolve missing columns to null by name,
+    * per-file footer inference never runs, and the column types are
+    * pinned to what the snapshot committed — not to whatever parquet
+    * file the reader lists first. `paths` must be non-empty.
     */
-  private def readEntries(spark: SparkSession, root: String, v: Int,
+  private def scan(spark: SparkSession, root: String,
+      schema: org.apache.spark.sql.types.StructType,
       paths: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val schema = tableSchema(root, v)
-    if (paths.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val full = StructType(schema.fields ++
       Seq(StructField("run", IntegerType), StructField(B, IntegerType)))
     spark.read.option("basePath", s"$root/runs").schema(full)
-      .parquet(paths: _*).drop("run").drop(B)
+      .parquet(paths: _*).drop("run")
   }
+
+  /** [[scan]] of snapshot `v`'s files without the bucket column; an
+    * empty path list reads as a typed empty frame.
+    */
+  private def readEntries(spark: SparkSession, root: String, v: Int,
+      paths: Seq[String]): DataFrame = {
+    val schema = tableSchema(root, v)
+    if (paths.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else scan(spark, root, schema, paths).drop(B)
+  }
+
+  private def runDir(root: String, snap: Int): String = s"$root/runs/run=$snap"
+
+  private def bucketDir(root: String, snap: Int, b: Int): String =
+    s"${runDir(root, snap)}/$B=$b"
+
+  /** A manifest entry for bucket `b` as run `snap` wrote it. */
+  private def written(root: String, snap: Int, b: Int,
+      in: Incoming): BucketLineage =
+    BucketLineage(b, in._1, in._2, bucketDir(root, snap, b), in._3)
+
+  /** Runs `body`, which writes run `snap`, over a clean run directory
+    * (a leftover of a crashed attempt is dropped first, see
+    * [[dropStaleRunDir]]); when `body` throws, the run directory it
+    * left is deleted: nothing is published, so nothing references it.
+    */
+  private def newRun[A](root: String, snap: Int)(body: => A): A = {
+    dropStaleRunDir(root, snap)
+    try body
+    catch { case e: Throwable => dropStaleRunDir(root, snap); throw e }
+  }
+
+  /** The commit point: writes snapshot `snap`'s schema, then its
+    * manifest (`entries`), and logs the commit. A run that wrote no
+    * bucket leaves no run directory.
+    */
+  private def publish(root: String, snap: Int, ddl: String,
+      entries: Seq[BucketLineage], writtenBuckets: Seq[Int], rows: Long,
+      remaining: Seq[Int], op: String, guard: String): WriteResult = {
+    if (writtenBuckets.isEmpty) dropStaleRunDir(root, snap)
+    // schema travels with every snapshot (BEFORE the manifest — the
+    // manifest is the commit point): an EMPTY table state (zero
+    // buckets, no parquet files to infer from) must still read back
+    // as a typed empty frame, not crash on a missing basePath
+    Files.createDirectories(Paths.get(root, "snapshots"))
+    Files.writeString(schemaPath(root, snap), ddl)
+    // a truncated run publishes an INCOMPLETE manifest: readers skip
+    // it by default (latestSnapshot/read), the next write resumes it
+    writeManifest(root, snap, entries, incomplete = remaining.nonEmpty)
+    val ws = writtenBuckets.toSet
+    val result = WriteResult(snap, writtenBuckets.sorted,
+      entries.map(_.bucket).filterNot(ws).sorted, remaining)
+    logCommit(op, result, guard, rows)
+    result
+  }
+
+  private def rowsOf(in: Map[Int, Incoming]): Long = in.values.map(_._1).sum
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** One line per commit: the op, the snapshot published (the latest
+    * one when nothing was), bucket counts, the replay guard's outcome
+    * (`none` where no guard applies, `ruled_out` when the manifest
+    * stats spared every stored read, `scanned` when some touched
+    * buckets were read) and the rows the run wrote.
+    */
+  private def logCommit(op: String, r: WriteResult, guard: String,
+      rows: Long): Unit =
+    log.info(s"snapshot.commit op=$op snap=${r.snapshot} " +
+      s"written=${r.written.size} carried=${r.carried.size} " +
+      s"guard=$guard rows=$rows")
 
   /** Write (or resume writing) `df` as the next snapshot of the table at
     * `root`. Buckets whose lineage matches the previous snapshot are
@@ -415,74 +519,57 @@ object SnapshotStore {
       s"column names '$B' and 'run' are reserved by SnapshotStore " +
         s"(found: ${df.columns.filter(c => c == B || c == "run")
           .mkString(",")})")
-    // persist the bucketed projection so the lineage agg and the file
-    // write observe ONE execution of the input plan — a
-    // non-deterministic input (rand, unstable sampling) would otherwise
-    // record lineage that disagrees with the stored files
-    Lineage.scoped { sc =>
-      val bucketed = sc.persist(df.withColumn(B, bucketExpr))
-      val incoming = lineageOf(bucketed, statsCols)
-      // resume from the latest manifest INCLUDING incomplete ones: a
-      // truncated run's buckets are already on disk and must be skipped
-      val prevSnap = latestAnySnapshot(root)
-      val prev: Map[Int, BucketLineage] =
-        prevSnap match {
+    val bucketed = df.withColumn(B, bucketExpr)
+    // resume from the latest manifest INCLUDING incomplete ones: a
+    // truncated run's buckets are already on disk and must be skipped
+    val prevSnap = latestAnySnapshot(root)
+    val snap = prevSnap.getOrElse(0) + 1
+    val ddl = df.schema.toDDL
+    DriverFinish.described(df.sparkSession, "snapshot.write") {
+      if (prevSnap.isEmpty && maxBucketsPerRun == Int.MaxValue) {
+        // nothing to carry and no bound on the run: every bucket is
+        // written, and the write computes its lineage
+        val in = newRun(root, snap)(writeRun(bucketed, runDir(root, snap),
+          statsCols))
+        publish(root, snap, ddl, in.toSeq.map { case (b, x) =>
+          written(root, snap, b, x) }, in.keys.toSeq, rowsOf(in), Seq.empty,
+          "write", "none")
+      } else Lineage.scoped { sc =>
+        // the carry and the run bound need the lineage BEFORE the
+        // write; the cache makes the lineage fold and the file write
+        // observe ONE execution of the input plan (a non-deterministic
+        // input would otherwise choose buckets by one execution and
+        // write another's rows)
+        val cached = sc.persist(bucketed)
+        val incoming = lineage(cached, statsCols)
+        val prev: Map[Int, BucketLineage] = prevSnap match {
           case Some(v) => manifest(root, v).map(e => e.bucket -> e).toMap
           case None => Map.empty
         }
-      // carry-by-reference is only sound when the DDL is UNCHANGED:
-      // the content hash covers values, not names, so a column rename
-      // (or same-shape evolution) could hash-match files whose parquet
-      // schema no longer serves the new DDL — a full rewrite is the
-      // only honest write() across a schema change (use mergeChanges
-      // for pruned additive evolution)
-      val sameSchema = prevSnap.forall(v =>
-        ddlOf(root, v) == df.schema.toDDL)
-      commit(root, prevSnap.getOrElse(0) + 1, df.schema.toDDL, bucketed,
-        incoming, prev, sameSchema, Seq.empty, maxBucketsPerRun)
-    }
-  }
-
-  /** The commit [[write]] and [[overwriteBuckets]] share: of the
-    * `incoming` buckets, those whose rows and hash match `prev` are
-    * carried by reference (when `carrySame`), at most `maxWrite` of the
-    * rest are written from `bucketed` into run `snap`, and `kept` plus
-    * those entries are published as its manifest.
-    */
-  private def commit(root: String, snap: Int, ddl: String,
-      bucketed: DataFrame, incoming: Map[Int, Incoming],
-      prev: Map[Int, BucketLineage], carrySame: Boolean,
-      kept: Seq[BucketLineage], maxWrite: Int): WriteResult = {
-    val carried =
-      if (!carrySame) Seq.empty[Int]
-      else incoming.keys.toSeq.sorted.filter { b =>
-        prev.get(b).exists(p =>
-          (p.rows, p.xxh) == ((incoming(b)._1, incoming(b)._2)))
+        // carry-by-reference is only sound when the DDL is UNCHANGED:
+        // the content hash covers values, not names, so a column rename
+        // (or same-shape evolution) could hash-match files whose parquet
+        // schema no longer serves the new DDL — a full rewrite is the
+        // only honest write() across a schema change (use mergeChanges
+        // for pruned additive evolution)
+        val sameSchema = prevSnap.forall(v => ddlOf(root, v) == ddl)
+        val carried =
+          if (!sameSchema) Seq.empty[Int]
+          else incoming.keys.toSeq.sorted.filter(b => prev.get(b).exists(p =>
+            (p.rows, p.xxh) == ((incoming(b)._1, incoming(b)._2))))
+        val (chosen, remaining) = incoming.keys.toSeq.sorted
+          .filterNot(carried.contains).splitAt(maxBucketsPerRun)
+        val in = newRun(root, snap) {
+          if (chosen.isEmpty) Map.empty[Int, Incoming]
+          else writeRun(cached.filter(col(B).isin(chosen: _*)),
+            runDir(root, snap), statsCols)
+        }
+        publish(root, snap, ddl,
+          carried.map(b => prev(b).copy(stats = incoming(b)._3)) ++
+            in.toSeq.map { case (b, x) => written(root, snap, b, x) },
+          in.keys.toSeq, rowsOf(in), remaining, "write", "none")
       }
-    val (chosen, remaining) = incoming.keys.toSeq.sorted
-      .filterNot(carried.contains).splitAt(maxWrite)
-    val runDir = s"$root/runs/run=$snap"
-    dropStaleRunDir(root, snap)
-    if (chosen.nonEmpty) {
-      bucketed.filter(col(B).isin(chosen: _*))
-        .write.partitionBy(B).mode("append").parquet(runDir)
     }
-    val entries = kept ++
-      carried.map(b => prev(b).copy(rows = incoming(b)._1,
-        xxh = incoming(b)._2, stats = incoming(b)._3)) ++
-      chosen.map(b => BucketLineage(b, incoming(b)._1, incoming(b)._2,
-        s"$runDir/$B=$b", incoming(b)._3))
-    // schema travels with every snapshot (BEFORE the manifest — the
-    // manifest is the commit point): an EMPTY table state (zero
-    // buckets, no parquet files to infer from) must still read back
-    // as a typed empty frame, not crash on a missing basePath
-    Files.createDirectories(Paths.get(root, "snapshots"))
-    Files.writeString(schemaPath(root, snap), ddl)
-    // a truncated run publishes an INCOMPLETE manifest: readers skip
-    // it by default (latestSnapshot/read), the next write resumes it
-    writeManifest(root, snap, entries, incomplete = remaining.nonEmpty)
-    WriteResult(snap, chosen, (kept.map(_.bucket) ++ carried).sorted,
-      remaining)
   }
 
   /** Dynamic-partition-OVERWRITE commit (Iceberg's
@@ -496,6 +583,11 @@ object SnapshotStore {
     * Unchanged listed buckets (same rows/xxh) are carried, not
     * rewritten. Refuses to run over an incomplete (mid-checkpoint)
     * snapshot — resume that write first.
+    *
+    * ONE job: the frame is written whole and its lineage computed by
+    * the write; the decisions follow it. Rows outside the listed
+    * buckets delete the run and fail; an unchanged listed bucket keeps
+    * its previous files and its new copy is deleted.
     */
   def overwriteBuckets(df: DataFrame, root: String, bucketExpr: Column,
       buckets: Seq[Int], statsCols: Seq[String] = Seq.empty)
@@ -511,31 +603,43 @@ object SnapshotStore {
       s"overwriteBuckets: $root has an incomplete snapshot newer " +
         s"than v$prevSnap — resume that write first")
     val bucketSet = buckets.toSet
-    Lineage.scoped { sc =>
-      val bucketed = sc.persist(df.withColumn(B, bucketExpr))
-      val incoming = lineageOf(bucketed, statsCols)
-      val stray = incoming.keys.filterNot(bucketSet.contains).toSeq
-      require(stray.isEmpty,
-        s"overwriteBuckets: incoming rows land outside the declared " +
-          s"overwrite set: buckets ${stray.sorted.mkString(",")}")
-      val prev = manifest(root, prevSnap).map(e => e.bucket -> e).toMap
-      // additive evolution: carried-by-reference entries keep serving
-      // files written under the OLD schema — pin their schema version
-      // so readers project the added columns as null and verify()
-      // re-hashes them under the right column set. The DDL equality
-      // check also rejects non-additive drift via conformTo at the
-      // callers; here a changed DDL only disables same-content carry
-      // for the overwritten buckets (values-only hashes can't be
-      // trusted across a column set change).
-      val evolved = ddlOf(root, prevSnap) != df.schema.toDDL
-      val pin: BucketLineage => BucketLineage = e =>
-        if (evolved) e.copy(schemaV = e.schemaV.orElse(Some(prevSnap)))
-        else e
-      val carriedOther = prev.keys.toSeq.sorted
-        .filterNot(bucketSet.contains).map(prev).map(pin)
-      commit(root, prevSnap + 1, df.schema.toDDL, bucketed, incoming,
-        prev, !evolved, carriedOther, Int.MaxValue)
+    val bucketed = df.withColumn(B, bucketExpr)
+    val snap = prevSnap + 1
+    val in = DriverFinish.described(df.sparkSession, "snapshot.overwrite") {
+      newRun(root, snap) {
+        val in = writeRun(bucketed, runDir(root, snap), statsCols)
+        val stray = in.keys.filterNot(bucketSet.contains).toSeq
+        require(stray.isEmpty,
+          s"overwriteBuckets: incoming rows land outside the declared " +
+            s"overwrite set: buckets ${stray.sorted.mkString(",")}")
+        in
+      }
     }
+    val prev = manifest(root, prevSnap).map(e => e.bucket -> e).toMap
+    // additive evolution: carried-by-reference entries keep serving
+    // files written under the OLD schema — pin their schema version
+    // so readers project the added columns as null and verify()
+    // re-hashes them under the right column set. The DDL equality
+    // check also rejects non-additive drift via conformTo at the
+    // callers; here a changed DDL only disables same-content carry
+    // for the overwritten buckets (values-only hashes can't be
+    // trusted across a column set change).
+    val evolved = ddlOf(root, prevSnap) != df.schema.toDDL
+    val pin: BucketLineage => BucketLineage = e =>
+      if (evolved) e.copy(schemaV = e.schemaV.orElse(Some(prevSnap)))
+      else e
+    val carriedOther = prev.keys.toSeq.sorted
+      .filterNot(bucketSet.contains).map(prev).map(pin)
+    val same =
+      if (evolved) Seq.empty[Int]
+      else in.keys.toSeq.sorted.filter(b => prev.get(b).exists(p =>
+        (p.rows, p.xxh) == ((in(b)._1, in(b)._2))))
+    same.foreach(b => deleteRecursively(Paths.get(bucketDir(root, snap, b))))
+    val changed = in.keys.toSeq.sorted.filterNot(same.contains)
+    publish(root, snap, df.schema.toDDL,
+      carriedOther ++ same.map(b => prev(b).copy(stats = in(b)._3)) ++
+        changed.map(b => written(root, snap, b, in(b))),
+      changed, rowsOf(in -- same), Seq.empty, "overwrite", "none")
   }
 
   /** Fast-append commit (Iceberg's `AppendFiles`): add `df`'s rows to
@@ -550,17 +654,22 @@ object SnapshotStore {
     * `df` must carry the table's columns with the table's types (in
     * any order). A replayed append converges: incoming rows already
     * stored (equal on every column, null-safe) are dropped, while
-    * duplicates WITHIN `df` are kept. The lookup never reads a bucket
-    * the incoming rows miss, nor one the manifest stats rule out — on
-    * some tracked column the bucket's incoming rows hold no null and
-    * their [min, max] misses the stored one (with ids that only grow,
-    * a stats-tracked id column rules out every bucket). The buckets
-    * left are scanned once and semi-joined against the incoming rows,
-    * which the planner broadcasts when they fit under
+    * duplicates WITHIN `df` are kept.
+    *
+    * The rows are written first, in ONE job that also computes their
+    * per-bucket lineage; the replay guard runs after it. It never reads
+    * a bucket the incoming rows miss, nor one the manifest stats rule
+    * out — on some tracked column the bucket's incoming rows hold no
+    * null and their [min, max] misses the stored one (with ids that
+    * only grow, a stats-tracked id column rules out every bucket, and
+    * the append is that one job). The buckets left are scanned once and
+    * semi-joined against the rows just written, which the planner
+    * broadcasts when they fit under
     * `spark.sql.autoBroadcastJoinThreshold`, so the stored side is
-    * filtered map-side, never exchanged. The commit thus costs
-    * O(incoming rows) plus a scan of the buckets the stats cannot
-    * rule out.
+    * filtered map-side, never exchanged; only the buckets that turn out
+    * to hold already-stored rows are rewritten without them. The commit
+    * thus costs O(incoming rows) plus a scan of the buckets the stats
+    * cannot rule out.
     *
     * Appending nothing publishes nothing and returns the latest
     * snapshot. Refuses to run over an incomplete snapshot, and into a
@@ -587,61 +696,93 @@ object SnapshotStore {
     val absent = schema.fieldNames.filterNot(df.columns.contains)
     require(absent.isEmpty,
       s"append: incoming rows lack table columns ${absent.mkString(",")}")
-    Lineage.scoped { sc =>
-      val bucketed =
-        sc.persist(conformTo(df, schema).withColumn(B, bucketExpr))
-      val prev = manifest(root, prevSnap).map(e => e.bucket -> e).toMap
-      val statsCols = prev.values.flatMap(_.stats.keys).toSeq.distinct
-      val all = lineageOf(bucketed, statsCols)
-      val suspect = all.toSeq.collect {
-        case (b, (_, _, st, nulls))
-            if prev.get(b).exists(e => !disjoint(e.stats, st, nulls)) => b
-      }
-      val guarded = if (suspect.isEmpty) None else {
-        val stored = readEntries(df.sparkSession, root, prevSnap,
-          suspect.flatMap(prev(_).paths))
-        val already = sc.persist(stored.join(bucketed, schema.fieldNames
-          .map(c => stored(c) <=> bucketed(c)).reduce(_ && _), "left_semi"))
-        if (already.count() == 0) None
-        else Some(sc.persist(bucketed.join(already, schema.fieldNames
-          .map(c => bucketed(c) <=> already(c)).reduce(_ && _),
-          "left_anti")))
-      }
-      val rows = guarded.getOrElse(bucketed)
-      val incoming = guarded.fold(all)(lineageOf(_, statsCols))
-      if (incoming.isEmpty)
-        WriteResult(prevSnap, Seq.empty, prev.keys.toSeq.sorted, Seq.empty)
-      else {
+    val bucketed = conformTo(df, schema).withColumn(B, bucketExpr)
+    val prev = manifest(root, prevSnap).map(e => e.bucket -> e).toMap
+    val statsCols = prev.values.flatMap(_.stats.keys).toSeq.distinct.sorted
+    val snap = prevSnap + 1
+    val spark = df.sparkSession
+    val (in, guard) = DriverFinish.described(spark, "snapshot.append") {
+      newRun(root, snap) {
+        val all = writeRun(bucketed, runDir(root, snap), statsCols)
+        val suspect = all.toSeq.collect {
+          case (b, (_, _, st, nulls))
+              if prev.get(b).exists(e => !disjoint(e.stats, st, nulls)) => b
+        }.sorted
+        val (in, guard) =
+          if (suspect.isEmpty) (all, "ruled_out")
+          else (replayGuard(spark, root, prevSnap, snap, prev, suspect, all,
+            statsCols), "scanned")
         // an entry pinned to a schema version with the same columns
         // (e.g. one that differed only in nullability) hashes alike
         val cols = schema.fieldNames.toSeq
-        val pinned = incoming.keys.filter(b => prev.get(b)
+        val pinned = in.keys.filter(b => prev.get(b)
           .flatMap(_.schemaV)
           .exists(sv => tableSchema(root, sv).fieldNames.toSeq != cols))
           .toSeq.sorted
         require(pinned.isEmpty,
           s"append: buckets ${pinned.mkString(",")} still serve files of " +
             "an older schema version — rewriteSnapshot first")
-        val snap = prevSnap + 1
-        val runDir = s"$root/runs/run=$snap"
-        dropStaleRunDir(root, snap)
-        rows.write.partitionBy(B).mode("append").parquet(runDir)
-        val touched = incoming.toSeq.map { case (b, (n, x, st, _)) =>
-          val dir = s"$runDir/$B=$b"
-          prev.get(b) match {
-            case Some(e) => e.copy(rows = e.rows + n, xxh = e.xxh ^ x,
-              stats = widen(e.stats, st), extra = e.extra :+ dir)
-            case None => BucketLineage(b, n, x, dir, st)
-          }
-        }
-        val carried = prev.keys.toSeq.sorted.filterNot(incoming.contains)
-        Files.writeString(schemaPath(root, snap), ddlOf(root, prevSnap))
-        writeManifest(root, snap, carried.map(prev) ++ touched,
-          incomplete = false)
-        WriteResult(snap, incoming.keys.toSeq.sorted, carried, Seq.empty)
+        (in, guard)
       }
     }
+    if (in.isEmpty) {
+      dropStaleRunDir(root, snap)
+      val r = WriteResult(prevSnap, Seq.empty, prev.keys.toSeq.sorted,
+        Seq.empty)
+      logCommit("append", r, guard, 0L)
+      r
+    } else {
+      val touched = in.toSeq.map { case (b, x @ (n, h, st, _)) =>
+        prev.get(b) match {
+          case Some(e) => e.copy(rows = e.rows + n, xxh = e.xxh ^ h,
+            stats = widen(e.stats, st),
+            extra = e.extra :+ bucketDir(root, snap, b))
+          case None => written(root, snap, b, x)
+        }
+      }
+      val carried = prev.keys.toSeq.sorted.filterNot(in.contains)
+      publish(root, snap, ddlOf(root, prevSnap), carried.map(prev) ++ touched,
+        in.keys.toSeq, rowsOf(in), Seq.empty, "append", guard)
+    }
   }
+
+  /** [[append]]'s replay guard over the `suspect` buckets of run `snap`,
+    * whose rows are written and whose lineage is `in`: semi-joins the
+    * stored rows of those buckets against the rows just written, and
+    * rewrites each bucket that holds an already-stored row without such
+    * rows (beside the run, then swapped in). Returns the run's lineage
+    * after the rewrite; a bucket left with no row is dropped from it.
+    */
+  private def replayGuard(spark: SparkSession, root: String, prevSnap: Int,
+      snap: Int, prev: Map[Int, BucketLineage], suspect: Seq[Int],
+      in: Map[Int, Incoming], statsCols: Seq[String]): Map[Int, Incoming] =
+    Lineage.scoped { sc =>
+      val schema = tableSchema(root, prevSnap)
+      def sameRow(a: DataFrame, b: DataFrame): Column =
+        schema.fieldNames.map(c => a(c) <=> b(c)).reduce(_ && _)
+      val fresh = scan(spark, root, schema, suspect.map(bucketDir(root, snap, _)))
+      val stored = scan(spark, root, schema, suspect.flatMap(prev(_).paths))
+      // the stored rows an incoming row repeats, read by the lineage
+      // fold (which names the buckets holding them) and the rewrite
+      val already = sc.persist(stored.join(fresh, sameRow(stored, fresh),
+        "left_semi"))
+      val dirty = lineage(already).keys.toSeq.sorted
+      if (dirty.isEmpty) in
+      else {
+        val side = s"${runDir(root, snap)}/_guard"
+        val redo = scan(spark, root, schema, dirty.map(bucketDir(root, snap, _)))
+        val rewritten = writeRun(redo.join(already, sameRow(redo, already),
+          "left_anti"), side, statsCols)
+        dirty.foreach { b =>
+          val dir = Paths.get(bucketDir(root, snap, b))
+          deleteRecursively(dir)
+          val kept = Paths.get(side, s"$B=$b")
+          if (Files.exists(kept)) Files.move(kept, dir)
+        }
+        deleteRecursively(Paths.get(side))
+        in -- dirty ++ rewritten
+      }
+    }
 
   /** True when no stored row of a bucket with stats `stored` can equal
     * an incoming row of that bucket, whose stats are `in` and whose
@@ -725,68 +866,54 @@ object SnapshotStore {
     }
     val entries = manifest(root, v)
     val snap = latestAnySnapshot(root).getOrElse(0) + 1
-    if (entries.isEmpty) { // empty table state: carry the schema over
-      Files.writeString(schemaPath(root, snap),
-        Files.readString(schemaPath(root, v)))
-      writeManifest(root, snap, Seq.empty, incomplete = false)
-      return WriteResult(snap, Seq.empty, Seq.empty, Seq.empty)
-    }
+    if (entries.isEmpty) // empty table state: carry the schema over
+      return publish(root, snap, ddlOf(root, v), Seq.empty, Seq.empty, 0L,
+        Seq.empty, "rewrite", "none")
     // explicit current-snapshot schema: files carried across an
     // additive evolution serve their missing columns as null, so the
     // rewrite MATERIALIZES the evolution — every output file gets the
     // full current schema and the snapshot collapses back to a single
     // schema version (the entries' schemaV pins are cleared below)
     val curSchema = tableSchema(root, v)
-    val readSchema = org.apache.spark.sql.types.StructType(
-      curSchema.fields ++ Seq(
-        org.apache.spark.sql.types.StructField("run",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField(B,
-          org.apache.spark.sql.types.IntegerType)))
-    val df0 = spark.read.option("basePath", s"$root/runs")
-      .schema(readSchema).parquet(entries.flatMap(_.paths): _*)
-      .drop("run")
-    val sortKeys: Seq[Column] =
-      if (layoutCols.isEmpty) Seq(col(B))
-      else Seq(col(B), Layout.zValue(layoutCols.map(col),
-        Layout.rangesOf(df0, layoutCols), bits))
-    Lineage.scoped { sc =>
-      val clustered = sc.persist(df0.repartition(col(B))
-        .sortWithinPartitions(sortKeys: _*))
-      val runDir = s"$root/runs/run=$snap"
-      dropStaleRunDir(root, snap)
-      clustered.write.partitionBy(B).mode("append").parquet(runDir)
-      // content preservation proven PER SCHEMA VERSION: an entry's
-      // stored hash was computed under its own pinned column set, so
-      // the rewritten rows are projected back to exactly those
-      // columns before re-hashing (the hash never covered the added
-      // columns, which are all-null in that entry's rows anyway)
-      val mismatch = entries.groupBy(_.schemaV.getOrElse(v)).toSeq
-        .flatMap { case (sv, group) =>
-          val cols = tableSchema(root, sv).fieldNames.toSeq
-          val bs = group.map(_.bucket)
-          val rewritten = lineageOf(clustered
-            .filter(col(B).isin(bs: _*))
-            .select((B +: cols).map(col): _*))
-          group.collect {
-            case e if !rewritten.get(e.bucket)
-              .exists(t => (t._1, t._2) == ((e.rows, e.xxh))) => e.bucket
-          }
-        }.sorted
-      if (mismatch.nonEmpty) {
-        deleteRecursively(Paths.get(runDir))
-        throw new IllegalStateException(
+    val df0 = scan(spark, root, curSchema, entries.flatMap(_.paths))
+    val cols = curSchema.fieldNames.toSeq
+    val in = DriverFinish.described(spark, "snapshot.rewrite") {
+      val sortKeys: Seq[Column] =
+        if (layoutCols.isEmpty) Seq(col(B))
+        else Seq(col(B), Layout.zValue(layoutCols.map(col),
+          Layout.rangesOf(df0, layoutCols), bits))
+      newRun(root, snap) {
+        val in = writeRun(df0.repartition(col(B))
+          .sortWithinPartitions(sortKeys: _*), runDir(root, snap), Seq.empty)
+        // content preservation proven PER SCHEMA VERSION from the
+        // rewritten rows: the write's own lineage for entries hashed
+        // under the current column set; an entry pinned to another
+        // column set has its new files re-hashed under exactly those
+        // columns (one fold per such version)
+        val mismatch = entries.groupBy(_.schemaV.getOrElse(v)).toSeq
+          .flatMap { case (sv, group) =>
+            val schema = tableSchema(root, sv)
+            val got =
+              if (schema.fieldNames.toSeq == cols) in
+              else lineage(scan(spark, root, schema,
+                group.map(e => bucketDir(root, snap, e.bucket))))
+            group.collect {
+              case e if !got.get(e.bucket)
+                .exists(t => (t._1, t._2) == ((e.rows, e.xxh))) => e.bucket
+            }
+          }.sorted
+        if (mismatch.nonEmpty) throw new IllegalStateException(
           s"rewrite changed content of buckets $mismatch — aborted, " +
             "no manifest published")
+        in
       }
-      Files.writeString(schemaPath(root, snap), curSchema.toDDL)
-      writeManifest(root, snap,
-        entries.map(e => e.copy(path = s"$runDir/$B=${e.bucket}",
-          schemaV = None, extra = Seq.empty)),
-        incomplete = false)
-      WriteResult(snap, entries.map(_.bucket).sorted, Seq.empty,
-        Seq.empty)
     }
+    // every new file holds the current column set, so each entry
+    // records the hash of its rows under it (the write's lineage)
+    publish(root, snap, curSchema.toDDL,
+      entries.map(e => e.copy(path = bucketDir(root, snap, e.bucket),
+        xxh = in(e.bucket)._2, schemaV = None, extra = Seq.empty)),
+      entries.map(_.bucket), rowsOf(in), Seq.empty, "rewrite", "none")
   }
 
   /** Snapshot-scoped read: exactly the files the manifest lists. The
@@ -1148,13 +1275,15 @@ object SnapshotStore {
     *
     * Entries pinned to an older schema version (carried across an
     * additive evolution) are re-hashed under THAT version's column
-    * set — one grouped pass per distinct schema version present,
-    * which is 1 for any table that never evolved and stays O(few)
-    * after (rewriteSnapshot collapses the versions back to one).
+    * set — one pass per distinct schema version present, which is 1
+    * for any table that never evolved and stays O(few) after
+    * (rewriteSnapshot collapses the versions back to one). Each pass
+    * is ONE job with no exchange: every task folds the rows it scans
+    * per bucket with the fold the write ran ([[graft.io.BucketFold]]),
+    * and the driver merges the partials.
     */
   def verify(spark: SparkSession, root: String,
       snapshot: Option[Int] = None): Seq[(Int, String)] = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val v = snapshot.orElse(latestSnapshot(root)).get
     val entries = manifest(root, v)
     val (present, gone) = entries.partition(e =>
@@ -1162,22 +1291,16 @@ object SnapshotStore {
     gone.map(e => e.bucket -> "missing in storage") ++
     present.groupBy(_.schemaV.getOrElse(v)).toSeq.sortBy(_._1)
       .flatMap { case (sv, group) =>
-        val schema = tableSchema(root, sv)
-        val full = StructType(schema.fields ++
-          Seq(StructField("run", IntegerType), StructField(B, IntegerType)))
-        val df = spark.read.option("basePath", s"$root/runs")
-          .schema(full).parquet(group.flatMap(_.paths): _*).drop("run")
-        val actual = df.groupBy(col(B))
-          .agg(count(lit(1)).as("rows"),
-            rowHashExpr(schema.fieldNames.toSeq).as("xxh"))
-          .collect()
-          .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+        val actual = DriverFinish.described(spark, "snapshot.verify") {
+          lineage(scan(spark, root, tableSchema(root, sv),
+            group.flatMap(_.paths)))
+        }
         group.flatMap { e =>
           actual.get(e.bucket) match {
             case None => Some(e.bucket -> "missing in storage")
-            case Some((r, _)) if r != e.rows =>
+            case Some((r, _, _, _)) if r != e.rows =>
               Some(e.bucket -> s"rows ${e.rows} != $r")
-            case Some((_, x)) if x != e.xxh =>
+            case Some((_, x, _, _)) if x != e.xxh =>
               Some(e.bucket -> s"xxh ${e.xxh} != $x")
             case _ => None
           }

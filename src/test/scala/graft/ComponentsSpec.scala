@@ -129,6 +129,49 @@ class ComponentsSpec extends SparkSpec {
     assert(column(out.orderBy("id"), "id") == Seq(1L, 4L, 5L))
   }
 
+  test("dedupByComponents over driver-held components filters by id: " +
+      "an action runs no broadcast job, and the answer (null and int " +
+      "ids included) equals the join path's") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val rnd = new scala.util.Random(7)
+    val pairs = Seq.fill(60)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+    val intIds = df("id INT, v STRING",
+      (0 until 100).map(i => Row(if (i % 23 == 0) null else i, s"v$i")))
+    val longIds = df("id BIGINT, v STRING",
+      (0 until 100).map(i => Row(if (i % 19 == 0) null else i.toLong, s"v$i")))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (Option(r.get(0)).map(_.toString), r.getString(1)))
+        .toSeq.sortBy(_._2)
+    for (data <- Seq(intIds, longIds)) {
+      val kept = Components.dedupByComponents(data, "id", edgesDf(pairs),
+        "a", "b")
+      val sc = spark.sparkContext
+      drainListenerBus()
+      val broadcasts = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).flatMap(p => Option(p.getProperty(
+              "spark.job.description"))).exists(_.startsWith("broadcast")))
+            broadcasts.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      val got = try { val g = rows(kept); kept.count(); drainListenerBus(); g }
+        finally sc.removeSparkListener(l)
+      assert(broadcasts.get() === 0)
+      val plan = kept.queryExecution.executedPlan
+      assert(plan.collect { case j: org.apache.spark.sql.execution.joins
+        .BroadcastHashJoinExec => j }.isEmpty, plan.toString)
+      val off = "spark.sql.autoBroadcastJoinThreshold"
+      val was = spark.conf.get(off)
+      spark.conf.set(off, "-1")
+      val joined = try rows(Components.dedupByComponents(data, "id",
+        edgesDf(pairs), "a", "b")) finally spark.conf.set(off, was)
+      assert(got === joined)
+      assert(got.exists(_._1.isEmpty))
+      assert(got.size < 100)
+    }
+  }
+
   test("dedupByComponentsBest: argmax score per cluster, ties -> smallest id, NaN never wins") {
     val data = df("id BIGINT, sc DOUBLE, v STRING", Seq(
       Row(1L, 1.0, "a"), Row(2L, 5.0, "b"), Row(3L, 5.0, "c"),

@@ -49,9 +49,38 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
+  private var shared: SparkSession = _
+
+  /** The suites' shared local session, started on first use and again
+    * after [[withMaster]] stopped it.
+    */
+  def session: SparkSession = synchronized {
+    if (shared == null || shared.sparkContext.isStopped)
+      shared = start("local[4]")
+    shared
+  }
+
+  /** Runs `body` on a session of its own with the given master (e.g.
+    * `local[4,2]`, which retries a failed task once): the shared
+    * session is stopped first, as a JVM runs one SparkContext, and the
+    * next [[session]] call starts it again. Suites run one at a time,
+    * so no other suite holds it meanwhile.
+    */
+  def withMaster[A](master: String)(body: SparkSession => A): A =
+    synchronized {
+      if (shared != null) shared.stop()
+      val s = start(master)
+      try body(s)
+      finally {
+        s.stop()
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
+      }
+    }
+
+  private def start(master: String): SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
+      .master(master)
       .appName("graft-tests")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
