@@ -101,16 +101,25 @@ object Flagship {
 
   /** Fit the flagship pipeline once and return it — the one-time cost a
     * production job pays before transforming arbitrarily many batches.
-    * The (column-pruned) fit input is persisted for the duration of
-    * the fit passes and dropped before returning.
     */
   def fitPipeline(spark: SparkSession, nImages: Long,
-      eventsPerImage: Int): Pipeline = {
+      eventsPerImage: Int): Pipeline =
+    fitOver(joinedInput(spark, nImages, eventsPerImage),
+      cacheFitInput = true)
+
+  /** Fits the flagship pipeline over `joined`. The pipeline's fit passes
+    * each re-execute their input plan, so the (column-pruned) fit input
+    * is persisted for the duration of the fit passes — the as-of join
+    * and generation run once instead of once per fit barrier — and
+    * released before returning; the fitted state holds no reference
+    * to it.
+    */
+  private def fitOver(joined: DataFrame, cacheFitInput: Boolean)
+      : Pipeline = {
     val pipe = pipelineDef()
     graft.core.Lineage.scoped { sc =>
-      pipe.fit(sc.persist(fitProjection(pipe,
-        joinedInput(spark, nImages, eventsPerImage))))
-      pipe
+      val fitInput = fitProjection(pipe, joined)
+      pipe.fit(if (cacheFitInput) sc.persist(fitInput) else fitInput)
     }
   }
 
@@ -125,21 +134,8 @@ object Flagship {
     * [[joinedInputFrom]] for the stored-table production shape).
     */
   def featuresOver(joined: DataFrame,
-      cacheFitInput: Boolean = true): DataFrame = {
-    val pipe = pipelineDef()
-    // The pipeline's fit passes each re-execute their input plan;
-    // persist the fit projection once so the as-of join + generation
-    // run a single time instead of once per fit barrier (same move a
-    // production job makes before a multi-pass fit over a 100 TB
-    // table: cache/checkpoint the PIT-joined fit columns).
-    // (Cache stays registered so repeated fits also read it; drop it
-    // with spark.catalog.clearCache() when done.)
-    val fitInput = fitProjection(pipe, joined)
-    if (cacheFitInput)
-      fitInput.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pipe.fit(fitInput)
-    pipe.transform(joined)
-  }
+      cacheFitInput: Boolean = true): DataFrame =
+    fitOver(joined, cacheFitInput).transform(joined)
 
   /** Decode-dominated variant: the feature table joined back to the
     * image payloads, with per-image decode features extracted via the

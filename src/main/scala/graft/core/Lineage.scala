@@ -31,9 +31,8 @@ import org.apache.spark.storage.StorageLevel
   * Not scoped, because they stay registered until
   * `spark.catalog.clearCache()` by contract (built once, read by later
   * calls or micro-batches): the `SpanDedup` gram cache, the
-  * `Dedup.containmentPairs` shingle sets, the `Flagship.featuresOver`
-  * fit input, and the `StreamingOps` decontamination fingerprints and
-  * IVF lists.
+  * `Dedup.containmentPairs` shingle sets, and the `StreamingOps`
+  * decontamination fingerprints and IVF lists.
   */
 object Lineage {
 

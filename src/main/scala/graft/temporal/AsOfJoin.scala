@@ -1,5 +1,6 @@
 package graft.temporal
 
+import graft.core.DriverFinish
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -21,6 +22,18 @@ import org.apache.spark.sql.expressions.Window
   * sort-merge-join machinery couldn't do an inequality-latest join in
   * fewer shuffles. All right-hand value columns ride the same window
   * spec, so Catalyst plans a single Window node.
+  *
+  * What rides that exchange, each key once: `__e` (entity), `__t` (ts),
+  * the side and salt tags, `__l` (a struct of the left columns other
+  * than the entity and the left ts; null on right rows) and `__r` (the
+  * right value columns + the matched ts; null on left rows). The
+  * output's entity and left ts are rebuilt from `__e`/`__t`. A left key
+  * whose type differs from the unioned key's (an int entity against a
+  * bigint one, a date ts against a timestamp: the union widens it)
+  * also stays in `__l`, so the output keeps the left's values and
+  * types. Output names, order, types and nullability do not depend on
+  * which keys were rebuilt. Each call logs one `asof.plan` line at INFO
+  * (strategy, hot keys, salt buckets, shipped and rebuilt columns).
   *
   * `broadcast` (small right side): right side is grouped per entity
   * into a ts-sorted array of structs, broadcast-hash-joined, and probed
@@ -85,17 +98,21 @@ object AsOfJoin {
       else keys
     // deterministic sample (fixed seed, per-partition Bernoulli): the
     // two passes below see identical rows
-    val total = sampled.count()
-    if (total == 0L) return Seq.empty
-    val floor = math.max(1L, math.ceil(rowShare * total).toLong)
-    sampled.groupBy(col("__k"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= floor)
-      .orderBy(col("__n").desc, col("__k"))
-      .limit(maxKeys)
-      .collect()
-      .map(_.getString(0))
-      .toSeq
+    DriverFinish.described(df.sparkSession, "asof.hot_keys") {
+      val total = sampled.count()
+      if (total == 0L) Seq.empty
+      else {
+        val floor = math.max(1L, math.ceil(rowShare * total).toLong)
+        sampled.groupBy(col("__k"))
+          .agg(count(lit(1)).as("__n"))
+          .filter(col("__n") >= floor)
+          .orderBy(col("__n").desc, col("__k"))
+          .limit(maxKeys)
+          .collect()
+          .map(_.getString(0))
+          .toSeq
+      }
+    }
   }
 
   /** @param leftTs / rightTs   timestamp column names
@@ -125,23 +142,12 @@ object AsOfJoin {
       hotEntities: Seq[String] = Seq.empty,
       saltBuckets: Int = 8,
       autoSaltShare: Option[Double] = None,
-      autoSaltSample: Double = 0.05): DataFrame = {
-
-    val valueCols =
-      if (rightValueCols.nonEmpty) rightValueCols
-      else right.columns.filterNot(c => c == entity || c == rightTs).toSeq
-
-    if (broadcastRight)
-      joinBroadcast(left, right, entity, leftTs, rightTs, valueCols,
-        strict, toleranceSeconds, forward = false)
-    else {
-      val hot = resolveHot(left, entity, hotEntities, autoSaltShare,
-        autoSaltSample)
-      joinUnion(left, right, entity, leftTs, rightTs, valueCols,
-        strict, toleranceSeconds, hot, saltBuckets,
-        forward = false)
-    }
-  }
+      autoSaltSample: Double = 0.05): DataFrame =
+    asOf("join", left, right, entity, leftTs, rightTs,
+      valuesOf(right, entity, rightTs, rightValueCols), broadcastRight,
+      resolveHot(left, entity, hotEntities, autoSaltShare, autoSaltSample),
+      saltBuckets, Seq(Carry("__rv", forward = false, strict)))(
+      (t, rv) => within(rv.head, t, toleranceSeconds, forward = false))
 
   /** Cold-start fallback as-of join: enrich the spine from an
     * entity-level feed, and for events the entity feed cannot serve —
@@ -245,10 +251,7 @@ object AsOfJoin {
     require(feeds.map(_.name).distinct.size == feeds.size,
       s"joinMulti: duplicate feed names in ${feeds.map(_.name)}")
     feeds.foldLeft(left) { (acc, f) =>
-      val vals =
-        if (f.valueCols.nonEmpty) f.valueCols
-        else f.right.columns
-          .filterNot(c => c == entity || c == f.rightTs).toSeq
+      val vals = valuesOf(f.right, entity, f.rightTs, f.valueCols)
       val renames = (vals :+ "matched_ts")
         .map(c => c -> s"${f.name}_$c")
       renames.foreach { case (from, to) =>
@@ -291,10 +294,7 @@ object AsOfJoin {
         s"$horizonsSeconds")
     require(horizonsSeconds.distinct.size == horizonsSeconds.size,
       s"multiHorizon: duplicate horizons in $horizonsSeconds")
-    val vals =
-      if (rightValueCols.nonEmpty) rightValueCols
-      else right.columns
-        .filterNot(c => c == entity || c == rightTs).toSeq
+    val vals = valuesOf(right, entity, rightTs, rightValueCols)
     horizonsSeconds.foldLeft(left) { (acc, d) =>
       val pfx = s"h$d"
       val renames = (vals :+ "matched_ts").map(c => c -> s"${pfx}_$c")
@@ -417,10 +417,7 @@ object AsOfJoin {
       rightValueCols: Seq[String] = Seq.empty,
       hotEntities: Seq[String] = Seq.empty,
       autoSaltShare: Option[Double] = None): DataFrame = {
-    val vals =
-      if (rightValueCols.nonEmpty) rightValueCols
-      else right.columns
-        .filterNot(c => c == entity || c == rightTs).toSeq
+    val vals = valuesOf(right, entity, rightTs, rightValueCols)
     val outCols = vals.flatMap(v =>
       Seq(s"${v}_train", s"${v}_serve", s"${v}_stale")) ++
       Seq("matched_ts_train", "matched_ts_serve")
@@ -462,6 +459,14 @@ object AsOfJoin {
       case None => Seq.empty
     }
 
+  /** The right columns a join carries: the given ones, else all but
+    * entity/ts.
+    */
+  private def valuesOf(right: DataFrame, entity: String, rightTs: String,
+      given: Seq[String]): Seq[String] =
+    if (given.nonEmpty) given
+    else right.columns.filterNot(c => c == entity || c == rightTs).toSeq
+
   /** FORWARD as-of join: for each left row, the EARLIEST right row
     * with right.ts >= left.ts (strict: >) within the entity — the
     * time-mirrored dual of [[join]], for "time-to-next-event" /
@@ -488,21 +493,12 @@ object AsOfJoin {
       hotEntities: Seq[String] = Seq.empty,
       saltBuckets: Int = 8,
       autoSaltShare: Option[Double] = None,
-      autoSaltSample: Double = 0.05): DataFrame = {
-    val valueCols =
-      if (rightValueCols.nonEmpty) rightValueCols
-      else right.columns.filterNot(c => c == entity || c == rightTs).toSeq
-    if (broadcastRight)
-      joinBroadcast(left, right, entity, leftTs, rightTs, valueCols,
-        strict, toleranceSeconds, forward = true)
-    else {
-      val hot = resolveHot(left, entity, hotEntities, autoSaltShare,
-        autoSaltSample)
-      joinUnion(left, right, entity, leftTs, rightTs, valueCols,
-        strict, toleranceSeconds, hot, saltBuckets,
-        forward = true)
-    }
-  }
+      autoSaltSample: Double = 0.05): DataFrame =
+    asOf("forward", left, right, entity, leftTs, rightTs,
+      valuesOf(right, entity, rightTs, rightValueCols), broadcastRight,
+      resolveHot(left, entity, hotEntities, autoSaltShare, autoSaltSample),
+      saltBuckets, Seq(Carry("__rv", forward = true, strict)))(
+      (t, rv) => within(rv.head, t, toleranceSeconds, forward = true))
 
   /** Nearest-match as-of join (pandas `merge_asof(direction='nearest')`
     * parity — no reference analogue, tubular has no joins at all): per
@@ -539,274 +535,178 @@ object AsOfJoin {
       saltBuckets: Int = 8,
       autoSaltShare: Option[Double] = None,
       autoSaltSample: Double = 0.05): DataFrame = {
-
-    val valueCols =
-      if (rightValueCols.nonEmpty) rightValueCols
-      else right.columns.filterNot(c => c == entity || c == rightTs).toSeq
-    val leftCols = left.columns.toSeq
-
-    // distance of a candidate struct's matched ts from the left ts, in
-    // micros; null candidate -> null distance (loses every comparison)
-    def dist(cand: Column, lt: Column): Column =
-      abs(unix_micros(cand.getField(MatchedTs).cast("timestamp")) -
-        unix_micros(lt.cast("timestamp")))
-
-    // pick the nearer of the backward/forward candidates under the
+    // distance of a candidate's matched ts from the left ts, in micros;
+    // null candidate -> null distance (loses every comparison)
+    def dist(cand: Column, t: Column): Column =
+      abs(micros(cand.getField(MatchedTs)) - t)
+    def ok(cand: Column, t: Column): Column = toleranceSeconds match {
+      case Some(tol) => cand.isNotNull && dist(cand, t) <= tol * 1000000L
+      case None      => cand.isNotNull
+    }
+    // the nearer of the backward/forward candidates under the
     // tolerance; tie -> backward. Backward candidates are at distance
     // >= 0, forward ones > 0 (same-instant rows ride the backward
     // carry), so `<=` implements the tie rule exactly.
-    def pickNearest(rb: Column, rf: Column, lt: Column): Column = {
-      val tolOk: Column => Column = cand => toleranceSeconds match {
-        case Some(tol) => cand.isNotNull && dist(cand, lt) <= tol * 1000000L
-        case None      => cand.isNotNull
-      }
-      val bOk = tolOk(rb)
-      val fOk = tolOk(rf)
-      when(bOk && (!fOk || dist(rb, lt) <= dist(rf, lt)), rb)
-        .when(fOk, rf)
+    asOf("nearest", left, right, entity, leftTs, rightTs,
+      valuesOf(right, entity, rightTs, rightValueCols), broadcastRight,
+      resolveHot(left, entity, hotEntities, autoSaltShare, autoSaltSample),
+      saltBuckets, Seq(Carry("__rb", forward = false, strict = false),
+        Carry("__rf", forward = true, strict = true))) { (t, rv) =>
+      val Seq(rb, rf) = rv
+      when(ok(rb, t) && (!ok(rf, t) || dist(rb, t) <= dist(rf, t)), rb)
+        .when(ok(rf, t), rf)
     }
-
-    val carried =
-      if (broadcastRight) {
-        // broadcast strategy: per-entity ts-sorted history array; the
-        // backward candidate is the LAST entry with ts <= t, the
-        // forward one the FIRST with ts > t
-        val rightArr = right
-          .filter(col(entity).isNotNull && col(rightTs).isNotNull)
-          .groupBy(col(entity).as("__e"))
-          .agg(sort_array(collect_list(struct(
-            (col(rightTs).as(MatchedTs) +: valueCols.map(col)): _*)))
-            .as("__hist"))
-        val joined = left
-          .select(struct(leftCols.map(col): _*).as("__l"),
-            col(entity).as("__le"), col(leftTs).as("__lt"))
-          .join(broadcast(rightArr), col("__le") === col("__e"), "left")
-        val back = filter(col("__hist"),
-          r => r.getField(MatchedTs) <= col("__lt"))
-        val fwd = filter(col("__hist"),
-          r => r.getField(MatchedTs) > col("__lt"))
-        joined
-          .withColumn("__rb",
-            when(size(back) > 0, element_at(back, -1)))
-          .withColumn("__rf",
-            when(size(fwd) > 0, element_at(fwd, 1)))
-      } else {
-        // union strategy: one exchange, two carries over one sort.
-        // Right rows take side 0 (BEFORE left at equal ts): the
-        // backward frame sees same-instant matches, the forward frame
-        // starts strictly after — and a same-instant match (distance
-        // 0) wins the pick regardless.
-        val hot = resolveHot(left, entity, hotEntities, autoSaltShare,
-          autoSaltSample)
-        val salted = hot.nonEmpty && saltBuckets > 1
-        val leftSalt: Column =
-          if (!salted) lit(0)
-          else when(col(entity).isin(hot: _*),
-            pmod(xxhash64(col(leftTs)), lit(saltBuckets)).cast("int"))
-            .otherwise(lit(0))
-        val rightStruct = struct(
-          (valueCols.map(col) :+ col(rightTs).as(MatchedTs)): _*)
-        val rightStructType =
-          right.select(rightStruct.as("__r")).schema("__r").dataType
-        val leftStruct = struct(leftCols.map(col): _*)
-        val leftStructType =
-          left.select(leftStruct.as("__l")).schema("__l").dataType
-        val taggedLeft = left.select(
-          col(entity).as("__e"),
-          col(leftTs).as("__t"),
-          lit(1).as("__side"),
-          leftSalt.as("__salt"),
-          leftStruct.as("__l"),
-          lit(null).cast(rightStructType).as("__r"))
-        val rightBase = right
-          .filter(col(entity).isNotNull && col(rightTs).isNotNull)
-          .select(
-            col(entity).as("__e"),
-            col(rightTs).as("__t"),
-            lit(0).as("__side"),
-            rightStruct.as("__r"))
-        val taggedRight = (if (salted)
-          rightBase.withColumn("__salt",
-            explode(when(col("__e").isin(hot: _*),
-              typedLit((0 until saltBuckets).toList))
-              .otherwise(typedLit(List(0)))))
-        else rightBase.withColumn("__salt", lit(0)))
-          .withColumn("__l", lit(null).cast(leftStructType))
-          .select("__e", "__t", "__side", "__salt", "__l", "__r")
-        val unioned = taggedLeft
-          .select("__e", "__t", "__side", "__salt", "__l", "__r")
-          .unionByName(taggedRight)
-        val base = Window.partitionBy(col("__e"), col("__salt"))
-          .orderBy(col("__t"), col("__side"))
-        val wb = base.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)
-        val wf = base.rowsBetween(Window.currentRow,
-          Window.unboundedFollowing)
-        unioned
-          .withColumn("__rb",
-            last(col("__r"), ignoreNulls = true).over(wb))
-          .withColumn("__rf",
-            first(col("__r"), ignoreNulls = true).over(wf))
-          .filter(col("__side") === 1)
-      }
-
-    val lt = col("__l").getField(leftTs)
-    val picked = carried.withColumn("__rv",
-      pickNearest(col("__rb"), col("__rf"), lt))
-    val out = leftCols.map(c => col("__l").getField(c).as(c)) ++
-      valueCols.map(c => col("__rv").getField(c).as(c)) :+
-      col("__rv").getField(MatchedTs).as("matched_ts")
-    picked.select(out: _*)
   }
 
   private val MatchedTs = "__asof_matched_ts"
 
-  private def joinUnion(
-      left: DataFrame, right: DataFrame, entity: String,
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      strict: Boolean, toleranceSeconds: Option[Long],
-      hotEntities: Seq[String], saltBuckets: Int,
-      forward: Boolean): DataFrame = {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  private def micros(ts: Column): Column = unix_micros(ts.cast("timestamp"))
+
+  /** `rv` when its matched ts lies within `tol` of the left ts `t`
+    * (micros), looking back or `forward`.
+    */
+  private def within(rv: Column, t: Column, tol: Option[Long],
+      forward: Boolean): Column = tol.fold(rv) { s =>
+    val m = micros(rv.getField(MatchedTs))
+    when((if (forward) m - t else t - m) <= s * 1000000L, rv)
+  }
+
+  /** One carried match per left row: the latest right row at or before
+    * the left ts, or with `forward` the earliest at or after it;
+    * `strict` excludes the same instant.
+    */
+  private final case class Carry(name: String, forward: Boolean,
+      strict: Boolean) {
+    /** The union's side tag of right rows: at equal ts, side 0 sorts
+      * BEFORE the left rows (side 1) and side 2 AFTER, which decides
+      * whether a same-instant right row falls inside the frame:
+      * backward <= and forward > take 0, backward < and forward >= 2.
+      */
+    def rightSide: Int = if (forward == strict) 0 else 2
+
+    def admits(rightTs: Column, leftTs: Column): Column =
+      (forward, strict) match {
+        case (false, false) => rightTs <= leftTs
+        case (false, true)  => rightTs < leftTs
+        case (true, false)  => rightTs >= leftTs
+        case (true, true)   => rightTs > leftTs
+      }
+  }
+
+  /** The one as-of builder behind [[join]], [[joinForward]] and
+    * [[joinNearest]]: it attaches each carry's right struct (the value
+    * columns + the matched ts) to every left row, `pick` chooses the
+    * emitted one from the left ts in micros and the carries, and the
+    * output is the left columns, the value columns and `matched_ts`.
+    *
+    * The left side travels as `__e` (entity), `__t` (left ts) and
+    * `__l`, a struct of the other left columns; the entity and the left
+    * ts are rebuilt from `__e`/`__t` when those have the left column's
+    * own type (the union widens a key whose type differs from the
+    * right side's, and such a key stays in `__l`). SQL equi-join
+    * semantics on the right: a NULL entity never matches, and a NULL
+    * ts is unordered dirty data (in the window it would sort first and
+    * carry a pseudo-match with a NULL `matched_ts` into unmatched rows).
+    */
+  private def asOf(op: String, left: DataFrame, right: DataFrame,
+      entity: String, leftTs: String, rightTs: String,
+      valueCols: Seq[String], broadcastRight: Boolean, hot: => Seq[String],
+      saltBuckets: Int, carries: Seq[Carry])(
+      pick: (Column, Seq[Column]) => Column): DataFrame = {
     val leftCols = left.columns.toSeq
-    // side ordering at equal ts decides whether same-instant right rows
-    // fall INSIDE the window frame:
-    //   backward <= : right (0) BEFORE left (1) -> visible
-    //   backward <  : right (2) AFTER  left (1) -> invisible
-    //   forward  >= : right (2) AFTER  left (1) -> visible (frame looks
-    //                 forward from the current row)
-    //   forward  >  : right (0) BEFORE left (1) -> invisible
-    val rightSide =
-      if (forward) { if (strict) 0 else 2 }
-      else { if (strict) 2 else 0 }
-
-    val salted = hotEntities.nonEmpty && saltBuckets > 1
-
-    val leftSalt: Column =
-      if (!salted) lit(0)
-      else when(col(entity).isin(hotEntities: _*),
-        pmod(xxhash64(col(leftTs)), lit(saltBuckets)).cast("int"))
-        .otherwise(lit(0))
-
-    val rightStruct = struct(
-      (valueCols.map(col) :+ col(rightTs).as(MatchedTs)): _*)
-    val rightStructType =
-      right.select(rightStruct.as("__r")).schema("__r").dataType
-    val leftStruct = struct(leftCols.map(col): _*)
-    val leftStructType =
-      left.select(leftStruct.as("__l")).schema("__l").dataType
-
-    val taggedLeft = left.select(
-      col(entity).as("__e"),
-      col(leftTs).as("__t"),
-      lit(1).as("__side"),
-      leftSalt.as("__salt"),
-      leftStruct.as("__l"),
-      lit(null).cast(rightStructType).as("__r"))
-
-    // SQL equi-join semantics, matching the broadcast strategy (whose
-    // join condition nulls out on either): a NULL-entity right row
-    // never matches anything, and a NULL-timestamp right row is
-    // unordered dirty data. Without this filter the NULL-ts row sorts
-    // FIRST in the window (a minus-infinity pseudo-match carried into
-    // every otherwise-unmatched left row with matched_ts NULL —
-    // breaking the "matched_ts IS NULL iff no match" invariant), and
-    // NULL entities would match each other through the partition.
-    val rightBase = right
+    val keys = left.select(col(entity).as("__e"), col(leftTs).as("__t"))
+    val rightRows = right
       .filter(col(entity).isNotNull && col(rightTs).isNotNull)
-      .select(
-        col(entity).as("__e"),
-        col(rightTs).as("__t"),
-        lit(rightSide).as("__side"),
-        rightStruct.as("__r"))
-    // replicate hot-entity right rows into every salt bucket
-    val taggedRight = (if (salted)
-      rightBase.withColumn("__salt",
-        explode(when(col("__e").isin(hotEntities: _*),
-          typedLit((0 until saltBuckets).toList))
-          .otherwise(typedLit(List(0)))))
-    else rightBase.withColumn("__salt", lit(0)))
-      .withColumn("__l", lit(null).cast(leftStructType))
-      .select("__e", "__t", "__side", "__salt", "__l", "__r")
+    val keyTypes =
+      if (broadcastRight) keys.schema
+      else keys.unionByName(rightRows
+        .select(col(entity).as("__e"), col(rightTs).as("__t"))).schema
+    val rebuilt = Seq(entity -> "__e", leftTs -> "__t").filter {
+      case (_, k) => keys.schema(k).dataType == keyTypes(k).dataType
+    }.toMap
+    val shipped = leftCols.filterNot(rebuilt.contains)
+    val tagged = left.select(col(entity).as("__e"), col(leftTs).as("__t"),
+      struct(shipped.map(col): _*).as("__l"))
 
-    val unioned = taggedLeft
-      .select("__e", "__t", "__side", "__salt", "__l", "__r")
-      .unionByName(taggedRight)
+    val (carried, hotKeys, buckets) =
+      if (broadcastRight) {
+        // per-entity ts-sorted history, broadcast and probed per carry:
+        // backward takes the LAST admitted entry, forward the FIRST
+        val hist = rightRows.groupBy(col(entity).as("__re"))
+          .agg(sort_array(collect_list(struct(
+            (col(rightTs).as(MatchedTs) +: valueCols.map(col)): _*)))
+            .as("__hist"))
+        val joined = tagged
+          .join(broadcast(hist), col("__e") === col("__re"), "left")
+        (carries.foldLeft(joined) { (d, c) =>
+          val admitted = filter(col("__hist"),
+            r => c.admits(r.getField(MatchedTs), col("__t")))
+          d.withColumn(c.name, when(size(admitted) > 0,
+            element_at(admitted, if (c.forward) 1 else -1)))
+        }, Seq.empty[String], 1)
+      } else {
+        // tag both sides, union, and carry the right struct along one
+        // (entity, salt)-partitioned (ts, side) sort: ONE exchange
+        // (joinNearest's two carries both tag right rows 0)
+        val side = carries.head.rightSide
+        val hotKeys = hot
+        val salted = hotKeys.nonEmpty && saltBuckets > 1
+        val hotKey = col("__e").isin(hotKeys: _*)
+        // a hot entity's left rows spread over the salt buckets by ts;
+        // its right rows are replicated into every bucket
+        val leftSalt =
+          if (salted) when(hotKey,
+            pmod(xxhash64(col("__t")), lit(saltBuckets)).cast("int"))
+            .otherwise(lit(0))
+          else lit(0)
+        val rightSalt =
+          if (salted) explode(when(hotKey,
+            typedLit((0 until saltBuckets).toList))
+            .otherwise(typedLit(List(0))))
+          else lit(0)
+        val taggedRight = rightRows
+          .select(col(entity).as("__e"), col(rightTs).as("__t"),
+            lit(side).as("__side"), struct(
+              (valueCols.map(col) :+ col(rightTs).as(MatchedTs)): _*)
+              .as("__r"))
+          .withColumn("__salt", rightSalt)
+        val unioned = tagged
+          .withColumn("__side", lit(1))
+          .withColumn("__salt", leftSalt)
+          .unionByName(taggedRight, allowMissingColumns = true)
+        val w = Window.partitionBy(col("__e"), col("__salt"))
+          .orderBy(col("__t"), col("__side"))
+        (carries.foldLeft(unioned) { (d, c) =>
+          d.withColumn(c.name,
+            if (c.forward) first(col("__r"), ignoreNulls = true).over(
+              w.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+            else last(col("__r"), ignoreNulls = true).over(
+              w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        }.filter(col("__side") === 1),
+          hotKeys, if (salted) saltBuckets else 1)
+      }
 
-    val base = Window.partitionBy(col("__e"), col("__salt"))
-      .orderBy(col("__t"), col("__side"))
-    val (w, carry) =
-      if (forward)
-        (base.rowsBetween(Window.currentRow, Window.unboundedFollowing),
-          first(col("__r"), ignoreNulls = true))
-      else
-        (base.rowsBetween(Window.unboundedPreceding, Window.currentRow),
-          last(col("__r"), ignoreNulls = true))
-    val carried = unioned
-      .withColumn("__rv", carry.over(w))
-      .filter(col("__side") === 1)
+    log.info(s"asof.plan op=$op " +
+      s"strategy=${if (broadcastRight) "broadcast" else "union"} " +
+      s"hot=${hotKeys.size} buckets=$buckets " +
+      s"shipped=${shipped.mkString(",")} " +
+      s"rebuilt=${leftCols.filter(rebuilt.contains).mkString(",")}")
 
-    finish(carried, leftCols, valueCols, leftTs, toleranceSeconds,
-      forward)
-  }
-
-  private def joinBroadcast(
-      left: DataFrame, right: DataFrame, entity: String,
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      strict: Boolean, toleranceSeconds: Option[Long],
-      forward: Boolean): DataFrame = {
-
-    val leftCols = left.columns.toSeq
-    val rightArr = right
-      .groupBy(col(entity).as("__e"))
-      .agg(sort_array(collect_list(struct(
-        (col(rightTs).as(MatchedTs) +: valueCols.map(col)): _*)))
-        .as("__hist"))
-
-    val joined = left
-      .select(struct(leftCols.map(col): _*).as("__l"),
-        col(entity).as("__le"), col(leftTs).as("__lt"))
-      .join(broadcast(rightArr), col("__le") === col("__e"), "left")
-
-    val cmp: (Column, Column) => Column = (forward, strict) match {
-      case (false, false) => (a, b) => a <= b
-      case (false, true)  => (a, b) => a < b
-      case (true, false)  => (a, b) => a >= b
-      case (true, true)   => (a, b) => a > b
-    }
-    val eligible = filter(col("__hist"),
-      r => cmp(r.getField(MatchedTs), col("__lt")))
-    // history is ts-ascending: backward takes the LAST eligible
-    // (latest past), forward the FIRST (earliest future)
-    val carried = joined.withColumn("__rv",
-      when(size(eligible) > 0,
-        element_at(eligible, if (forward) 1 else -1)))
-
-    finish(carried, leftCols, valueCols, leftTs, toleranceSeconds,
-      forward)
-  }
-
-  private def finish(
-      carried: DataFrame, leftCols: Seq[String], valueCols: Seq[String],
-      leftTs: String, toleranceSeconds: Option[Long],
-      forward: Boolean = false): DataFrame = {
-    val withinTol: Column = toleranceSeconds match {
-      case Some(tol) =>
-        val staleness =
-          if (forward)
-            unix_micros(col("__rv").getField(MatchedTs).cast("timestamp")) -
-              unix_micros(col("__l").getField(leftTs).cast("timestamp"))
-          else
-            unix_micros(col("__l").getField(leftTs).cast("timestamp")) -
-              unix_micros(col("__rv").getField(MatchedTs).cast("timestamp"))
-        col("__rv").isNotNull && (staleness <= tol * 1000000L)
-      case None => col("__rv").isNotNull
-    }
-    val out = leftCols.map(c => col("__l").getField(c).as(c)) ++
-      valueCols.map(c =>
-        when(withinTol, col("__rv").getField(c)).as(c)) :+
-      when(withinTol, col("__rv").getField(MatchedTs))
-        .as("matched_ts")
-    carried.select(out: _*)
+    // `__l` is null on the union's right rows, so every left column it
+    // yields is nullable; a rebuilt key keeps that nullability
+    val l = col("__l")
+    val lNullable = carried.schema("__l").nullable
+    val out = left.schema.map(f => rebuilt.get(f.name) match {
+      case Some(k) if lNullable =>
+        when(l.isNotNull, col(k)).as(f.name, f.metadata)
+      case Some(k) => col(k).as(f.name, f.metadata)
+      case None => l.getField(f.name).as(f.name)
+    }) ++ valueCols.map(c => col("__rv").getField(c).as(c)) :+
+      col("__rv").getField(MatchedTs).as("matched_ts")
+    carried.withColumn("__rv",
+      pick(micros(col("__t")), carries.map(c => col(c.name))))
+      .select(out: _*)
   }
 }

@@ -218,6 +218,59 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
+  /** The `asof.plan` lines `AsOfJoin` logs at INFO while `body` runs. */
+  private def planLines(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("asof-plan", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(AsOfJoin.getClass).asInstanceOf[Logger]
+    val level = logger.getLevel
+    app.start()
+    logger.addAppender(app)
+    logger.setLevel(Level.INFO)
+    try body
+    finally {
+      logger.removeAppender(app)
+      logger.setLevel(level)
+      app.stop()
+    }
+    lines.toArray.map(_.toString).filter(_.startsWith("asof.plan")).toSeq
+  }
+
+  test("asof.plan: one INFO line per join names its strategy, salt, " +
+      "shipped and rebuilt columns; the hot-key pass is described") {
+    val l = df("id INT, e STRING, ts BIGINT",
+      (0 until 40).map(i => Row(i, if (i % 4 == 0) "b" else "a", i * 10L)))
+      .withColumn("ts", timestamp_seconds(col("ts")))
+    val r = df("e STRING, ts BIGINT, v DOUBLE",
+      Seq(Row("a", 5L, 1.0), Row("b", 15L, 2.0)))
+      .withColumn("ts", timestamp_seconds(col("ts")))
+    val lInt = l.withColumn("e", when(col("e") === "a", 1).otherwise(2))
+    val rLong = r.withColumn("e", when(col("e") === "a", 1L).otherwise(2L))
+    val lines = planLines {
+      AsOfJoin.join(l, r, "e", hotEntities = Seq("a"), saltBuckets = 4)
+      AsOfJoin.joinForward(l, r, "e", broadcastRight = true)
+      AsOfJoin.joinNearest(lInt, rLong, "e")
+    }
+    assert(lines == Seq(
+      "asof.plan op=join strategy=union hot=1 buckets=4 shipped=id " +
+        "rebuilt=e,ts",
+      "asof.plan op=forward strategy=broadcast hot=0 buckets=1 shipped=id " +
+        "rebuilt=e,ts",
+      "asof.plan op=nearest strategy=union hot=0 buckets=1 shipped=id,e " +
+        "rebuilt=ts"))
+    val (hot, jobs) = describedJobs(AsOfJoin.detectHotEntities(l, "e", 0.5))
+    assert(hot == Seq("a"))
+    assert(jobs.nonEmpty && jobs.forall(_ == "asof.hot_keys"), jobs)
+  }
+
   test("auto-salted join (runtime hot-key detection, no explicit " +
       "list) == unsalted result") {
     val l = spark.range(0, 2000)

@@ -55,31 +55,6 @@ class DriverFinishSpec extends SparkSpec {
 
   private def scanned: DataFrame = spark.read.parquet(docPath)
 
-  /** `body`'s value and the descriptions of the jobs it ran, checking
-    * that the caller's description is restored.
-    */
-  private def jobsOf[T](body: => T): (T, List[String]) = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty(DrainKey) == null)
-          .foreach(p => descs.add(
-            String.valueOf(p.getProperty("spark.job.description"))))
-    }
-    sc.setJobDescription("caller")
-    try {
-      sc.addSparkListener(l)
-      try {
-        val r = body
-        assert(sc.getLocalProperty("spark.job.description") == "caller")
-        drainListenerBus()
-        (r, descs.asScala.toList)
-      } finally sc.removeSparkListener(l)
-    } finally sc.setJobDescription(null)
-  }
-
   private def rows(d: DataFrame): Seq[String] =
     d.collect().map(_.toString).toSeq.sorted
 
@@ -156,7 +131,7 @@ class DriverFinishSpec extends SparkSpec {
     val local = df("a BIGINT, b STRING",
       Seq(Row(1L, "x"), Row(2L, null), Row(3L, "abcdefghi")))
       .filter(col("a") =!= 2L).select(col("a") * 10, col("b"))
-    val (r, jobs) = jobsOf(DriverFinish.collect(local, "spec"))
+    val (r, jobs) = describedJobs(DriverFinish.collect(local, "spec"))
     assert(jobs.isEmpty, s"jobs: $jobs")
     assert(r.map(_.map(x => (x.getLong(0), x.getUTF8String(1).toString)))
       == Some(Seq((10L, "x"), (30L, "abcdefghi"))))
@@ -169,14 +144,14 @@ class DriverFinishSpec extends SparkSpec {
   test("lshCandidates runs one job past its input count, named, and " +
       "answers as its distributed path, for long and int ids") {
     val in = scanned
-    val (local, jobs) = jobsOf(Dedup.lshCandidates(in, "doc_id", "text"))
+    val (local, jobs) = describedJobs(Dedup.lshCandidates(in, "doc_id", "text"))
     // a file scan's row count takes a job; a cached input's is known
     assert(jobs == List("dedup.candidates", "dedup.candidates"),
       s"jobs: $jobs")
     assert(DriverFinish.held(local).isDefined)
     val cached = scanned.persist()
     cached.count()
-    val (fromCache, one) = jobsOf(
+    val (fromCache, one) = describedJobs(
       Dedup.lshCandidates(cached, "doc_id", "text"))
     assert(one == List("dedup.candidates"), s"jobs: $one")
     val dist = withLimit("-1")(Dedup.lshCandidates(scanned, "doc_id", "text"))
@@ -186,12 +161,12 @@ class DriverFinishSpec extends SparkSpec {
       rows(local).nonEmpty)
     // at -1 nothing runs: the lazy self-join as it is
     val again = scanned
-    val (_, none) = jobsOf(withLimit("-1")(
+    val (_, none) = describedJobs(withLimit("-1")(
       Dedup.lshCandidates(again, "doc_id", "text")))
     assert(none.isEmpty, s"jobs: $none")
     // band rows bounded over the limit (11 docs x 8 x 32 B): only the
     // count runs, and the lazy self-join answers
-    val (joined, counted) = jobsOf(withLimit("1000")(
+    val (joined, counted) = describedJobs(withLimit("1000")(
       Dedup.lshCandidates(cached, "doc_id", "text")))
     assert(counted.isEmpty, s"jobs: $counted")
     assert(DriverFinish.held(joined).isEmpty)
@@ -207,7 +182,7 @@ class DriverFinishSpec extends SparkSpec {
       "and answers as its distributed path") {
     val cands = Dedup.lshCandidates(scanned, "doc_id", "text")
     val in = scanned
-    val (local, jobs) = jobsOf(
+    val (local, jobs) = describedJobs(
       Dedup.verifyJaccard(cands, in, "doc_id", "text", 0.5, 3))
     assert(jobs == List("dedup.verify"), s"jobs: $jobs")
     val dist = withLimit("-1")(
@@ -232,10 +207,10 @@ class DriverFinishSpec extends SparkSpec {
       .toString + "/e"
     edges.write.parquet(p)
     val in = spark.read.parquet(p)
-    val (held, heldJobs) = jobsOf(
+    val (held, heldJobs) = describedJobs(
       Components.connectedComponents(edges, "a", "b").collect())
     assert(heldJobs.isEmpty, s"jobs: $heldJobs")
-    val (local, jobs) = jobsOf(
+    val (local, jobs) = describedJobs(
       Components.connectedComponents(in, "a", "b"))
     assert(jobs == List("dedup.components"), s"jobs: $jobs")
     val dist = withLimit("-1")(
@@ -251,7 +226,7 @@ class DriverFinishSpec extends SparkSpec {
       "distributed path, for long and string ids") {
     spark.catalog.clearCache()
     val in = scanned
-    val (local, jobs) = jobsOf(
+    val (local, jobs) = describedJobs(
       SpanDedup.duplicatedSpans(in, "doc_id", "text", 8))
     assert(jobs == List("text.spans"), s"jobs: $jobs")
     assert(DriverFinish.held(local).isDefined)
@@ -298,11 +273,11 @@ class DriverFinishSpec extends SparkSpec {
     val small = df("doc_id BIGINT, tag STRING", Seq(Row(1L, "a")))
     val join = scanned.join(broadcast(small), Seq("doc_id"), "left")
     val narrow = spark.range(0, 100, 1, 1).toDF("id")
-    val (out, jobs) = jobsOf(Dedup.spreadForKernel(join))
+    val (out, jobs) = describedJobs(Dedup.spreadForKernel(join))
     assert(jobs.isEmpty, s"jobs: $jobs")
     assert(out eq join)
     val target = spark.sparkContext.defaultParallelism
-    val (spread, none) = jobsOf(Dedup.spreadForKernel(narrow))
+    val (spread, none) = describedJobs(Dedup.spreadForKernel(narrow))
     assert(none.isEmpty, s"jobs: $none")
     assert(spread.rdd.getNumPartitions == target)
   }

@@ -47,6 +47,19 @@ class LineageSpec extends SparkSpec {
     assert(cacheEmpty)
   }
 
+  test("featuresOver releases its fit-input cache once the fit is done") {
+    spark.catalog.clearCache()
+    val joined = graft.Flagship.joinedInput(spark, 200L, 2)
+    val cached = graft.Flagship.featuresOver(joined)
+    assert(cacheEmpty)
+    val digest = (d: DataFrame) => d.agg(expr("bit_xor(xxhash64(" +
+      d.columns.map(c => s"`$c`").mkString(",") + "))")).head().getLong(0)
+    assert(cached.count() == 400L && cacheEmpty)
+    assert(digest(cached) ==
+      digest(graft.Flagship.featuresOver(joined, cacheFitInput = false)))
+    assert(cacheEmpty)
+  }
+
   test("scoped: releases in reverse order on normal exit and returns " +
       "the body's value") {
     val order = scala.collection.mutable.ArrayBuffer.empty[Int]

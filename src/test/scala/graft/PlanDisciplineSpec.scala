@@ -74,6 +74,35 @@ class PlanDisciplineSpec extends SparkSpec {
     assert(!plan.contains("SinglePartition"), plan.take(600))
   }
 
+  test("the as-of union exchange ships the entity and the event ts once: " +
+      "the left payload struct holds neither, for all three joins") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.StructType
+    object plans extends AdaptiveSparkPlanHelper
+    val evs = ImageTable.events(spark, 500, 3)
+    val snaps = ImageTable.snapshots(spark, 500)
+    Seq(
+      "join" -> AsOfJoin.join(evs, snaps, entity = "image_id",
+        leftTs = "event_ts", rightTs = "feature_ts"),
+      "joinForward" -> AsOfJoin.joinForward(evs, snaps,
+        entity = "image_id", leftTs = "event_ts", rightTs = "feature_ts"),
+      "joinNearest" -> AsOfJoin.joinNearest(evs, snaps,
+        entity = "image_id", leftTs = "event_ts", rightTs = "feature_ts",
+        hotEntities = Seq("img_0000000001"))).foreach { case (op, out) =>
+      val payloads = plans.collect(out.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.child.output
+          .filter(_.name == "__l").map(_.dataType)
+      }.flatten
+      assert(payloads.size == 1, s"$op: one union exchange carries __l")
+      val fields = payloads.head.asInstanceOf[StructType].fieldNames.toSet
+      assert(fields == Set("event_id", "target"),
+        s"$op: the exchange's __l holds $fields")
+      assert(out.columns.toSeq == evs.columns.toSeq ++
+        Seq("caption_at", "phash_at", "feat", "matched_ts"), op)
+    }
+  }
+
   test("resampleBars: bar agg + grid window are exactly TWO key " +
       "exchanges (bars ride the shuffle, not readings); no join, no " +
       "single-partition stage") {

@@ -43,6 +43,31 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(l)
   }
 
+  /** `body`'s value and the descriptions of the jobs it ran, checking
+    * that the caller's description is restored.
+    */
+  def describedJobs[T](body: => T): (T, List[String]) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty(DrainKey) == null)
+          .foreach(p => descs.add(
+            String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.setJobDescription("caller")
+    try {
+      sc.addSparkListener(l)
+      try {
+        val r = body
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        drainListenerBus()
+        (r, descs.asScala.toList)
+      } finally sc.removeSparkListener(l)
+    } finally sc.setJobDescription(null)
+  }
+
   /** Collect a single column as a seq (null-safe). */
   def column[T](d: DataFrame, c: String): Seq[Any] =
     d.select(c).collect().toSeq.map(r => if (r.isNullAt(0)) null else r.get(0))
