@@ -650,6 +650,8 @@ object AsOfJoin {
         // tag both sides, union, and carry the right struct along one
         // (entity, salt)-partitioned (ts, side) sort: ONE exchange
         // (joinNearest's two carries both tag right rows 0)
+        require(carries.map(_.rightSide).distinct.size == 1,
+          s"asOf $op: carries need one right-side tag for one exchange")
         val side = carries.head.rightSide
         val hotKeys = hot
         val salted = hotKeys.nonEmpty && saltBuckets > 1

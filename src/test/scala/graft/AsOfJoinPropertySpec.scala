@@ -135,6 +135,10 @@ class AsOfJoinPropertySpec extends SparkSpec {
           strict = true, toleranceSeconds = strictTol, broadcastRight = bc,
           hotEntities = hot, saltBuckets = 3), "join", true, strictTol, bc,
           s"join-strict-$mode")
+        // the defaults: non-strict, no tolerance
+        check(AsOfJoin.join(lDf, rDf, "e", "lts", "rts", Seq("v"),
+          broadcastRight = bc, hotEntities = hot, saltBuckets = 3),
+          "join", false, None, bc, s"join-default-$mode")
         check(AsOfJoin.join(lDf, rDf, "e", "lts", "rts", Seq("v"),
           toleranceSeconds = tol, broadcastRight = bc, hotEntities = hot,
           saltBuckets = 3), "join", false, tol, bc, s"join-tol-$mode")
