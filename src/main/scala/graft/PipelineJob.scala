@@ -89,14 +89,16 @@ object PipelineJob {
       // fit once; persist fitted state next to the data it produced.
       // A fitted pipeline is bounded driver state (maps/scalars), so
       // the JSON is small regardless of input size.
-      val pipe = Flagship.fitPipeline(spark, nImages, perImage)
+      // the fit and the transform read one joined input, whose as-of
+      // exchange runs once between them
+      val joined = Flagship.joinedInput(spark, nImages, perImage)
+      val pipe = Flagship.fitPipeline(joined)
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(root))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(root, "pipeline.json"), pipe.toJson)
 
-      val features = pipe.transform(
-        Flagship.joinedInput(spark, nImages, perImage))
+      val features = pipe.transform(joined)
       val res = SnapshotStore.write(features, root,
         SnapshotStore.byKey("image_id", nBuckets),
         maxBucketsPerRun = maxBuckets)

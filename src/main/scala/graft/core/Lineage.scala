@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.SharedRelation
 import org.apache.spark.storage.StorageLevel
 
 /** The engine's one persist-release and lineage-truncation policy: no
@@ -27,6 +28,13 @@ import org.apache.spark.storage.StorageLevel
   *     eager checkpoint when a dir is set (a lost executor does not
   *     fail the loop), else a lazy local one that the round's single
   *     convergence action materialises.
+  *   - [[share]] is a frame that several queries read while its
+  *     shuffles run once (a feature build's fit and transform): the
+  *     queries read one executed plan, so the scheduler skips the map
+  *     stages it has run. Nothing is cached; the shuffle files go with
+  *     the frame, as any query's do, and a lost one is recomputed from
+  *     lineage. Across it, Spark neither prunes columns nor pushes
+  *     filters.
   *
   * Not scoped, because they stay registered until
   * `spark.catalog.clearCache()` by contract (built once, read by later
@@ -35,6 +43,8 @@ import org.apache.spark.storage.StorageLevel
   * decontamination fingerprints and IVF lists.
   */
 object Lineage {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** The caches, staged files and cleanups of one [[scoped]] block. */
   final class Scope private[Lineage] () extends AutoCloseable {
@@ -84,6 +94,22 @@ object Lineage {
     scala.util.Using.resource(new Scope)(body)
 
   def cut(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** `df` with its shuffles run once however many queries read it
+    * (`graftbridge.SharedRelation`): its map stages run as one job,
+    * described `lineage.share <op>`, when the first query reads it. A
+    * plan with no exchange has nothing to share and is returned as is.
+    * Logs one `lineage.share op= path=shared|plan shuffles= partitions=`
+    * line at INFO.
+    */
+  def share(df: DataFrame, op: String): DataFrame = {
+    val (out, shuffles, partitions) =
+      SharedRelation.share(df, s"lineage.share $op")
+    log.info(s"lineage.share op=$op " +
+      s"path=${if (shuffles > 0) "shared" else "plan"} " +
+      s"shuffles=$shuffles partitions=$partitions")
+    out
+  }
 
   def iterate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)

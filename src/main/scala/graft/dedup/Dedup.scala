@@ -712,15 +712,16 @@ object Dedup {
     *     all-pairs work is confined to cells (salting/banding composes
     *     on top if a cell goes hot — at 10^12 scale you'd raise
     *     nSeeds so cells stay bounded, the same nlist tuning as the
-    *     IVF ANN index in [[graft.ann.Knn]]; the literal fold keeps
+    *     IVF ANN index in [[graft.ann.Knn]]; the seed literals keep
     *     the PLAN at O(nSeeds x dim) constants, so past a few hundred
     *     seeds assignment should switch to the broadcast-join +
     *     argmax-aggregate shape of [[graft.ann.Knn.ivfLists]] — same
     *     semantics, plan size independent of nlist).
     *
     * Determinism: seeds are the `nSeeds` smallest-id vectors (no RNG);
-    * ties in the argmax keep the SMALLEST seed id (strict `>` fold in
-    * ascending seed order) — engine-portable, DuckDB-mirrorable.
+    * ties in the argmax keep the SMALLEST seed id (the first greatest
+    * cosine in ascending seed order) — engine-portable,
+    * DuckDB-mirrorable.
     * Assignment is nearest-COSINE, matching the dedup metric.
     */
   def embeddingNearDupsIvf(df: DataFrame, idCol: String,
@@ -738,10 +739,15 @@ object Dedup {
   }
 
   /** `(__id, __q, __blk)` IVF coarse assignment: each vector's cell is
-    * the nearest-cosine seed (ties -> smallest seed id), computed as a
-    * strict-`>` fold over the seed literals — a shuffle-free codegen'd
-    * projection. Exposed for the spec-level equivalence check against
-    * the window-argmax formulation (the shape the DuckDB oracle uses).
+    * the nearest-cosine seed (ties -> smallest seed id), the position of
+    * the first greatest cosine to the seed literals — a shuffle-free
+    * codegen'd projection whose code grows linearly with the seeds (a
+    * `when(c > best.c, ...).otherwise(best)` fold names its running
+    * best twice per seed, so its generated code doubled with each seed
+    * and passed the JVM's 64 KB method limit at 8). A null vector takes
+    * the first seed's cell, as that fold did. Exposed for the spec-level
+    * equivalence check against the window-argmax formulation (the
+    * shape the DuckDB oracle uses).
     */
   private[graft] def ivfCells(df: DataFrame, idCol: String,
       vecCol: String, nSeeds: Int): DataFrame = {
@@ -751,16 +757,12 @@ object Dedup {
     val seeds: Seq[(Any, Seq[Long])] = q.orderBy(col("__id"))
       .limit(nSeeds).collect().toSeq
       .map(r => (r.get(0), r.getSeq[Long](1)))
-    def cosTo(sv: Seq[Long]): Column =
-      cosineQ(col("__q"), array(sv.map(lit(_)): _*))
-    val best = seeds.tail.foldLeft(
-      struct(cosTo(seeds.head._2).as("c"), lit(seeds.head._1).as("s"))) {
-      (acc, seed) =>
-        val c = cosTo(seed._2)
-        when(c > acc.getField("c"),
-          struct(c.as("c"), lit(seed._1).as("s"))).otherwise(acc)
-    }
-    q.select(col("__id"), col("__q"), best.getField("s").as("__blk"))
+    // each seed one array literal, each cosine computed once
+    val cos = array(seeds.map(s => cosineQ(col("__q"), typedLit(s._2))): _*)
+    val first = coalesce(array_position(cos, array_max(cos)), lit(1L))
+    q.select(col("__id"), col("__q"),
+      element_at(array(seeds.map(s => lit(s._1)): _*), first.cast("int"))
+        .as("__blk"))
   }
 
   /** Fuzzy record linkage at edit distance <= 1 — "Jon Smith" /

@@ -219,30 +219,8 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   /** The `asof.plan` lines `AsOfJoin` logs at INFO while `body` runs. */
-  private def planLines(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val app = new AbstractAppender("asof-plan", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        lines.add(e.getMessage.getFormattedMessage)
-    }
-    val logger = LogManager.getLogger(AsOfJoin.getClass).asInstanceOf[Logger]
-    val level = logger.getLevel
-    app.start()
-    logger.addAppender(app)
-    logger.setLevel(Level.INFO)
-    try body
-    finally {
-      logger.removeAppender(app)
-      logger.setLevel(level)
-      app.stop()
-    }
-    lines.toArray.map(_.toString).filter(_.startsWith("asof.plan")).toSeq
-  }
+  private def planLines(body: => Unit): Seq[String] =
+    infoLines(AsOfJoin.getClass, "asof.plan")(body)
 
   test("asof.plan: one INFO line per join names its strategy, salt, " +
       "shipped and rebuilt columns; the hot-key pass is described") {

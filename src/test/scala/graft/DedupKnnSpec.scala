@@ -228,6 +228,32 @@ class DedupKnnSpec extends SparkSpec {
       !plan.contains("BroadcastNestedLoopJoin"), plan.take(900))
   }
 
+  test("embedding IVF near-dup: every whole-stage codegen subtree " +
+      "compiles, within the 64 KB method limit") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object plans extends AdaptiveSparkPlanHelper
+    // the q142 shape: 8 seed cells over 64-dim embeddings
+    val e = spark.range(0, 500).select(col("id"),
+      transform(sequence(lit(0), lit(63)), i =>
+        (pmod(xxhash64(col("id") % 7, i), lit(2000)).cast("double")
+          / 1000.0 - 1.0).cast("float")).as("embedding"))
+    val out = Dedup.embeddingNearDupsIvf(e, "id", "embedding",
+      nSeeds = 8, threshold = 0.25)
+    out.collect()
+    val stages = plans.collect(out.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w
+    }
+    assert(stages.nonEmpty)
+    stages.foreach { w =>
+      val (_, code) = w.doCodeGen()
+      val (_, stats) = CodeGenerator.compile(code)
+      assert(stats.maxMethodCodeSize <= 65535,
+        s"${stats.maxMethodCodeSize} B method in ${w.child.nodeName}")
+    }
+  }
+
   /** Clustered vectors: 5 cluster directions + small per-id noise —
     * the regime LSH is built for (random uniform vectors have
     * near-orthogonal neighbors and defeat any hyperplane scheme).

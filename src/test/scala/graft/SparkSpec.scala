@@ -68,6 +68,35 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.setJobDescription(null)
   }
 
+  /** The lines starting with `prefix` that `source`'s logger logs at
+    * INFO while `body` runs.
+    */
+  def infoLines(source: Class[_], prefix: String)(body: => Unit)
+      : Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender(prefix, null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(source).asInstanceOf[Logger]
+    val level = logger.getLevel
+    app.start()
+    logger.addAppender(app)
+    logger.setLevel(Level.INFO)
+    try body
+    finally {
+      logger.removeAppender(app)
+      logger.setLevel(level)
+      app.stop()
+    }
+    lines.toArray.map(_.toString).filter(_.startsWith(prefix)).toSeq
+  }
+
   /** Collect a single column as a seq (null-safe). */
   def column[T](d: DataFrame, c: String): Seq[Any] =
     d.select(c).collect().toSeq.map(r => if (r.isNullAt(0)) null else r.get(0))
