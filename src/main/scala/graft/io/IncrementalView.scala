@@ -93,10 +93,10 @@ object IncrementalView {
       derivedRoot: String, bucketExpr: Column, entity: String,
       tsCol: String, tieBreakCol: String): MaintainResult =
     maintainView(spark, sourceRoot, derivedRoot, bucketExpr, rows => {
-      val all = struct(rows.columns.map(col): _*)
+      val all = struct(rows.columns.toSeq.map(col): _*)
       val ord = struct(col(tsCol), col(tieBreakCol))
       rows.groupBy(col(entity))
         .agg(max_by(all, ord).as("__r"))
-        .select(rows.columns.map(c => col(s"__r.$c")): _*)
+        .select(rows.columns.toSeq.map(c => col(s"__r.$c")): _*)
     })
 }

@@ -1,9 +1,11 @@
 package graft.multimodal
 
 import graft.validate.PixelCheck
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import java.awt.image.BufferedImage
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.ClassTag
 
 /** Multimodal (image/audio/video-as-binary) column processing.
   *
@@ -18,6 +20,18 @@ import org.apache.spark.sql.types._
   * deterministic fake for formats whose codecs aren't in this
   * container (webp/audio/video). The Spark-side plumbing — schema,
   * partitioning, batch shape — is identical and is what the tests pin.
+  *
+  * Every per-row codec op runs in one of two kernels, one per
+  * quarantine policy. Both keep payload bytes and pixel buffers inside
+  * the partition, decode through the partition's
+  * [[graft.validate.PixelCheck.Codec]], and turn a bad payload into a
+  * row, never a failed job (SURVEY §7.4):
+  *   - append features: the output drops `bytes` and appends the op's
+  *     columns; a null, empty or undecodable payload, or any exception,
+  *     appends the op's failure values instead;
+  *   - re-encode: the output keeps the input schema with `bytes` and
+  *     `fmt` (and, when the raster changes shape, `w`/`h`) replaced; on
+  *     any failure the row passes through unchanged.
   */
 object Multimodal {
 
@@ -45,9 +59,7 @@ object Multimodal {
           while (y < img.getHeight) {
             var x = 0
             while (x < img.getWidth) {
-              val p = img.getRGB(x, y)
-              luma += 0.299 * ((p >> 16) & 0xff) +
-                0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
+              luma += Multimodal.luma(img.getRGB(x, y))
               x += 1
             }
             y += 1
@@ -112,12 +124,154 @@ object Multimodal {
       val total = declaredW.toLong * declaredH
       while (p < total) {
         s ^= s << 13; s ^= s >>> 7; s ^= s << 17
-        luma += 0.299 * (s & 0xff) + 0.587 * ((s >>> 8) & 0xff) +
-          0.114 * ((s >>> 16) & 0xff)
+        luma += Multimodal.luma((s & 0xff).toInt, ((s >>> 8) & 0xff).toInt,
+          ((s >>> 16) & 0xff).toInt)
         p += 1
       }
       ImageFeatures(declaredW, declaredH,
         if (total > 0) luma / total else Double.NaN, ok = bytes.nonEmpty)
+    }
+  }
+
+  /** Rec. 601 luma of one sRGB pixel. */
+  private def luma(r: Int, g: Int, b: Int): Double =
+    0.299 * r + 0.587 * g + 0.114 * b
+
+  /** [[luma]] of a packed RGB pixel. */
+  private def luma(p: Int): Double =
+    luma((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff)
+
+  /** `cell(x0, y0, cw, ch)` of each cell of a `rows`×`cols` tiling of a
+    * `w`×`h` raster, row-major. Cell (i, j) spans rows
+    * [i*h/rows, (i+1)*h/rows) × columns [j*w/cols, (j+1)*w/cols):
+    * integer bounds, at least one pixel each, clipped to the raster —
+    * deterministic, no resampling kernel.
+    */
+  private def tiling[T: ClassTag](w: Int, h: Int, rows: Int, cols: Int)(
+      cell: (Int, Int, Int, Int) => T): Array[T] = {
+    val out = new Array[T](rows * cols)
+    var i = 0
+    while (i < rows) {
+      val y0 = i * h / rows
+      val ch = math.min(math.max((i + 1) * h / rows, y0 + 1), h) - y0
+      var j = 0
+      while (j < cols) {
+        val x0 = j * w / cols
+        val cw = math.min(math.max((j + 1) * w / cols, x0 + 1), w) - x0
+        out(i * cols + j) = cell(x0, y0, cw, ch)
+        j += 1
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** Block-average luma of the `w`×`h` window of `img` at (x0, y0): the
+    * mean of each cell of its `rows`×`cols` [[tiling]], summed
+    * row-major.
+    */
+  private def cellLuma(img: BufferedImage, x0: Int, y0: Int, w: Int,
+      h: Int, rows: Int, cols: Int): Array[Double] =
+    tiling(w, h, rows, cols) { (cx, cy, cw, ch) =>
+      var s = 0.0
+      var y = 0
+      while (y < ch) {
+        var x = 0
+        while (x < cw) {
+          s += luma(img.getRGB(x0 + cx + x, y0 + cy + y))
+          x += 1
+        }
+        y += 1
+      }
+      s / (cw * ch)
+    }
+
+  /** aHash of an 8x8 luma grid: bit 63-k is set when cell k (row-major)
+    * is above the grid mean.
+    */
+  private def aHash(cells: Array[Double]): Long = {
+    val mean = cells.sum / 64
+    var bits = 0L
+    var k = 0
+    while (k < 64) {
+      if (cells(k) > mean) bits |= (1L << (63 - k))
+      k += 1
+    }
+    bits
+  }
+
+  /** The row's decoded payload, or null when the payload is null, empty
+    * or does not decode.
+    */
+  private def decodeOrNull(codec: PixelCheck.Codec, r: Row, bytesIdx: Int,
+      fmtIdx: Int): BufferedImage =
+    try {
+      val bytes = r.getAs[Array[Byte]](bytesIdx)
+      if (bytes == null || bytes.isEmpty) null
+      else codec.decode(bytes, r.getString(fmtIdx))
+    } catch { case _: Exception => null }
+
+  /** The append-features kernel: every input column but `bytes`, then
+    * `fields` filled by `features` from the row and the partition's
+    * codec; a null result or any exception fills `failed` instead.
+    */
+  private def appendFeatures(df: DataFrame, fields: Seq[StructField],
+      failed: Seq[Any])(
+      features: (Row, PixelCheck.Codec) => Seq[Any]): DataFrame = {
+    val inSchema = df.schema
+    val bytesIdx = inSchema.fieldIndex("bytes")
+    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
+    implicit val enc = Encoders.row(
+      StructType(keptIdx.map(inSchema.fields) ++ fields))
+    df.mapPartitions { it =>
+      val codec = PixelCheck.Codec.forTask()
+      it.map { r =>
+        val out = try features(r, codec) catch { case _: Exception => null }
+        Row.fromSeq(keptIdx.map(r.get) ++ (if (out == null) failed else out))
+      }
+    }
+  }
+
+  /** [[appendFeatures]] over the decoded image: a payload that does not
+    * decode fills `failed`.
+    */
+  private def pixelFeatures(df: DataFrame, fields: Seq[StructField],
+      failed: Seq[Any])(features: (Row, BufferedImage) => Seq[Any])
+      : DataFrame = {
+    val Seq(bytesIdx, fmtIdx) = Seq("bytes", "fmt").map(df.schema.fieldIndex)
+    appendFeatures(df, fields, failed) { (r, codec) =>
+      val img = decodeOrNull(codec, r, bytesIdx, fmtIdx)
+      if (img == null) null else features(r, img)
+    }
+  }
+
+  /** The re-encode kernel. `render(row)` runs outside the quarantine,
+    * so its `require`s fail the job; it returns the raster transform to
+    * apply, or null to pass the row through before any decode. The
+    * transform's result (null passes the row through) is encoded as
+    * `fmt` into `bytes` and `fmt`, and, with `newDims`, its size into
+    * `w`/`h`.
+    */
+  private def reEncode(df: DataFrame, fmt: String, newDims: Boolean)(
+      render: Row => BufferedImage => BufferedImage): DataFrame = {
+    val inSchema = df.schema
+    val Seq(bytesIdx, fmtIdx) = Seq("bytes", "fmt").map(inSchema.fieldIndex)
+    val dimsIdx = if (newDims) Seq("w", "h").map(inSchema.fieldIndex) else Nil
+    implicit val enc = Encoders.row(inSchema)
+    df.mapPartitions { it =>
+      val codec = PixelCheck.Codec.forTask()
+      it.map { r =>
+        val transform = render(r)
+        try {
+          val img = if (transform == null) null
+            else decodeOrNull(codec, r, bytesIdx, fmtIdx)
+          val out = if (img == null) null else transform(img)
+          if (out == null) r
+          else Row.fromSeq((Seq(bytesIdx -> codec.encode(out, fmt),
+            fmtIdx -> fmt) ++ dimsIdx.zip(Seq(out.getWidth, out.getHeight)))
+            .foldLeft(r.toSeq) { case (vs, (i, v)) => vs.updated(i, v) })
+        } catch { case _: Exception => r }
+      }
     }
   }
 
@@ -133,37 +287,20 @@ object Multimodal {
     * PAYLOAD DOES NOT PASS THROUGH: re-serialising the binary column
     * into every output row is a pure memcpy tax (it saturates memory
     * bandwidth long before the decode math saturates cores). The output
-    * keeps every non-payload column + the four feature columns.
+    * keeps every non-payload column + the four feature columns. The
+    * decoder gets the payload bytes (a null payload as empty bytes) and
+    * the declared dims; a decoder exception (a stream truncated after a
+    * valid magic, a null w/h) reports (-1, -1, NaN, false).
     */
   def withDecodeFeatures(df: DataFrame, decoder: Decoder): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(
-      keptIdx.map(inSchema.fields) ++ FeatureFields)
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      it.map { r =>
-        // null payload behaves like an empty one; a decoder exception
-        // (truncated-after-valid-magic stream, null w/h) is a ROW you
-        // quarantine (ok=false), not a job you kill — the same per-row
-        // discipline as auditPayloads/averageHash/lumaStats
-        val f =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            decoder.decode(bytes,
-              r.getString(fmtIdx), r.getInt(wIdx), r.getInt(hIdx))
-          } catch {
-            case _: Exception =>
-              ImageFeatures(-1, -1, Double.NaN, ok = false)
-          }
-        Row.fromSeq(keptIdx.map(r.get) ++
-          Seq(f.decodedW, f.decodedH, f.meanLuma, f.ok))
-      }
+    val Seq(bytesIdx, fmtIdx, wIdx, hIdx) =
+      Seq("bytes", "fmt", "w", "h").map(df.schema.fieldIndex)
+    appendFeatures(df, FeatureFields, Seq(-1, -1, Double.NaN, false)) {
+      (r, _) =>
+        val f = decoder.decode(Option(r.getAs[Array[Byte]](bytesIdx))
+          .getOrElse(Array.emptyByteArray),
+          r.getString(fmtIdx), r.getInt(wIdx), r.getInt(hIdx))
+        Seq(f.decodedW, f.decodedH, f.meanLuma, f.ok)
     }
   }
 
@@ -202,56 +339,28 @@ object Multimodal {
     */
   def auditPayloads(df: DataFrame, seed: Long,
       minPsnrDb: Double = 40.0): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+    val Seq(idIdx, fmtIdx, wIdx, hIdx) =
+      Seq("image_id", "fmt", "w", "h").map(df.schema.fieldIndex)
+    pixelFeatures(df, Seq(
       StructField("decoded_w", IntegerType),
       StructField("decoded_h", IntegerType),
       StructField("psnr_db", DoubleType),
-      StructField("pixels_ok", BooleanType)))
-    val idIdx = inSchema.fieldIndex("image_id")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      // one codec per partition: per-format readers reused across rows;
-      // cleanup via the task-completion listener (fires even when the
-      // iterator is abandoned early)
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val audit: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(-1, -1, Double.NaN, false)
-            else {
-              val w = r.getInt(wIdx); val hh = r.getInt(hIdx)
-              val id = r.getString(idIdx).substring(4).toLong
-              if (img.getWidth != w || img.getHeight != hh)
-                Seq(img.getWidth, img.getHeight, Double.NaN, false)
-              else {
-                val expected = PixelCheck.toImage(
-                  PixelCheck.syntheticPixels(
-                    graft.io.ImageTable.pixelSeed(seed, id), w, hh), w, hh)
-                val p = PixelCheck.psnr(expected, img)
-                val ok = r.getString(fmtIdx) match {
-                  case "png" => p.isPosInfinity
-                  case _ => p >= minPsnrDb
-                }
-                Seq(img.getWidth, img.getHeight, p, ok)
-              }
-            }
-          } catch {
-            case _: Exception => Seq(-1, -1, Double.NaN, false)
-          }
-        Row.fromSeq(kept ++ audit)
+      StructField("pixels_ok", BooleanType)),
+      Seq(-1, -1, Double.NaN, false)) { (r, img) =>
+      val w = r.getInt(wIdx); val hh = r.getInt(hIdx)
+      val id = r.getString(idIdx).substring(4).toLong
+      if (img.getWidth != w || img.getHeight != hh)
+        Seq(img.getWidth, img.getHeight, Double.NaN, false)
+      else {
+        val expected = PixelCheck.toImage(
+          PixelCheck.syntheticPixels(
+            graft.io.ImageTable.pixelSeed(seed, id), w, hh), w, hh)
+        val p = PixelCheck.psnr(expected, img)
+        val ok = r.getString(fmtIdx) match {
+          case "png" => p.isPosInfinity
+          case _ => p >= minPsnrDb
+        }
+        Seq(img.getWidth, img.getHeight, p, ok)
       }
     }
   }
@@ -265,74 +374,16 @@ object Multimodal {
     * open: pixels -> hash -> [[phashNearDups]] banded dedup, all
     * engine-side. Two payloads with IDENTICAL decoded pixels hash
     * identically regardless of container format (q124 exploits this
-    * for a value-exact oracle).
-    *
-    * Same partition discipline as the audit: one codec per partition,
-    * payload and pixels die inside it, 1 long + ok flag leave.
+    * for a value-exact oracle). An undecodable payload reports
+    * (0, false).
     */
-  def averageHash(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+  def averageHash(df: DataFrame): DataFrame =
+    pixelFeatures(df, Seq(
       StructField("ahash", LongType),
-      StructField("ahash_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val hash: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(0L, false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val cells = new Array[Double](64)
-              var i = 0
-              while (i < 8) {
-                val y0 = i * h / 8; val y1 = math.max((i + 1) * h / 8, y0 + 1)
-                var j = 0
-                while (j < 8) {
-                  val x0 = j * w / 8
-                  val x1 = math.max((j + 1) * w / 8, x0 + 1)
-                  var s = 0.0; var n = 0
-                  var y = y0
-                  while (y < math.min(y1, h)) {
-                    var x = x0
-                    while (x < math.min(x1, w)) {
-                      val p = img.getRGB(x, y)
-                      s += 0.299 * ((p >> 16) & 0xff) +
-                        0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
-                      n += 1; x += 1
-                    }
-                    y += 1
-                  }
-                  cells(i * 8 + j) = if (n > 0) s / n else 0.0
-                  j += 1
-                }
-                i += 1
-              }
-              val mean = cells.sum / 64
-              var bits = 0L
-              var k = 0
-              while (k < 64) {
-                if (cells(k) > mean) bits |= (1L << (63 - k))
-                k += 1
-              }
-              Seq(bits, true)
-            }
-          } catch { case _: Exception => Seq(0L, false) }
-        Row.fromSeq(kept ++ hash)
-      }
+      StructField("ahash_ok", BooleanType)), Seq(0L, false)) { (_, img) =>
+      Seq(aHash(cellLuma(img, 0, 0, img.getWidth, img.getHeight, 8, 8)),
+        true)
     }
-  }
 
   /** Per-TILE average hash — [[averageHash]] computed independently
     * on each cell of a `grid`×`grid` tiling of the decoded image
@@ -343,95 +394,19 @@ object Multimodal {
     * is what makes crop-resistant near-dup possible: a quadrant
     * steal, watermark crop, or thumbnail-of-a-region matches its
     * source through [[cropNearDups]] even though the FULL-image
-    * hashes differ in ~half their bits.
-    *
-    * Same partition discipline as every codec op here: one
-    * partition-reused codec, payload bytes and pixels die inside the
-    * partition, grid² longs + ok flag leave.
+    * hashes differ in ~half their bits. An undecodable payload reports
+    * grid² zeros and false.
     */
   def tileAverageHash(df: DataFrame, grid: Int = 2): DataFrame = {
     require(grid >= 1 && grid <= 8,
       s"tileAverageHash: grid in [1,8], got $grid")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+    pixelFeatures(df, Seq(
       StructField("tile_hashes", ArrayType(LongType, false)),
-      StructField("tiles_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val out: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(Array.fill(grid * grid)(0L), false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val hashes = new Array[Long](grid * grid)
-              var ty = 0
-              while (ty < grid) {
-                val ty0 = ty * h / grid
-                val ty1 = math.max((ty + 1) * h / grid, ty0 + 1)
-                val th = math.min(ty1, h) - ty0
-                var tx = 0
-                while (tx < grid) {
-                  val tx0 = tx * w / grid
-                  val tx1 = math.max((tx + 1) * w / grid, tx0 + 1)
-                  val tw = math.min(tx1, w) - tx0
-                  // [[averageHash]]'s exact integer cell bounds on a
-                  // standalone tw×th image, offset by the tile origin
-                  val cells = new Array[Double](64)
-                  var i = 0
-                  while (i < 8) {
-                    val y0 = i * th / 8
-                    val y1 = math.max((i + 1) * th / 8, y0 + 1)
-                    var j = 0
-                    while (j < 8) {
-                      val x0 = j * tw / 8
-                      val x1 = math.max((j + 1) * tw / 8, x0 + 1)
-                      var s = 0.0; var n = 0
-                      var y = y0
-                      while (y < math.min(y1, th)) {
-                        var x = x0
-                        while (x < math.min(x1, tw)) {
-                          val p = img.getRGB(tx0 + x, ty0 + y)
-                          s += 0.299 * ((p >> 16) & 0xff) +
-                            0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
-                          n += 1; x += 1
-                        }
-                        y += 1
-                      }
-                      cells(i * 8 + j) = if (n > 0) s / n else 0.0
-                      j += 1
-                    }
-                    i += 1
-                  }
-                  val mean = cells.sum / 64
-                  var bits = 0L
-                  var k = 0
-                  while (k < 64) {
-                    if (cells(k) > mean) bits |= (1L << (63 - k))
-                    k += 1
-                  }
-                  hashes(ty * grid + tx) = bits
-                  tx += 1
-                }
-                ty += 1
-              }
-              Seq(hashes, true)
-            }
-          } catch { case _: Exception =>
-            Seq(Array.fill(grid * grid)(0L), false) }
-        Row.fromSeq(kept ++ out)
-      }
+      StructField("tiles_ok", BooleanType)),
+      Seq(Array.fill(grid * grid)(0L), false)) { (_, img) =>
+      Seq(tiling(img.getWidth, img.getHeight, grid, grid) {
+        (x0, y0, tw, th) => aHash(cellLuma(img, x0, y0, tw, th, 8, 8))
+      }, true)
     }
   }
 
@@ -443,73 +418,35 @@ object Multimodal {
     * and matches iff the DECODED tile pixels are bit-identical —
     * the right tool for lossless-pipeline crop detection
     * ([[cropExactDups]]): a losslessly re-encoded crop of tile
-    * (i,j) fingerprints identically to entry i·grid+j. Same
-    * partition discipline as every codec op here (grid² longs + ok
-    * flag leave the partition; pixels die inside).
+    * (i,j) fingerprints identically to entry i·grid+j. An
+    * undecodable payload reports grid² zeros and false.
     */
   def tileFingerprint(df: DataFrame, grid: Int = 2): DataFrame = {
     require(grid >= 1 && grid <= 8,
       s"tileFingerprint: grid in [1,8], got $grid")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+    pixelFeatures(df, Seq(
       StructField("tile_fps", ArrayType(LongType, false)),
-      StructField("tiles_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val out: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(Array.fill(grid * grid)(0L), false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val fps = new Array[Long](grid * grid)
-              var ty = 0
-              while (ty < grid) {
-                val ty0 = ty * h / grid
-                val ty1 = math.max((ty + 1) * h / grid, ty0 + 1)
-                val th = math.min(ty1, h) - ty0
-                var tx = 0
-                while (tx < grid) {
-                  val tx0 = tx * w / grid
-                  val tx1 = math.max((tx + 1) * w / grid, tx0 + 1)
-                  val tw = math.min(tx1, w) - tx0
-                  var fp = 0xcbf29ce484222325L
-                  @inline def mix(b: Int): Unit = {
-                    fp ^= (b & 0xff); fp *= 0x100000001b3L
-                  }
-                  mix(tw); mix(tw >> 8); mix(th); mix(th >> 8)
-                  var y = 0
-                  while (y < th) {
-                    var x = 0
-                    while (x < tw) {
-                      val p = img.getRGB(tx0 + x, ty0 + y)
-                      mix(p >> 16); mix(p >> 8); mix(p)
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  fps(ty * grid + tx) = fp
-                  tx += 1
-                }
-                ty += 1
-              }
-              Seq(fps, true)
+      StructField("tiles_ok", BooleanType)),
+      Seq(Array.fill(grid * grid)(0L), false)) { (_, img) =>
+      Seq(tiling(img.getWidth, img.getHeight, grid, grid) {
+        (x0, y0, tw, th) =>
+          var fp = 0xcbf29ce484222325L
+          @inline def mix(b: Int): Unit = {
+            fp ^= (b & 0xff); fp *= 0x100000001b3L
+          }
+          mix(tw); mix(tw >> 8); mix(th); mix(th >> 8)
+          var y = 0
+          while (y < th) {
+            var x = 0
+            while (x < tw) {
+              val p = img.getRGB(x0 + x, y0 + y)
+              mix(p >> 16); mix(p >> 8); mix(p)
+              x += 1
             }
-          } catch { case _: Exception =>
-            Seq(Array.fill(grid * grid)(0L), false) }
-        Row.fromSeq(kept ++ out)
-      }
+            y += 1
+          }
+          fp
+      }, true)
     }
   }
 
@@ -600,144 +537,64 @@ object Multimodal {
     * reason image pipelines pair the two hashes.
     * Container-invariant like aHash (a function of the
     * pixel matrix alone — q136 proves it on lossless transcode
-    * twins); same partition discipline (one codec per partition,
-    * pixels die inside it).
+    * twins). An undecodable payload reports (0, false).
     */
-  def differenceHash(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+  def differenceHash(df: DataFrame): DataFrame =
+    pixelFeatures(df, Seq(
       StructField("dhash", LongType),
-      StructField("dhash_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val hash: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(0L, false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val cells = new Array[Double](72) // 8 rows x 9 cols
-              var i = 0
-              while (i < 8) {
-                val y0 = i * h / 8
-                val y1 = math.max((i + 1) * h / 8, y0 + 1)
-                var j = 0
-                while (j < 9) {
-                  val x0 = j * w / 9
-                  val x1 = math.max((j + 1) * w / 9, x0 + 1)
-                  var s = 0.0; var n = 0
-                  var y = y0
-                  while (y < math.min(y1, h)) {
-                    var x = x0
-                    while (x < math.min(x1, w)) {
-                      val p = img.getRGB(x, y)
-                      s += 0.299 * ((p >> 16) & 0xff) +
-                        0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
-                      n += 1; x += 1
-                    }
-                    y += 1
-                  }
-                  cells(i * 9 + j) = if (n > 0) s / n else 0.0
-                  j += 1
-                }
-                i += 1
-              }
-              var bits = 0L
-              var k = 0
-              while (k < 64) {
-                val i0 = k / 8; val j0 = k % 8
-                if (cells(i0 * 9 + j0) > cells(i0 * 9 + j0 + 1))
-                  bits |= (1L << (63 - k))
-                k += 1
-              }
-              Seq(bits, true)
-            }
-          } catch { case _: Exception => Seq(0L, false) }
-        Row.fromSeq(kept ++ hash)
+      StructField("dhash_ok", BooleanType)), Seq(0L, false)) { (_, img) =>
+      val cells = cellLuma(img, 0, 0, img.getWidth, img.getHeight, 8, 9)
+      var bits = 0L
+      var k = 0
+      while (k < 64) {
+        val i0 = k / 8; val j0 = k % 8
+        if (cells(i0 * 9 + j0) > cells(i0 * 9 + j0 + 1))
+          bits |= (1L << (63 - k))
+        k += 1
       }
+      Seq(bits, true)
     }
-  }
 
   /** Low-information image gate: decode each payload and compute
     * per-image luma statistics — `mean_luma`, population `std_luma` —
     * plus `flat` (std <= `flatStd`: near-constant images — blank
     * thumbnails, tracking pixels, solid placeholders — the classic
     * junk an image-caption curation pass drops) and `luma_ok` (decode
-    * verdict; undecodable/null payloads report `flat = false` — they
-    * are the QUARANTINE gate's business ([[auditPayloads]]), not this
-    * filter's).
-    *
-    * Same discipline as every codec op here: mapPartitions with a
-    * partition-reused [[graft.validate.PixelCheck.Codec]], payload
-    * bytes die inside the partition (dropped from the output schema),
-    * fixed row-major accumulation so the doubles are deterministic.
+    * verdict; undecodable/null payloads report (0.0, 0.0, false,
+    * false) — they are the QUARANTINE gate's business
+    * ([[auditPayloads]]), not this filter's). Fixed row-major
+    * accumulation keeps the doubles deterministic.
     */
-  def lumaStats(df: DataFrame, flatStd: Double = 2.0): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+  def lumaStats(df: DataFrame, flatStd: Double = 2.0): DataFrame =
+    pixelFeatures(df, Seq(
       StructField("mean_luma", DoubleType),
       StructField("std_luma", DoubleType),
       StructField("flat", BooleanType),
-      StructField("luma_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val stats: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(0.0, 0.0, false, false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              // Welford's online update, fixed row-major order: the
-              // single-pass s2/n - mean^2 form cancels catastrophically
-              // on large images (mean^2 ~1.6e4 vs variance ~4 at the
-              // flat threshold) and can flip the flat verdict; Welford
-              // is the same O(wh) cost and numerically stable
-              var n = 0L; var mean = 0.0; var m2 = 0.0
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val p = img.getRGB(x, y)
-                  val l = 0.299 * ((p >> 16) & 0xff) +
-                    0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
-                  n += 1
-                  val d = l - mean
-                  mean += d / n
-                  m2 += d * (l - mean)
-                  x += 1
-                }
-                y += 1
-              }
-              val std = if (n > 0) math.sqrt(math.max(m2 / n, 0.0)) else 0.0
-              Seq(mean, std, std <= flatStd, true)
-            }
-          } catch { case _: Exception => Seq(0.0, 0.0, false, false) }
-        Row.fromSeq(kept ++ stats)
+      StructField("luma_ok", BooleanType)),
+      Seq(0.0, 0.0, false, false)) { (_, img) =>
+      val w = img.getWidth; val h = img.getHeight
+      // Welford's online update, fixed row-major order: the
+      // single-pass s2/n - mean^2 form cancels catastrophically
+      // on large images (mean^2 ~1.6e4 vs variance ~4 at the
+      // flat threshold) and can flip the flat verdict; Welford
+      // is the same O(wh) cost and numerically stable
+      var n = 0L; var mean = 0.0; var m2 = 0.0
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val l = luma(img.getRGB(x, y))
+          n += 1
+          val d = l - mean
+          mean += d / n
+          m2 += d * (l - mean)
+          x += 1
+        }
+        y += 1
       }
+      val std = if (n > 0) math.sqrt(math.max(m2 / n, 0.0)) else 0.0
+      Seq(mean, std, std <= flatStd, true)
     }
-  }
 
   /** Per-image EXACT per-channel pixel statistics: pixel count plus
     * integer sums and sums-of-squares of the R/G/B channels (sRGB
@@ -749,67 +606,34 @@ object Multimodal {
     * lets a lossless transcode twin certify bit-equality through the
     * driver gate (q187) and lets the corpus aggregate distribute as
     * a plain map-side-combined SUM. Undecodable/null payloads report
-    * zeros with `channels_ok = false`. Same partition discipline as
-    * every codec op here: reused codec, bytes dropped from the
-    * output schema, fixed row-major scan.
+    * zeros with `channels_ok = false`.
     */
-  def channelStats(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
-      StructField("n_px", LongType),
-      StructField("r_sum", LongType),
-      StructField("g_sum", LongType),
-      StructField("b_sum", LongType),
-      StructField("r_sq", LongType),
-      StructField("g_sq", LongType),
-      StructField("b_sq", LongType),
-      StructField("channels_ok", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val kept = keptIdx.map(r.get)
-        val stats: Seq[Any] =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) Seq(0L, 0L, 0L, 0L, 0L, 0L, 0L, false)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              var n = 0L
-              var rs = 0L; var gs = 0L; var bs = 0L
-              var rq = 0L; var gq = 0L; var bq = 0L
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val p = img.getRGB(x, y)
-                  val rv = (p >> 16) & 0xff
-                  val gv = (p >> 8) & 0xff
-                  val bv = p & 0xff
-                  rs += rv; gs += gv; bs += bv
-                  rq += rv.toLong * rv; gq += gv.toLong * gv
-                  bq += bv.toLong * bv
-                  n += 1; x += 1
-                }
-                y += 1
-              }
-              Seq(n, rs, gs, bs, rq, gq, bq, true)
-            }
-          } catch {
-            case _: Exception => Seq(0L, 0L, 0L, 0L, 0L, 0L, 0L, false)
-          }
-        Row.fromSeq(kept ++ stats)
+  def channelStats(df: DataFrame): DataFrame =
+    pixelFeatures(df, Seq("n_px", "r_sum", "g_sum", "b_sum", "r_sq",
+      "g_sq", "b_sq").map(StructField(_, LongType)) :+
+      StructField("channels_ok", BooleanType),
+      Seq(0L, 0L, 0L, 0L, 0L, 0L, 0L, false)) { (_, img) =>
+      val w = img.getWidth; val h = img.getHeight
+      var n = 0L
+      var rs = 0L; var gs = 0L; var bs = 0L
+      var rq = 0L; var gq = 0L; var bq = 0L
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val p = img.getRGB(x, y)
+          val rv = (p >> 16) & 0xff
+          val gv = (p >> 8) & 0xff
+          val bv = p & 0xff
+          rs += rv; gs += gv; bs += bv
+          rq += rv.toLong * rv; gq += gv.toLong * gv
+          bq += bv.toLong * bv
+          n += 1; x += 1
+        }
+        y += 1
       }
+      Seq(n, rs, gs, bs, rq, gq, bq, true)
     }
-  }
 
   /** Corpus-level channel normalization constants (the dataset
     * mean/std per channel a vision training pipeline bakes into its
@@ -923,42 +747,14 @@ object Multimodal {
     * (png = lossless: the decoded pixel matrix is preserved exactly,
     * so pixel-derived features — [[averageHash]], PSNR audits — are
     * invariant under the container change; jpeg = lossy re-encode).
-    * Undecodable payloads pass through UNCHANGED with `fmt` intact —
-    * quarantine first ([[auditPayloads]]) if that matters. Same
-    * partition discipline as every codec op here.
+    * `w`/`h` keep their declared values. Undecodable payloads pass
+    * through UNCHANGED with `fmt` intact — quarantine first
+    * ([[auditPayloads]]) if that matters.
     */
   def transcode(df: DataFrame, targetFmt: String): DataFrame = {
     require(Seq("png", "jpeg").contains(targetFmt),
       s"unsupported target format $targetFmt")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    implicit val enc = org.apache.spark.sql.Encoders.row(inSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val out =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) None
-            else Some((codec.encode(img, targetFmt), targetFmt))
-          } catch { case _: Exception => None }
-        out match {
-          case None => r
-          case Some((bytes, fmt)) =>
-            Row.fromSeq(r.toSeq.zipWithIndex.map {
-              case (_, `bytesIdx`) => bytes
-              case (_, `fmtIdx`) => fmt
-              case (v, _) => v
-            })
-        }
-      }
-    }
+    reEncode(df, targetFmt, newDims = false)(_ => identity)
   }
 
   /** Per-payload resize result: target dims, mean + checksum of the
@@ -993,9 +789,7 @@ object Multimodal {
               val sy = y * h / targetH
               var x = 0
               while (x < targetW) {
-                val p = img.getRGB(x * w / targetW, sy)
-                sum += math.round(0.299 * ((p >> 16) & 0xff) +
-                  0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff))
+                sum += math.round(luma(img.getRGB(x * w / targetW, sy)))
                 x += 1
               }
               y += 1
@@ -1038,44 +832,28 @@ object Multimodal {
     }
   }
 
-  /** Attach resize features (same mapPartitions batch shape as
-    * [[withDecodeFeatures]]; payload does not pass through).
+  /** Attach resize features (same batch shape as
+    * [[withDecodeFeatures]]; payload does not pass through). A resizer
+    * exception reports (0, 0, NaN, 0, false).
     */
   def withResizeFeatures(df: DataFrame, resizer: Resizer,
       targetW: Int, targetH: Int): DataFrame = {
     require(targetW > 0 && targetH > 0,
       s"target dims must be positive, got ${targetW}x$targetH")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val keptIdx = inSchema.fields.indices.filterNot(_ == bytesIdx)
-    val outSchema = StructType(keptIdx.map(inSchema.fields) ++ Seq(
+    val Seq(bytesIdx, fmtIdx, wIdx, hIdx) =
+      Seq("bytes", "fmt", "w", "h").map(df.schema.fieldIndex)
+    appendFeatures(df, Seq(
       StructField("resized_w", IntegerType),
       StructField("resized_h", IntegerType),
       StructField("resized_mean", DoubleType),
       StructField("resized_checksum", LongType),
-      StructField("resize_ok", BooleanType)))
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { it =>
-      it.map { r =>
-        // per-row quarantine, same doctrine as withDecodeFeatures: a
-        // resizer exception must flag the row, not kill the job
-        val f =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            resizer.resize(bytes,
-              r.getString(fmtIdx), r.getInt(wIdx), r.getInt(hIdx),
-              targetW, targetH)
-          } catch {
-            case _: Exception =>
-              ResizeFeatures(0, 0, Double.NaN, 0L, ok = false)
-          }
-        Row.fromSeq(keptIdx.map(r.get) ++
-          Seq(f.w, f.h, f.mean, f.checksum, f.ok))
-      }
+      StructField("resize_ok", BooleanType)),
+      Seq(0, 0, Double.NaN, 0L, false)) { (r, _) =>
+      val f = resizer.resize(Option(r.getAs[Array[Byte]](bytesIdx))
+        .getOrElse(Array.emptyByteArray),
+        r.getString(fmtIdx), r.getInt(wIdx), r.getInt(hIdx),
+        targetW, targetH)
+      Seq(f.w, f.h, f.mean, f.checksum, f.ok)
     }
   }
 
@@ -1352,6 +1130,28 @@ object Multimodal {
       blockSize)
   }
 
+  /** NN-sample `img` onto a `tw x th` grid with the SAME integer
+    * source rule as [[ImageIoResizer]] (`src = x * w div tw`), so a
+    * normalized compare of an NN-upscaled twin against its original
+    * recovers the original exactly.
+    */
+  private def nnSample(img: BufferedImage, tw: Int, th: Int)
+      : BufferedImage = {
+    val out = new BufferedImage(tw, th, BufferedImage.TYPE_INT_RGB)
+    val (w, h) = (img.getWidth, img.getHeight)
+    var y = 0
+    while (y < th) {
+      val sy = y * h / th
+      var x = 0
+      while (x < tw) {
+        out.setRGB(x, y, img.getRGB(x * w / tw, sy))
+        x += 1
+      }
+      y += 1
+    }
+    out
+  }
+
   /** Candidate-pair PSNR verify — the graded SECOND stage of image
     * dedup. Stage 1 ([[phashNearDups]] / [[graft.multimodal.PhashIndex]])
     * proposes candidate pairs from the 64-bit hash column alone; this
@@ -1366,9 +1166,9 @@ object Multimodal {
     * so payloads move only for the candidate ids — the distinct id set
     * is broadcast into the corpus scan (a corpus-side filter, NO
     * corpus shuffle), and only the surviving payloads shuffle, once
-    * per pair side. Decode happens in one mapPartitions with a
-    * partition-reused codec; pixel buffers die inside the partition
-    * and 5 scalars per pair leave.
+    * per pair side. Its own two-payload kernel decodes each side like
+    * the append-features kernel; pixel buffers die inside the
+    * partition and 5 scalars per pair leave.
     *
     * Verdicts per pair (decode failures audit false, never throw):
     *   - decode_ok   — both payloads decoded
@@ -1386,29 +1186,6 @@ object Multimodal {
     * +Infinity against its original while `dims_match` stays false —
     * the verify stage for [[resizeEncode]]-materialized ladders.
     */
-  /** NN-sample `img` onto a `tw x th` grid with the SAME integer
-    * source rule as [[ImageIoResizer]] (`src = x * w div tw`), so a
-    * normalized compare of an NN-upscaled twin against its original
-    * recovers the original exactly.
-    */
-  private def nnSample(img: java.awt.image.BufferedImage, tw: Int,
-      th: Int): java.awt.image.BufferedImage = {
-    val out = new java.awt.image.BufferedImage(tw, th,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val (w, h) = (img.getWidth, img.getHeight)
-    var y = 0
-    while (y < th) {
-      val sy = y * h / th
-      var x = 0
-      while (x < tw) {
-        out.setRGB(x, y, img.getRGB(x * w / tw, sy))
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   def pairPsnrVerify(imgs: DataFrame, idCol: String, pairs: DataFrame,
       aCol: String = "id_a", bCol: String = "id_b",
       minPsnrDb: Double = 40.0, normalizeDims: Boolean = false): DataFrame = {
@@ -1446,21 +1223,13 @@ object Multimodal {
         StructField("psnr_db", DoubleType),
         StructField("exact", BooleanType),
         StructField("is_dup", BooleanType)))
-    implicit val enc = org.apache.spark.sql.Encoders.row(outSchema)
+    implicit val enc = Encoders.row(outSchema)
     joined.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      def dec(r: Row, bi: Int, fi: Int): java.awt.image.BufferedImage =
-        try {
-          val bytes = Option(r.getAs[Array[Byte]](bi))
-            .getOrElse(Array.emptyByteArray)
-          if (bytes.isEmpty) null else codec.decode(bytes, r.getString(fi))
-        } catch { case _: Exception => null }
+      val codec = PixelCheck.Codec.forTask()
       it.map { r =>
         val kept = keptIdx.map(r.get).toIndexedSeq
-        val ia = dec(r, baIdx, faIdx)
-        val ib = dec(r, bbIdx, fbIdx)
+        val ia = decodeOrNull(codec, r, baIdx, faIdx)
+        val ib = decodeOrNull(codec, r, bbIdx, fbIdx)
         val verdict: Seq[Any] =
           if (ia == null || ib == null)
             Seq(false, false, null, false, false)
@@ -1502,51 +1271,18 @@ object Multimodal {
     * originals (+Infinity for every true pair).
     *
     * Undecodable payloads pass through UNCHANGED (quarantine first
-    * via [[auditPayloads]]); null/absurd targets are rejected up
-    * front. Same partition discipline as every codec op: one codec
-    * per partition, pixel buffers die inside it.
+    * via [[auditPayloads]]); a null or absurd target fails the job.
     */
   def resizeEncode(df: DataFrame, twCol: String, thCol: String,
       maxDim: Int = 16384): DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    val twIdx = inSchema.fieldIndex(twCol)
-    val thIdx = inSchema.fieldIndex(thCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(inSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        require(!r.isNullAt(twIdx) && !r.isNullAt(thIdx),
-          s"resizeEncode: null target dims in ($twCol, $thCol)")
-        val tw = r.getInt(twIdx); val th = r.getInt(thIdx)
-        require(tw > 0 && th > 0 && tw <= maxDim && th <= maxDim,
-          s"resizeEncode: bad target ${tw}x$th (maxDim $maxDim)")
-        val out =
-          try {
-            val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-              .getOrElse(Array.emptyByteArray)
-            val img = if (bytes.isEmpty) null
-              else codec.decode(bytes, r.getString(fmtIdx))
-            if (img == null) None
-            else Some(codec.encode(nnSample(img, tw, th), "png"))
-          } catch { case _: Exception => None }
-        out match {
-          case None => r
-          case Some(newBytes) =>
-            Row.fromSeq(r.toSeq.zipWithIndex.map {
-              case (_, `bytesIdx`) => newBytes
-              case (_, `fmtIdx`) => "png"
-              case (_, `wIdx`) => tw
-              case (_, `hIdx`) => th
-              case (v, _) => v
-            })
-        }
-      }
+    val Seq(twIdx, thIdx) = Seq(twCol, thCol).map(df.schema.fieldIndex)
+    reEncode(df, "png", newDims = true) { r =>
+      require(!r.isNullAt(twIdx) && !r.isNullAt(thIdx),
+        s"resizeEncode: null target dims in ($twCol, $thCol)")
+      val tw = r.getInt(twIdx); val th = r.getInt(thIdx)
+      require(tw > 0 && th > 0 && tw <= maxDim && th <= maxDim,
+        s"resizeEncode: bad target ${tw}x$th (maxDim $maxDim)")
+      nnSample(_, tw, th)
     }
   }
 
@@ -1598,7 +1334,7 @@ object Multimodal {
     val w = col(wCol); val h = col(hCol)
     val ok = w.isNotNull && h.isNotNull && w >= 1 && h >= 1
     val cw = least(lit(cropW), w); val ch = least(lit(cropH), h)
-    df.select(df.columns.map(col) ++ Seq(
+    df.select(df.columns.toSeq.map(col) ++ Seq(
       when(ok, cw).cast("int").as("crop_w"),
       when(ok, ch).cast("int").as("crop_h"),
       when(ok, pmod(sub(3266489917L), (w - cw + 1).cast("long")))
@@ -1618,9 +1354,7 @@ object Multimodal {
     * [[augmentPlan]]'s quarantine rows compose), an undecodable
     * payload, or a window that falls outside the DECODED bounds
     * (declared-dims drift is a row you quarantine via
-    * [[auditPayloads]], never a job you kill). Same partition
-    * discipline as [[resizeEncode]]: one codec per partition, pixel
-    * buffers die inside it, nothing shuffles.
+    * [[auditPayloads]], never a job you kill).
     */
   def cropEncode(df: DataFrame, xCol: String, yCol: String,
       cwCol: String, chCol: String): DataFrame =
@@ -1638,8 +1372,7 @@ object Multimodal {
     * Pass-through (row unchanged) quarantines: a null plan field, an
     * undecodable payload, a window outside the DECODED bounds, or a
     * jitter level with no entry in `jitterDeltas` — per-row
-    * discipline, never a dead job. One codec per partition; pixel
-    * buffers die inside it; nothing shuffles.
+    * discipline, never a dead job. Nothing shuffles.
     */
   def augmentEncode(df: DataFrame, xCol: String, yCol: String,
       cwCol: String, chCol: String, flipCol: Option[String] = None,
@@ -1648,82 +1381,49 @@ object Multimodal {
     require(jitterCol.isEmpty == jitterDeltas.isEmpty,
       "augmentEncode: jitterCol and jitterDeltas come together " +
         "(a level column needs its delta table and vice versa)")
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    val planIdx = Seq(xCol, yCol, cwCol, chCol)
-      .map(inSchema.fieldIndex)
-    val flipIdx = flipCol.map(inSchema.fieldIndex)
-    val jitterIdx = jitterCol.map(inSchema.fieldIndex)
-    implicit val enc = org.apache.spark.sql.Encoders.row(inSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val nullPlan = planIdx.exists(r.isNullAt) ||
-          flipIdx.exists(r.isNullAt) || jitterIdx.exists(r.isNullAt)
-        val out =
-          if (nullPlan) None
-          else {
-            val Seq(cx, cy, cw, ch) = planIdx.map(r.getInt)
-            val flip = flipIdx.exists(r.getBoolean)
-            val delta = jitterIdx match {
-              case None => Some(0)
-              case Some(ji) =>
-                val lvl = r.getInt(ji)
-                if (lvl >= 0 && lvl < jitterDeltas.length)
-                  Some(jitterDeltas(lvl))
-                else None // level outside the table: quarantine row
-            }
-            try {
-              val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-                .getOrElse(Array.emptyByteArray)
-              val img = if (bytes.isEmpty) null
-                else codec.decode(bytes, r.getString(fmtIdx))
-              if (img == null || delta.isEmpty ||
-                  cx < 0 || cy < 0 || cw < 1 || ch < 1 ||
-                  cx + cw > img.getWidth || cy + ch > img.getHeight)
-                None
-              else {
-                val d = delta.get
-                val crop = new java.awt.image.BufferedImage(cw, ch,
-                  java.awt.image.BufferedImage.TYPE_INT_RGB)
-                var y = 0
-                while (y < ch) {
-                  var x = 0
-                  while (x < cw) {
-                    val sx = if (flip) cx + (cw - 1 - x) else cx + x
-                    val p = img.getRGB(sx, cy + y)
-                    val q = if (d == 0) p & 0xffffff else {
-                      def ch8(v: Int) =
-                        math.min(255, math.max(0, v + d))
-                      (ch8((p >> 16) & 0xff) << 16) |
-                        (ch8((p >> 8) & 0xff) << 8) | ch8(p & 0xff)
-                    }
-                    crop.setRGB(x, y, q)
-                    x += 1
-                  }
-                  y += 1
-                }
-                Some(codec.encode(crop, "png"))
-              }
-            } catch { case _: Exception => None }
-          }
-        out match {
-          case None => r
-          case Some(newBytes) =>
-            val cw = r.getInt(planIdx(2)); val ch = r.getInt(planIdx(3))
-            Row.fromSeq(r.toSeq.zipWithIndex.map {
-              case (_, `bytesIdx`) => newBytes
-              case (_, `fmtIdx`) => "png"
-              case (_, `wIdx`) => cw
-              case (_, `hIdx`) => ch
-              case (v, _) => v
-            })
+    val planIdx = Seq(xCol, yCol, cwCol, chCol).map(df.schema.fieldIndex)
+    val flipIdx = flipCol.map(df.schema.fieldIndex)
+    val jitterIdx = jitterCol.map(df.schema.fieldIndex)
+    reEncode(df, "png", newDims = true) { r =>
+      val nullPlan = planIdx.exists(r.isNullAt) ||
+        flipIdx.exists(r.isNullAt) || jitterIdx.exists(r.isNullAt)
+      if (nullPlan) null
+      else {
+        val Seq(cx, cy, cw, ch) = planIdx.map(r.getInt)
+        val flip = flipIdx.exists(r.getBoolean)
+        val delta = jitterIdx match {
+          case None => Some(0)
+          case Some(ji) =>
+            val lvl = r.getInt(ji)
+            if (lvl >= 0 && lvl < jitterDeltas.length)
+              Some(jitterDeltas(lvl))
+            else None // level outside the table: quarantine row
         }
+        if (delta.isEmpty) null
+        else img =>
+          if (cx < 0 || cy < 0 || cw < 1 || ch < 1 ||
+              cx + cw > img.getWidth || cy + ch > img.getHeight) null
+          else {
+            val d = delta.get
+            val crop = new BufferedImage(cw, ch, BufferedImage.TYPE_INT_RGB)
+            var y = 0
+            while (y < ch) {
+              var x = 0
+              while (x < cw) {
+                val sx = if (flip) cx + (cw - 1 - x) else cx + x
+                val p = img.getRGB(sx, cy + y)
+                val q = if (d == 0) p & 0xffffff else {
+                  def ch8(v: Int) = math.min(255, math.max(0, v + d))
+                  (ch8((p >> 16) & 0xff) << 16) |
+                    (ch8((p >> 8) & 0xff) << 8) | ch8(p & 0xff)
+                }
+                crop.setRGB(x, y, q)
+                x += 1
+              }
+              y += 1
+            }
+            crop
+          }
       }
     }
   }
@@ -1742,75 +1442,41 @@ object Multimodal {
     *
     * Pass-through quarantines (row unchanged): null plan fields,
     * undecodable payload, rotation outside the table — per-row
-    * discipline, never a dead job. One codec per partition; pixel
-    * buffers die inside it; nothing shuffles.
+    * discipline, never a dead job. Nothing shuffles.
     */
   def orientEncode(df: DataFrame, flipCol: String, rotCol: String)
       : DataFrame = {
-    val inSchema = df.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val fmtIdx = inSchema.fieldIndex("fmt")
-    val wIdx = inSchema.fieldIndex("w")
-    val hIdx = inSchema.fieldIndex("h")
-    val flipIdx = inSchema.fieldIndex(flipCol)
-    val rotIdx = inSchema.fieldIndex(rotCol)
-    implicit val enc = org.apache.spark.sql.Encoders.row(inSchema)
-    df.mapPartitions { it =>
-      val codec = new PixelCheck.Codec
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => codec.close()))
-      it.map { r =>
-        val out =
-          if (r.isNullAt(flipIdx) || r.isNullAt(rotIdx)) None
-          else {
-            val flip = r.getBoolean(flipIdx)
-            val rot = r.getInt(rotIdx)
-            try {
-              val bytes = Option(r.getAs[Array[Byte]](bytesIdx))
-                .getOrElse(Array.emptyByteArray)
-              val img = if (bytes.isEmpty) null
-                else codec.decode(bytes, r.getString(fmtIdx))
-              if (img == null || !Set(0, 90, 180, 270).contains(rot))
-                None
-              else {
-                val sw = img.getWidth; val sh = img.getHeight
-                val (ow, oh) =
-                  if (rot == 90 || rot == 270) (sh, sw) else (sw, sh)
-                val dst = new java.awt.image.BufferedImage(ow, oh,
-                  java.awt.image.BufferedImage.TYPE_INT_RGB)
-                var y = 0
-                while (y < oh) {
-                  var x = 0
-                  while (x < ow) {
-                    // invert the CW rotation: which FLIPPED-image
-                    // pixel lands at display (x, y)?
-                    val (fx, fy) = rot match {
-                      case 0 => (x, y)
-                      case 90 => (y, sh - 1 - x)
-                      case 180 => (sw - 1 - x, sh - 1 - y)
-                      case _ => (sw - 1 - y, x) // 270
-                    }
-                    // flip-H ran FIRST on the stored pixels
-                    val sx = if (flip) sw - 1 - fx else fx
-                    dst.setRGB(x, y, img.getRGB(sx, fy) & 0xffffff)
-                    x += 1
-                  }
-                  y += 1
-                }
-                Some((codec.encode(dst, "png"), ow, oh))
+    val Seq(flipIdx, rotIdx) = Seq(flipCol, rotCol).map(df.schema.fieldIndex)
+    reEncode(df, "png", newDims = true) { r =>
+      if (r.isNullAt(flipIdx) || r.isNullAt(rotIdx)) null
+      else {
+        val flip = r.getBoolean(flipIdx)
+        val rot = r.getInt(rotIdx)
+        if (!Set(0, 90, 180, 270).contains(rot)) null
+        else img => {
+          val sw = img.getWidth; val sh = img.getHeight
+          val (ow, oh) = if (rot == 90 || rot == 270) (sh, sw) else (sw, sh)
+          val dst = new BufferedImage(ow, oh, BufferedImage.TYPE_INT_RGB)
+          var y = 0
+          while (y < oh) {
+            var x = 0
+            while (x < ow) {
+              // invert the CW rotation: which FLIPPED-image
+              // pixel lands at display (x, y)?
+              val (fx, fy) = rot match {
+                case 0 => (x, y)
+                case 90 => (y, sh - 1 - x)
+                case 180 => (sw - 1 - x, sh - 1 - y)
+                case _ => (sw - 1 - y, x) // 270
               }
-            } catch { case _: Exception => None }
+              // flip-H ran FIRST on the stored pixels
+              val sx = if (flip) sw - 1 - fx else fx
+              dst.setRGB(x, y, img.getRGB(sx, fy) & 0xffffff)
+              x += 1
+            }
+            y += 1
           }
-        out match {
-          case None => r
-          case Some((newBytes, ow, oh)) =>
-            Row.fromSeq(r.toSeq.zipWithIndex.map {
-              case (_, `bytesIdx`) => newBytes
-              case (_, `fmtIdx`) => "png"
-              case (_, `wIdx`) => ow
-              case (_, `hIdx`) => oh
-              case (v, _) => v
-            })
+          dst
         }
       }
     }

@@ -783,6 +783,6 @@ object OofMeanResponse {
         // 0/0 is engine-dependent, a null is not
         when(den > 0, num / den)
       })
-      .select((df.columns :+ out).map(col): _*) // input order kept
+      .select((df.columns.toSeq :+ out).map(col): _*) // input order kept
   }
 }

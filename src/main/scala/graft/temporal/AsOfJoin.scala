@@ -459,12 +459,12 @@ object AsOfJoin {
       case None => Seq.empty
     }
 
-  /** The right columns a join carries: the given ones, else all but
+  /** The right columns a join carries: the named ones, else all but
     * entity/ts.
     */
   private def valuesOf(right: DataFrame, entity: String, rightTs: String,
-      given: Seq[String]): Seq[String] =
-    if (given.nonEmpty) given
+      named: Seq[String]): Seq[String] =
+    if (named.nonEmpty) named
     else right.columns.filterNot(c => c == entity || c == rightTs).toSeq
 
   /** FORWARD as-of join: for each left row, the EARLIEST right row

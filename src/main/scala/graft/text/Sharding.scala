@@ -466,7 +466,7 @@ object Sharding {
       .agg(min(col(cumCol)).as("__shard_start"))
     df.join(broadcast(starts), shardCols)
       .withColumn(out, col(cumCol) - col("__shard_start"))
-      .select(df.columns.map(col) :+ col(out): _*) // input order kept
+      .select(df.columns.toSeq.map(col) :+ col(out): _*) // input order kept
   }
 
   /** Shard-level export manifest: member count, payload bytes, id

@@ -825,7 +825,7 @@ object TextOps {
     val sorted = rows.sortBy(_._1)
     val z = sorted.foldLeft(0.0)((a, kv) =>
       a + math.pow(kv._2.toDouble, alpha))
-    sorted.map { case (st, n) =>
+    sorted.toSeq.map { case (st, n) =>
       // 12dp half-away-from-zero round (positive input): kills any
       // cross-engine last-ulp wobble in the z fold before the floor
       val share = math.floor(

@@ -69,27 +69,28 @@ object PixelCheck {
     try c.encode(img, fmt) finally c.close()
   }
 
-  /** Partition-reusable codec: the writer instance, write param and
-    * 4:4:4 metadata are built ONCE and reused for every image — the
-    * per-image `getImageWritersByFormatName` registry lookup plus the
-    * DOM metadata-tree rebuild are measurable codec overhead AND a
-    * cross-thread contention source at 16 local executor threads. NOT
-    * thread-safe: one instance per partition (single-threaded), like
-    * any decoder state in the mapPartitions batch shape.
+  /** Partition-reusable codec: each writer and reader, the jpeg write
+    * param and the 4:4:4 metadata are built on first use and reused
+    * for every image — the per-image `getImageWritersByFormatName`
+    * registry lookup plus the DOM metadata-tree rebuild are measurable
+    * codec overhead AND a cross-thread contention source at 16 local
+    * executor threads. NOT thread-safe: one instance per partition
+    * (single-threaded), like any decoder state in the mapPartitions
+    * batch shape; [[Codec.forTask]] makes that instance.
     */
   final class Codec {
-    private val jpegWriter =
-      ImageIO.getImageWritersByFormatName("jpeg").next()
-    private val pngWriter =
-      ImageIO.getImageWritersByFormatName("png").next()
-    private val (jpegParam, jpegMeta) = {
-      val p = jpegWriter.getDefaultWriteParam
+    private val writers =
+      scala.collection.mutable.HashMap.empty[String, javax.imageio.ImageWriter]
+    private def writer(fmt: String) = writers.getOrElseUpdate(fmt,
+      ImageIO.getImageWritersByFormatName(fmt).next())
+    private lazy val (jpegParam, jpegMeta) = {
+      val p = writer("jpeg").getDefaultWriteParam
       p.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
       p.setCompressionQuality(0.95f)
       // force 4:4:4: set every SOF componentSpec sampling factor to 1
       val typ = javax.imageio.ImageTypeSpecifier
         .createFromBufferedImageType(BufferedImage.TYPE_INT_RGB)
-      val meta = jpegWriter.getDefaultImageMetadata(typ, p)
+      val meta = writer("jpeg").getDefaultImageMetadata(typ, p)
       val fmtName = "javax_imageio_jpeg_image_1.0"
       val tree = meta.getAsTree(fmtName)
         .asInstanceOf[org.w3c.dom.Element]
@@ -114,13 +115,14 @@ object PixelCheck {
       val ios = ImageIO.createImageOutputStream(bos)
       fmt match {
         case "png" =>
-          pngWriter.setOutput(ios)
-          pngWriter.write(null, new IIOImage(img, null, null),
-            pngWriter.getDefaultWriteParam)
+          val w = writer("png")
+          w.setOutput(ios)
+          w.write(null, new IIOImage(img, null, null),
+            w.getDefaultWriteParam)
         case "jpeg" | "jpg" =>
-          jpegWriter.setOutput(ios)
-          jpegWriter.write(null, new IIOImage(img, null, jpegMeta),
-            jpegParam)
+          val w = writer("jpeg")
+          w.setOutput(ios)
+          w.write(null, new IIOImage(img, null, jpegMeta), jpegParam)
         case other =>
           throw new IllegalArgumentException(s"unsupported format $other")
       }
@@ -155,9 +157,22 @@ object PixelCheck {
     }
 
     def close(): Unit = {
-      jpegWriter.dispose()
-      pngWriter.dispose()
+      writers.valuesIterator.foreach(_.dispose())
       readers.valuesIterator.foreach(_.dispose())
+    }
+  }
+
+  object Codec {
+
+    /** The codec of the running task's partition, closed when the task
+      * completes — also when its iterator is abandoned early (a limit,
+      * a take, a killed task). Outside a task the caller closes it.
+      */
+    def forTask(): Codec = {
+      val c = new Codec
+      Option(org.apache.spark.TaskContext.get()).foreach(
+        _.addTaskCompletionListener[Unit](_ => c.close()))
+      c
     }
   }
 

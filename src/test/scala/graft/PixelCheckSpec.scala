@@ -320,4 +320,191 @@ class PixelCheckSpec extends SparkSpec {
       only.getAs[Double]("g_std") == 0.0 &&
       only.getAs[Double]("b_std") == 0.0)
   }
+
+  // ---- every single-payload codec op on the payloads it must survive ----
+
+  /** A 37x23 raster (odd sizes, so the integer cell bounds of every
+    * grid are uneven) rendered exactly as `imagesReal` renders id 5,
+    * so the audit passes it; `mirrored` flips its top 12 rows left to
+    * right, so that the cells of row band 3 of an 8-row grid mix both.
+    */
+  private def goldenPng(mirrored: Boolean): Array[Byte] = {
+    val (w, h) = (37, 23)
+    val px = PixelCheck.syntheticPixels(ImageTable.pixelSeed(42L, 5L), w, h)
+    val out = Array.tabulate(w * h) { i =>
+      px(if (mirrored && i / w < 12) i / w * w + (w - 1 - i % w) else i) }
+    PixelCheck.encode(PixelCheck.toImage(out, w, h), "png")
+  }
+
+  /** ids 1-3 carry a null, an empty and a truncated png payload; id 4
+    * the half-mirrored raster's png bytes labelled webp and declared 40x20
+    * (neither true); id 5 the raster as png, declared 37x23. The plan
+    * columns drive the re-encoders.
+    */
+  private def payloadCases = {
+    val png = goldenPng(mirrored = false)
+    df("image_id string, bytes binary, w int, h int, fmt string, " +
+      "tw int, th int, cx int, cy int, cw int, ch int, flip boolean, " +
+      "rot int, jitter int",
+      Seq[(Array[Byte], String, Int, Int)](
+        (null, "png", 37, 23), (Array.emptyByteArray, "png", 37, 23),
+        (png.take(png.length / 2), "png", 37, 23),
+        (goldenPng(mirrored = true), "webp", 40, 20),
+        (png, "png", 37, 23)).zipWithIndex.map { case ((b, f, w, h), i) =>
+          org.apache.spark.sql.Row(f"img_${i + 1}%010d", b, w, h, f,
+            10, 7, 1, 2, 5, 4, true, 90, 1)
+        })
+  }
+
+  /** A value as the pins below spell it: doubles by `toString` (so NaN
+    * and the last ulp show), arrays element-wise, payloads by length
+    * and content hash.
+    */
+  private def show(v: Any): String = v match {
+    case null => "null"
+    case b: Array[Byte] => s"b${b.length}#${java.util.Arrays.hashCode(b)}"
+    case s: scala.collection.Seq[_] => s.map(show).mkString("[", " ", "]")
+    case x => x.toString
+  }
+
+  test("codec ops: exact failure rows on null, empty and truncated " +
+      "payloads, sniffed decode of a mislabelled one, golden values " +
+      "on an odd-sized raster") {
+    import graft.multimodal.Multimodal
+    val in = payloadCases
+    val inRows = in.collect().map(r => r.getString(0) -> r).toMap
+    val reEncoded = Seq("bytes", "fmt", "w", "h")
+    def failing(v: String) = Seq.fill(3)(v)
+    val zeros9 = "[0 0 0 0 0 0 0 0 0],false"
+    // (op, output, its own columns, the five rows' values); a
+    // re-encoder's "unchanged" row is the input row itself
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame, Seq[String],
+        Seq[String])] = Seq(
+      // the Decoder/Resizer see bytes (null as empty) and the declared
+      // dims; a non-png/jpeg format goes to the stub
+      ("withDecodeFeatures",
+        Multimodal.withDecodeFeatures(in, Multimodal.ImageIoDecoder),
+        Seq("decoded_w", "decoded_h", "mean_luma", "decode_ok"),
+        failing("-1,-1,NaN,false") ++ Seq("40,20,6.43,true",
+          "37,23,129.48256991774394,true")),
+      // ImageIO.read gives null on null/empty bytes and throws on the
+      // truncated stream: two different failure rows
+      ("withResizeFeatures",
+        Multimodal.withResizeFeatures(in, Multimodal.ImageIoResizer, 10, 7),
+        Seq("resized_w", "resized_h", "resized_mean", "resized_checksum",
+          "resize_ok"),
+        Seq.fill(2)("-1,-1,NaN,-1,false") ++ Seq("0,0,NaN,0,false",
+          "10,7,101.81428571428572,7127,true",
+          "10,7,117.12857142857143,8199,true")),
+      ("auditPayloads", Multimodal.auditPayloads(in, seed = 42),
+        Seq("decoded_w", "decoded_h", "psnr_db", "pixels_ok"),
+        failing("-1,-1,NaN,false") ++ Seq("37,23,NaN,false",
+          "37,23,Infinity,true")),
+      // every pixel op below decodes the webp-labelled png by sniffing
+      ("averageHash", Multimodal.averageHash(in), Seq("ahash", "ahash_ok"),
+        failing("0,false") ++ Seq("966367641599,true",
+          "31138512895,true")),
+      ("tileAverageHash", Multimodal.tileAverageHash(in, grid = 3),
+        Seq("tile_hashes", "tiles_ok"),
+        failing(zeros9) ++ Seq(
+          "[553933340671 828811247615 141703738490879 54316973906986783 " +
+            "828878356479 3238002687 31138512895 13958643711 " +
+            "1130104881151],true",
+          "[1130104881151 30601641983 13421772799 1130113269759 " +
+            "13958643711 13421772799 31138512895 13958643711 " +
+            "1130104881151],true")),
+      ("tileFingerprint", Multimodal.tileFingerprint(in, grid = 3),
+        Seq("tile_fps", "tiles_ok"),
+        failing(zeros9) ++ Seq(
+          "[7451854768614652282 -8554687653256306394 " +
+            "1620988037393103337 5282307936238402372 " +
+            "-8130546463870197144 -8723866479386319732 " +
+            "2011891074671812771 4876054175117899247 " +
+            "-3510352544930020127],true",
+          "[-4059757599779176765 5749950808459186455 " +
+            "-8620401581456803171 6274529887642892554 " +
+            "-8904544279703963197 -5009967457100300427 " +
+            "2011891074671812771 4876054175117899247 " +
+            "-3510352544930020127],true")),
+      ("differenceHash", Multimodal.differenceHash(in),
+        Seq("dhash", "dhash_ok"),
+        failing("0,false") ++ Seq("-4294967296,true", "0,true")),
+      // Welford's order shows in the last ulp between the two rasters
+      ("lumaStats", Multimodal.lumaStats(in),
+        Seq("mean_luma", "std_luma", "flat", "luma_ok"),
+        failing("0.0,0.0,false,false") ++ Seq(
+          "129.48256991774386,43.20894087079406,false,true",
+          "129.48256991774383,43.20894087079409,false,true")),
+      ("channelStats", Multimodal.channelStats(in),
+        Seq("n_px", "r_sum", "g_sum", "b_sum", "r_sq", "g_sq", "b_sq",
+          "channels_ok"),
+        failing("0,0,0,0,0,0,0,false") ++ Seq.fill(2)(
+          "851,108123,108114,126298,18596121,18768398,25212770,true")),
+      // transcode keeps the declared dims; the others write the new ones
+      ("transcode", Multimodal.transcode(in, "jpeg"), reEncoded,
+        failing("unchanged") ++ Seq("b1161#57561175,jpeg,40,20",
+          "b1053#432946419,jpeg,37,23")),
+      ("resizeEncode", Multimodal.resizeEncode(in, "tw", "th"), reEncoded,
+        failing("unchanged") ++ Seq("b262#-488250524,png,10,7",
+          "b261#-329566891,png,10,7")),
+      ("augmentEncode", Multimodal.augmentEncode(in, "cx", "cy", "cw",
+        "ch", Some("flip"), Some("jitter"), IndexedSeq(0, 3)), reEncoded,
+        failing("unchanged") ++ Seq("b126#1159741929,png,5,4",
+          "b123#-1584189760,png,5,4")),
+      ("orientEncode", Multimodal.orientEncode(in, "flip", "rot"),
+        reEncoded, failing("unchanged") ++ Seq(
+          "b2173#-727608643,png,23,37", "b2173#-1876495130,png,23,37")))
+    cases.foreach { case (op, out, cols, expected) =>
+      val reEncoder = cols == reEncoded
+      // an appending op drops the payload, a re-encoder keeps the schema
+      assert(out.columns.toSeq == (if (reEncoder) in.columns.toSeq
+        else in.columns.toSeq.filterNot(_ == "bytes") ++ cols), op)
+      val rows = out.collect().map(r => r.getString(0) -> r).toMap
+      assert(rows.size == 5, op)
+      (1 to 5).map(i => f"img_$i%010d").zip(expected).foreach {
+        case (id, want) =>
+          val r = rows(id)
+          if (want == "unchanged")
+            assert(r.toSeq.map(show) == inRows(id).toSeq.map(show),
+              s"$op $id")
+          else {
+            assert(cols.map(c => show(r.get(r.fieldIndex(c))))
+              .mkString(",") == want, s"$op $id")
+            // the columns an op does not own pass through
+            out.columns.filterNot(cols.contains).foreach(c =>
+              assert(show(r.get(r.fieldIndex(c))) ==
+                show(inRows(id).get(inRows(id).fieldIndex(c))), s"$op $id $c"))
+          }
+      }
+    }
+  }
+
+  test("source discipline: one codec lifecycle, two codec kernels in " +
+      "Multimodal, one luma formula") {
+    import scala.jdk.CollectionConverters._
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val root = Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve("src/main/scala"))
+      .find(java.nio.file.Files.isDirectory(_))
+      .getOrElse(fail(s"no src/main/scala above $cwd"))
+    val pixelCheck = root.resolve("graft/validate/PixelCheck.scala")
+    val multimodal = root.resolve("graft/multimodal/Multimodal.scala")
+    val walk = java.nio.file.Files.walk(root)
+    val sources = try walk.iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala")) finally walk.close()
+    assert(sources.contains(pixelCheck) && sources.contains(multimodal))
+    def lines(f: java.nio.file.Path) =
+      java.nio.file.Files.readAllLines(f).asScala.toList
+    val codecSite = "addTaskCompletionListener|new\\s+(graft\\.validate\\.)?" +
+      "PixelCheck\\.Codec\\b"
+    val hits = for {
+      f <- sources if f != pixelCheck
+      (line, i) <- lines(f).zipWithIndex
+      if codecSite.r.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    val mm = lines(multimodal)
+    assert(mm.count(_.contains("Encoders.row")) <= 3)
+    assert(mm.count(_.contains("0.299")) == 1)
+  }
 }

@@ -38,7 +38,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val back = SnapshotStore.read(spark, root)
     assert(back.count() === 1000)
     assert(back.columns.toSet === Set("doc_id", "text"))
-    assert(back.select(sum("doc_id")).head.getLong(0) === 499500L)
+    assert(back.select(sum("doc_id")).head().getLong(0) === 499500L)
     assert(SnapshotStore.verify(spark, root).isEmpty)
   }
 
@@ -79,7 +79,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val r3 = SnapshotStore.write(d2, root, bucket)
     assert(r3.written.size === 1)
     val changed = SnapshotStore.read(spark, root)
-      .filter(col("doc_id") === 123L).select("text").head.getString(0)
+      .filter(col("doc_id") === 123L).select("text").head().getString(0)
     assert(changed === "CHANGED")
     assert(SnapshotStore.verify(spark, root).isEmpty)
   }
@@ -182,7 +182,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val v2 = SnapshotStore.write(d2, root, bucket).snapshot
     val dirtyBucket = spark.range(1)
       .select(pmod(xxhash64(lit(123L)), lit(8)).cast("int").as("b"))
-      .head.getInt(0)
+      .head().getInt(0)
     assert(SnapshotStore.changedBuckets(root, Some(v1), v2) ===
       Seq(dirtyBucket))
 
@@ -622,7 +622,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(back.count() === 400)
     assert(back.filter(col("lang").isNotNull).count() === 2)
     assert(back.filter(col("doc_id") === 3L)
-      .head.getString(2) === "en")
+      .head().getString(2) === "en")
     // time travel still serves v1 under ITS schema
     assert(SnapshotStore.read(spark, root, Some(1)).columns.toSeq ===
       Seq("doc_id", "text"))
@@ -860,7 +860,7 @@ class SnapshotStoreSpec extends SparkSpec {
     // readChanges sees the appended buckets whole (old + new files)
     val changed = SnapshotStore.changedBuckets(root, Some(v1), v2).toSet
     val bucketOf = (id: Long) => spark.range(1)
-      .select(pmod(xxhash64(lit(id)), lit(8)).cast("int")).head.getInt(0)
+      .select(pmod(xxhash64(lit(id)), lit(8)).cast("int")).head().getInt(0)
     val all = docRange(0, 400).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(rowsOf(SnapshotStore.readChanges(spark, root, Some(v1), v2)) ===
@@ -893,7 +893,7 @@ class SnapshotStoreSpec extends SparkSpec {
       mo.filter(_.bucket != bucketOf(k)).map(_.paths))
     val back = SnapshotStore.read(spark, root)
     assert(back.count() === 399)
-    assert(back.filter(col("doc_id") === k).head.getString(1) === "merged")
+    assert(back.filter(col("doc_id") === k).head().getString(1) === "merged")
     assert(SnapshotStore.verify(spark, root).isEmpty)
   }
 
